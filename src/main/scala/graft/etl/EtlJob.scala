@@ -13,7 +13,10 @@ import graft.transform._
   * pulls every record through an async iterator into a driver-side list;
   * here the whole job is one lazy Spark plan — extraction, transforms and
   * sink writes pipeline through executors, and the only driver-side
-  * values are the counters.
+  * values are the counters. The routes load concurrently
+  * ([[Sinks.routeAndLoad]]), so each must target its own path; the
+  * processed count is the `archive` route's count observed during its
+  * write (the largest route count without one), never a separate scan.
   */
 final case class EtlResult(
     recordsProcessed: Long,

@@ -173,7 +173,10 @@ object Utils {
     * to its task count, so nesting can't starve a shared pool; the
     * first failing task rethrows its ORIGINAL exception on the caller's
     * thread. Only pass tasks with no ordering contract between them
-    * (never two writes a Failpoint or crash-recovery contract orders). */
+    * (never two writes a Failpoint or crash-recovery contract orders).
+    * The pool's threads start on the caller's thread, so each inherits
+    * the caller's Spark local properties (scheduler pool, job
+    * description, job group). */
   def inParallel[A](tasks: (() => A)*): Seq[A] = {
     if (tasks.sizeIs <= 1) return tasks.map(t => t())
     val pool = java.util.concurrent.Executors.newFixedThreadPool(tasks.size)
@@ -189,6 +192,18 @@ object Utils {
       }
     finally { pool.shutdownNow(); () }
   }
+
+  /** Run `f` with the Spark jobs it launches labelled `desc` (the
+    * `spark.job.description` that `graft.Profile` prints); the caller's
+    * previous label is restored afterwards. */
+  def withJobDescription[A](sc: org.apache.spark.SparkContext,
+      desc: String)(f: => A): A = {
+    val prev = sc.getLocalProperty(JobDescription)
+    sc.setJobDescription(desc)
+    try f finally sc.setLocalProperty(JobDescription, prev)
+  }
+
+  private val JobDescription = "spark.job.description"
 
   /** `ConfigUtils.merge_configs` (common_utils.py:354-365): deep merge,
     * later maps win, nested maps merge recursively. */

@@ -556,49 +556,55 @@ object Sinks {
   }
 
   /** K7 — multi-target load: same data to N sinks with one upstream
-    * computation (`base_loaders.py:326-373` `asyncio.gather`). The
-    * DataFrame is persisted once; targets consume the cached partitions;
-    * per-target failures isolate into the result map. */
+    * computation (`base_loaders.py:326-373` `asyncio.gather`): every
+    * target is a [[routeAndLoad]] route that takes all rows. */
   def multiTarget(df: DataFrame, targets: Seq[(String, DataFrame => Long)],
-      stats: Option[LoadStats] = None): Map[String, LoadResult] = {
-    val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      cached.count() // materialize once
-      targets.map { case (name, sink) =>
-        val r = scala.util.Try(sink(cached)) match {
-          case scala.util.Success(n) => LoadResult(name, "success", n)
-          case scala.util.Failure(e) =>
-            LoadResult(name, "error", 0L, Some(e.getMessage))
-        }
-        stats.foreach(_.record(r))
-        name -> r
-      }.toMap
-    } finally cached.unpersist()
-  }
+      stats: Option[LoadStats] = None): Map[String, LoadResult] =
+    routeAndLoad(df, targets.map { case (n, f) => Route(n, lit(true), f) },
+      stats)
 
   /** K8 — content-based routing (`base_loaders.py:395-436`; routing
     * rules `multi_source_ingestion_dag.py:267-305`): route by source
     * name — transaction/order→warehouse, event/log→documents,
-    * user/profile→both, everything→archive. One persist, N filtered
-    * writes — the source is scanned once, not once per route. */
+    * user/profile→both, everything→archive. */
   final case class Route(name: String, predicate: Column,
     sink: DataFrame => Long)
 
+  /** Load each route's filtered rows through its sink; results keyed by
+    * route name, so names must be distinct.
+    *
+    * The writes run concurrently, one thread per route started inside
+    * this call: each route must target its own path. The threads
+    * inherit the caller's Spark local properties (scheduler pool, job
+    * group), and each write's jobs are labelled `route:<name>`. The
+    * frame is persisted and whichever write reaches a partition first
+    * fills the cache, so the source is scanned once, not once per
+    * route; a single route writes directly on the caller's thread. A
+    * failing route is isolated as an `error` result; `stats` records
+    * the results in route order. */
   def routeAndLoad(df: DataFrame, routes: Seq[Route],
       stats: Option[LoadStats] = None): Map[String, LoadResult] = {
-    val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      cached.count()
-      routes.map { r =>
-        val res = scala.util.Try(r.sink(cached.where(r.predicate))) match {
-          case scala.util.Success(n) => LoadResult(r.name, "success", n)
-          case scala.util.Failure(e) =>
-            LoadResult(r.name, "error", 0L, Some(e.getMessage))
-        }
-        stats.foreach(_.record(res))
-        r.name -> res
-      }.toMap
-    } finally cached.unpersist()
+    val names = routes.map(_.name)
+    require(names.distinct.sizeIs == names.size,
+      s"duplicate route names in: ${names.mkString(", ")}")
+    val sc = df.sparkSession.sparkContext
+    def write(src: DataFrame, r: Route): LoadResult = scala.util.Try(
+        graft.etl.Utils.withJobDescription(sc, s"route:${r.name}")(
+          r.sink(src.where(r.predicate)))) match {
+      case scala.util.Success(n) => LoadResult(r.name, "success", n)
+      case scala.util.Failure(e) =>
+        LoadResult(r.name, "error", 0L, Some(e.getMessage))
+    }
+    val results =
+      if (routes.sizeIs <= 1) routes.map(write(df, _))
+      else {
+        val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
+        try graft.etl.Utils.inParallel(
+          routes.map(r => () => write(cached, r)): _*)
+        finally cached.unpersist()
+      }
+    results.foreach(r => stats.foreach(_.record(r)))
+    results.map(r => r.target -> r).toMap
   }
 
   /** The DAG's routing patterns over the `_source` metadata column

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import scala.util.{Failure, Success, Try}
+
 import graft.functions.scalars._
 import graft.transform.FieldRule
 
@@ -27,10 +29,52 @@ trait Validator {
   def validate(df: DataFrame): ValidationReport
 }
 
+/** A validator whose report is a function of one row of aggregates over
+  * the frame. [[ValidationPipeline]] evaluates every such validator's
+  * aggregates in ONE pass; standalone, `validate` is one pass over this
+  * validator's own plan. */
+trait AggregateValidator extends Validator {
+  def plan(df: DataFrame): AggregateValidator.Plan
+
+  def validate(df: DataFrame): ValidationReport = {
+    val p = plan(df)
+    p.report(AggregateValidator.evaluate(df, Seq(p)).head)
+  }
+}
+
+object AggregateValidator {
+
+  /** `aggs` to evaluate over the frame, and the report built from their
+    * values (in `aggs` order; NULL for an aggregate over no rows). */
+  final case class Plan(aggs: Seq[Column],
+      report: IndexedSeq[Any] => ValidationReport)
+
+  /** Every plan's aggregates in a single `df.agg(...).head()`, sliced
+    * back per plan. Plans without aggregates launch no job. */
+  def evaluate(df: DataFrame, plans: Seq[Plan]): Seq[IndexedSeq[Any]] = {
+    val aggs = plans.flatMap(_.aggs)
+    val row: IndexedSeq[Any] =
+      if (aggs.isEmpty) IndexedSeq.empty
+      else df.agg(aggs.head, aggs.tail: _*).head().toSeq.toIndexedSeq
+    val ends = plans.scanLeft(0)(_ + _.aggs.size)
+    ends.zip(ends.tail).map { case (a, b) => row.slice(a, b) }
+  }
+
+  /** A count aggregate's value; a sum over no rows is NULL, i.e. 0. */
+  private[validate] def long(v: Any): Long =
+    if (v == null) 0L else v.asInstanceOf[Long]
+
+  /** Violation count of predicate `p`. */
+  private[validate] def violations(p: Column): Column =
+    sum(when(p, 1L).otherwise(0L))
+}
+
 /** V2 schema validation (`data_validators.py:56-133`): required fields,
   * type checks (string/integer/float/boolean/datetime/email), numeric
-  * ranges, string length ranges. One aggregate job for the report. */
-case class SchemaValidator(schema: Map[String, FieldRule]) extends Validator {
+  * ranges, string length ranges. One count plus one violation count per
+  * rule. */
+case class SchemaValidator(schema: Map[String, FieldRule])
+    extends AggregateValidator {
   val name = "Schema Validator"
 
   /** One-row DataFrame of per-rule violation counts — the distributed
@@ -39,8 +83,7 @@ case class SchemaValidator(schema: Map[String, FieldRule]) extends Validator {
     val preds = rulePreds(df)
     val aggs = count(lit(1)).as("total_records") +:
       preds.map { case (msg, p) =>
-        sum(when(p, 1L).otherwise(0L)).as(keyOf(msg))
-      }
+        AggregateValidator.violations(p).as(keyOf(msg)) }
     df.agg(aggs.head, aggs.tail: _*)
   }
 
@@ -106,32 +149,30 @@ case class SchemaValidator(schema: Map[String, FieldRule]) extends Validator {
     }
   }
 
-  def validate(df: DataFrame): ValidationReport = {
+  def plan(df: DataFrame): AggregateValidator.Plan = {
+    import AggregateValidator._
     val missing = schema.keys.filterNot(df.columns.contains).toSeq.sorted
       .map(f => s"Missing required field '$f'")
-      .filter(_ => true) // all declared-but-absent fields are reported
     val preds = rulePreds(df)
-    val aggs = count(lit(1)).as("__total") +:
-      preds.map { case (msg, p) => sum(when(p, 1L).otherwise(0L)).as(msg) }
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    val total = row.getLong(0)
-    val errors = missing ++ preds.zipWithIndex.collect {
-      case ((msg, _), i) if !row.isNullAt(i + 1) && row.getLong(i + 1) > 0 =>
-        s"$msg: ${row.getLong(i + 1)} records"
-    }
-    ValidationReport(errors.isEmpty, errors, Nil,
-      Map("total_records" -> total, "validation_errors" -> errors.size))
+    Plan(count(lit(1)) +: preds.map { case (_, p) => violations(p) }, v => {
+      val errors = missing ++ preds.map(_._1).zip(v.tail.map(long)).collect {
+        case (msg, n) if n > 0 => s"$msg: $n records"
+      }
+      ValidationReport(errors.isEmpty, errors, Nil,
+        Map("total_records" -> long(v.head), "validation_errors" -> errors.size))
+    })
   }
 }
 
 /** V3 data-quality validation (`data_validators.py:135-193`): min-records
   * error; null-percentage, full-row duplicate-percentage and
-  * zero-variance warnings; metrics incl. dtype map. Two jobs: one wide
-  * aggregate + one distinct count. */
+  * zero-variance warnings; metrics incl. dtype map. One wide aggregate,
+  * whose full-row distinct count adds a shuffle; an empty frame is
+  * recognised from its row count. */
 case class QualityValidator(
     maxNullPercentage: Double = 0.1,
     maxDuplicatePercentage: Double = 0.05,
-    minRecords: Long = 1L) extends Validator {
+    minRecords: Long = 1L) extends AggregateValidator {
   val name = "Data Quality Validator"
 
   /** One-row DataFrame of the quality metrics (total, distinct, dup
@@ -140,7 +181,7 @@ case class QualityValidator(
   def metricsDF(df: DataFrame): DataFrame = {
     val cols = df.schema.fields
     val nullCounts = cols.map(f =>
-      sum(when(col(f.name).isNull, 1L).otherwise(0L)).as(s"nulls_${f.name}"))
+      AggregateValidator.violations(col(f.name).isNull).as(s"nulls_${f.name}"))
     val numeric = cols.filter(f => f.dataType.isInstanceOf[NumericType])
     val varFlags = numeric.map(f =>
       (stddev_samp(col(f.name)) === 0.0).as(s"novar_${f.name}"))
@@ -152,25 +193,28 @@ case class QualityValidator(
         col("total_records") - col("distinct_records"))
   }
 
-  def validate(df: DataFrame): ValidationReport = {
+  def plan(df: DataFrame): AggregateValidator.Plan = {
+    import AggregateValidator._
     val cols = df.schema.fields
-    if (df.isEmpty)
-      return ValidationReport(isValid = false,
-        Seq("No data provided for validation"), Nil, Map.empty)
-
-    val nullCounts = cols.map(f =>
-      sum(when(col(f.name).isNull, 1L).otherwise(0L)).as(s"null_${f.name}"))
+    val nullCounts = cols.map(f => violations(col(f.name).isNull))
     val numeric = cols.filter(f => f.dataType.isInstanceOf[NumericType])
-    val stddevs = numeric.map(f => stddev(col(f.name)).as(s"std_${f.name}"))
+    val stddevs = numeric.map(f => stddev(col(f.name)))
     // full-row duplicate count = n - n_distinct over all columns;
     // struct() is never NULL so count_distinct sees every row.
-    val aggs = Seq(count(lit(1)).as("__n"),
-      count_distinct(struct(cols.map(f => col(f.name)).toIndexedSeq: _*))
-        .as("__ndist")) ++ nullCounts ++ stddevs
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    val n = row.getLong(0)
-    val nDist = row.getLong(1)
-    val dupCount = n - nDist
+    val aggs = Seq(count(lit(1)),
+      count_distinct(struct(cols.map(f => col(f.name)).toIndexedSeq: _*))) ++
+      nullCounts ++ stddevs
+    Plan(aggs, v => report(cols, numeric, v))
+  }
+
+  private def report(cols: Array[StructField], numeric: Array[StructField],
+      v: IndexedSeq[Any]): ValidationReport = {
+    import AggregateValidator.long
+    val n = long(v(0))
+    if (n == 0)
+      return ValidationReport(isValid = false,
+        Seq("No data provided for validation"), Nil, Map.empty)
+    val dupCount = n - long(v(1))
     val dupPct = dupCount.toDouble / n
 
     val errors = scala.collection.mutable.Buffer.empty[String]
@@ -178,7 +222,7 @@ case class QualityValidator(
     if (n < minRecords)
       errors += s"Insufficient data: $n records, minimum required: $minRecords"
     val nullPcts = cols.zipWithIndex.map { case (f, i) =>
-      f.name -> row.getLong(2 + i).toDouble / n
+      f.name -> long(v(2 + i)).toDouble / n
     }.toMap
     nullPcts.toSeq.sortBy(_._1).foreach { case (cn, pct) =>
       if (pct > maxNullPercentage)
@@ -187,8 +231,7 @@ case class QualityValidator(
     if (dupPct > maxDuplicatePercentage)
       warnings += f"Found ${dupPct * 100}%.2f%% duplicate records (threshold: ${maxDuplicatePercentage * 100}%.2f%%)"
     numeric.zipWithIndex.foreach { case (f, i) =>
-      val idx = 2 + cols.length + i
-      if (!row.isNullAt(idx) && row.getDouble(idx) == 0.0)
+      if (v(2 + cols.length + i) == 0.0)
         warnings += s"Column '${f.name}' has no variance (all values identical)"
     }
     ValidationReport(errors.isEmpty, errors.toSeq, warnings.toSeq, Map(
@@ -209,7 +252,10 @@ case class RelationshipRule(ruleName: String, field1: String, field2: String,
 case class CustomRule(ruleName: String, violations: DataFrame => Long)
     extends BusinessRule
 
-case class BusinessRuleValidator(rules: Seq[BusinessRule]) extends Validator {
+/** One violation count per Column-expressible rule; each [[CustomRule]]
+  * runs its own function when the report is built. */
+case class BusinessRuleValidator(rules: Seq[BusinessRule])
+    extends AggregateValidator {
   val name = "Business Rule Validator"
 
   /** Violation predicate for one rule, if expressible as a Column. */
@@ -237,51 +283,64 @@ case class BusinessRuleValidator(rules: Seq[BusinessRule]) extends Validator {
   def violationCountsDF(df: DataFrame): DataFrame = {
     val columnRules = rules.flatMap(r => predicate(df, r).map(r -> _))
     val aggs = count(lit(1)).as("total_records") +: columnRules.map {
-      case (r, p) => sum(when(p, 1L).otherwise(0L))
+      case (r, p) => AggregateValidator.violations(p)
         .as("viol_" + r.ruleName.replaceAll("[^A-Za-z0-9]+", "_"))
     }
     df.agg(aggs.head, aggs.tail: _*)
   }
 
-  def validate(df: DataFrame): ValidationReport = {
+  def plan(df: DataFrame): AggregateValidator.Plan = {
+    import AggregateValidator._
     val columnRules = rules.flatMap(r => predicate(df, r).map(r -> _))
-    val errors = scala.collection.mutable.Buffer.empty[String]
-    if (columnRules.nonEmpty) {
-      val aggs = columnRules.map { case (r, p) =>
-        sum(when(p, 1L).otherwise(0L)).as(r.ruleName)
-      }
-      val row = df.agg(aggs.head, aggs.tail: _*).head()
-      columnRules.zipWithIndex.foreach { case ((r, _), i) =>
-        val v = if (row.isNullAt(i)) 0L else row.getLong(i)
-        if (v > 0) errors += s"Rule '${r.ruleName}': $v violations found"
-      }
-    }
-    rules.foreach {
-      case CustomRule(rn, fn) =>
-        scala.util.Try(fn(df)) match {
-          case scala.util.Success(v) if v > 0 =>
-            errors += s"Rule '$rn': $v custom rule violations"
-          case scala.util.Failure(e) =>
-            errors += s"Rule '$rn': Custom validation failed - ${e.getMessage}"
-          case _ =>
+    Plan(columnRules.map { case (_, p) => violations(p) }, v => {
+      val errors = columnRules.map(_._1).zip(v.map(long)).collect {
+        case (r, n) if n > 0 => s"Rule '${r.ruleName}': $n violations found"
+      } ++ rules.collect { case CustomRule(rn, fn) => rn -> Try(fn(df)) }
+        .collect {
+          case (rn, Success(n)) if n > 0 =>
+            s"Rule '$rn': $n custom rule violations"
+          case (rn, Failure(e)) =>
+            s"Rule '$rn': Custom validation failed - ${e.getMessage}"
         }
-      case _ =>
-    }
-    ValidationReport(errors.isEmpty, errors.toSeq, Nil, Map.empty)
+      ValidationReport(errors.isEmpty, errors, Nil, Map.empty)
+    })
   }
 }
 
 /** V5 validation pipeline (`data_validators.py:270-308`): run all
-  * validators with per-validator failure isolation; roll up a summary. */
+  * validators with per-validator failure isolation; roll up a summary.
+  *
+  * The [[AggregateValidator]]s share ONE aggregate pass over the frame,
+  * labelled `validate:pipeline`; any other validator runs alone. A
+  * validator whose `plan` or report throws reports its own failure. If
+  * the shared pass itself throws, each aggregate validator reruns alone,
+  * so the failure stays with the validator that caused it. */
 case class ValidationPipeline(validators: Seq[Validator]) {
-  def validate(df: DataFrame): Map[String, ValidationReport] =
-    validators.map { v =>
-      v.name -> (scala.util.Try(v.validate(df)) match {
-        case scala.util.Success(r) => r
-        case scala.util.Failure(e) => ValidationReport(isValid = false,
-          Seq(s"Validator '${v.name}' failed: ${e.getMessage}"), Nil, Map.empty)
-      })
+  def validate(df: DataFrame): Map[String, ValidationReport] = {
+    val plans = validators.map {
+      case a: AggregateValidator => Some(Try(a.plan(df)))
+      case _ => None
+    }
+    val fused = Try(graft.etl.Utils.withJobDescription(
+        df.sparkSession.sparkContext, "validate:pipeline") {
+      AggregateValidator.evaluate(df,
+        plans.flatten.collect { case Success(p) => p })
+    }).toOption.map(_.iterator)
+    validators.zip(plans).map {
+      case (v, Some(Failure(e))) => v.name -> failed(v, e)
+      case (v, Some(Success(p))) if fused.isDefined =>
+        val values = fused.get.next()
+        v.name -> isolated(v)(p.report(values))
+      case (v, _) => v.name -> isolated(v)(v.validate(df))
     }.toMap
+  }
+
+  private def isolated(v: Validator)(r: => ValidationReport): ValidationReport =
+    Try(r).fold(failed(v, _), identity)
+
+  private def failed(v: Validator, e: Throwable): ValidationReport =
+    ValidationReport(isValid = false,
+      Seq(s"Validator '${v.name}' failed: ${e.getMessage}"), Nil, Map.empty)
 
   def isValid(results: Map[String, ValidationReport]): Boolean =
     results.values.forall(_.isValid)

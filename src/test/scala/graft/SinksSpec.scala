@@ -125,6 +125,76 @@ class SinksSpec extends SparkSpec {
     assert(spark.read.parquet(s"$dir/archive").count() == 5)
   }
 
+  private def routedInput(): org.apache.spark.sql.DataFrame = {
+    val path = s"${tmp()}/in"
+    Seq(("transactions", 1L), ("orders", 2L), ("events", 3L),
+      ("user_profiles", 4L), ("logs", 5L)).toDF("_source", "id")
+      .coalesce(1).write.parquet(path)
+    spark.read.parquet(path)
+  }
+
+  test("K8 routing scans its input once and labels every route write") {
+    import org.apache.spark.graftx.JobProbe
+    val dir = tmp()
+    val routes = Sinks.standardRoutes(dir)
+    // counts every source row the routes' writes compute
+    val scanned = spark.sparkContext.longAccumulator("routed_rows")
+    val tick = udf { (id: Long) => scanned.add(1); id }.asNondeterministic()
+    val input = routedInput().withColumn("id", tick($"id"))
+    val (results, probe) = JobProbe(spark.sparkContext)(
+      Sinks.routeAndLoad(input, routes))
+    assert(results.values.forall(_.status == "success"))
+    assert(results("archive").count == 5 && results("financial_data").count == 2)
+    assert(scanned.value == 5, s"source computed ${scanned.value} rows for 5")
+    assert(probe.descriptions.toSet == routes.map(r => s"route:${r.name}").toSet,
+      probe.descriptions)
+    assert(spark.sparkContext.getLocalProperty("spark.job.description") == null)
+  }
+
+  test("K8 routing: a throwing route is an error, the other routes land") {
+    val dir = tmp()
+    val broken = Sinks.Route("broken", lit(true),
+      _ => throw new RuntimeException("target down"))
+    val stats = new Sinks.LoadStats
+    val routes = Sinks.standardRoutes(dir) :+ broken
+    val results = Sinks.routeAndLoad(routedInput(), routes, Some(stats))
+    assert(results("broken") ==
+      Sinks.LoadResult("broken", "error", 0L, Some("target down")))
+    assert(results.size == 6)
+    assert(results.removed("broken").values.forall(_.status == "success"))
+    assert(stats.history.map(_.target) == routes.map(_.name)) // route order
+    assert(spark.read.parquet(s"$dir/archive").count() == 5)
+    assert(spark.read.parquet(s"$dir/processed_events").count() == 2)
+  }
+
+  test("K8 routing: every route write runs in the caller's scheduler pool") {
+    import org.apache.spark.graftx.JobProbe
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.scheduler.pool")
+    sc.setLocalProperty("spark.scheduler.pool", "etl_routes")
+    val probe =
+      try JobProbe(sc)(Sinks.routeAndLoad(routedInput(),
+        Sinks.standardRoutes(tmp())))._2
+      finally sc.setLocalProperty("spark.scheduler.pool", prev)
+    val routeJobs = probe.jobs.filter(p =>
+      Option(p.getProperty("spark.job.description")).exists(_.startsWith("route:")))
+    assert(routeJobs.size >= Sinks.standardRoutes("x").size)
+    assert(routeJobs.forall(_.getProperty("spark.scheduler.pool") == "etl_routes"))
+  }
+
+  test("routing and multi-target reject duplicate route names before writing") {
+    val dir = tmp()
+    val df = Seq(("events", 1L)).toDF("_source", "id")
+    val twice = Seq(
+      Sinks.Route("a", lit(true), d => Sinks.load(d, s"$dir/a1")),
+      Sinks.Route("a", lit(true), d => Sinks.load(d, s"$dir/a2")))
+    intercept[IllegalArgumentException](Sinks.routeAndLoad(df, twice))
+    intercept[IllegalArgumentException](Sinks.multiTarget(df,
+      twice.map(r => r.name -> r.sink)))
+    assert(!Files.exists(java.nio.file.Paths.get(s"$dir/a1")))
+    assert(!Files.exists(java.nio.file.Paths.get(s"$dir/a2")))
+  }
+
   test("K10 load statistics registry (base_loaders.py:438-451)") {
     val stats = new Sinks.LoadStats
     stats.record(Sinks.LoadResult("a", "success", 10))

@@ -85,6 +85,114 @@ class ValidatorsSpec extends SparkSpec {
     assert(s("overall_valid") == false)
   }
 
+  // an hourly source batch as the ETL cycle sees it: a null required
+  // field, padded and malformed emails, out-of-range amounts, a dup row
+  private def hourly(): org.apache.spark.sql.DataFrame = {
+    val path = java.nio.file.Files.createTempDirectory("graft_val") + "/in"
+    Seq(
+      (1L, Some("a@b.com"), Some(10.0)),
+      (2L, None, Some(20.0)),
+      (3L, Some("  c@d.com  "), Some(30.0)),
+      (4L, Some("not-an-email"), Some(-5.0)),
+      (5L, Some("e@f.com"), Some(2.0e6)),
+      (6L, Some("g@h.com"), None),
+      (6L, Some("g@h.com"), None),
+      (7L, Some(""), Some(70.0))
+    ).toDF("transaction_id", "customer_email", "amount")
+      .withColumn("_source", org.apache.spark.sql.functions.lit("transactions"))
+      .coalesce(1).write.parquet(path)
+    spark.read.parquet(path)
+  }
+
+  private val hourlyValidators = Seq(
+    SchemaValidator(Map(
+      "customer_email" -> FieldRule(required = true, typ = Some("email")),
+      "amount" -> FieldRule(min = Some(0.0), max = Some(1000000.0)))),
+    QualityValidator(),
+    BusinessRuleValidator(Seq(
+      RangeRule("amount_range", "amount", Some(0.0), Some(1000000.0)),
+      RelationshipRule("id_gt_amount", "transaction_id", "amount",
+        "greater_than"))))
+
+  private def standalone(vs: Seq[Validator],
+      df: org.apache.spark.sql.DataFrame): Map[String, ValidationReport] =
+    vs.map(v => v.name -> v.validate(df)).toMap
+
+  test("fused pipeline: same reports as each validator alone on an hourly batch") {
+    val df = hourly()
+    val fused = ValidationPipeline(hourlyValidators).validate(df)
+    assert(fused === standalone(hourlyValidators, df))
+    assert(fused("Schema Validator").errors.exists(_.contains("not a valid email")))
+    assert(fused("Schema Validator").errors.exists(_.contains("above maximum")))
+    assert(fused("Data Quality Validator").metrics("duplicate_count") === 1L)
+    assert(fused("Business Rule Validator").errors.exists(
+      _.startsWith("Rule 'amount_range': 2 violations")))
+  }
+
+  test("fused pipeline: same reports as each validator alone on an empty frame") {
+    val df = hourly().filter(org.apache.spark.sql.functions.lit(false))
+    val fused = ValidationPipeline(hourlyValidators).validate(df)
+    assert(fused === standalone(hourlyValidators, df))
+    assert(fused("Data Quality Validator").errors ===
+      Seq("No data provided for validation"))
+    assert(fused("Schema Validator").metrics("total_records") === 0L)
+  }
+
+  test("fused pipeline: custom rules, throwing plans and a throwing pass stay isolated") {
+    import org.apache.spark.sql.functions._
+    val df = hourly()
+    val rules = BusinessRuleValidator(Seq(
+      RangeRule("amount_range", "amount", Some(0.0), Some(1000000.0)),
+      CustomRule("negatives", d => d.filter(col("amount") < 0).count()),
+      CustomRule("explodes", _ => throw new RuntimeException("nope"))))
+    val badPlan = new AggregateValidator {
+      val name = "Bad Plan"
+      def plan(d: org.apache.spark.sql.DataFrame) =
+        throw new IllegalStateException("no plan")
+    }
+    val badPass = new AggregateValidator {
+      val name = "Bad Pass"
+      def plan(d: org.apache.spark.sql.DataFrame) = AggregateValidator.Plan(
+        Seq(max(raise_error(lit("pass blew up")))),
+        _ => ValidationReport(isValid = true, Nil, Nil, Map.empty))
+    }
+    val exploder = new Validator {
+      val name = "Exploder"
+      def validate(d: org.apache.spark.sql.DataFrame) =
+        throw new RuntimeException("dead")
+    }
+    val healthy = hourlyValidators.take(2) :+ rules
+    val out = ValidationPipeline(healthy ++ Seq(badPlan, badPass, exploder))
+      .validate(df)
+    assert(out.size === 6)
+    assert(out.filter { case (n, _) => healthy.exists(_.name == n) } ===
+      standalone(healthy, df))
+    assert(out("Business Rule Validator").errors.exists(
+      _.startsWith("Rule 'negatives': 1 custom rule violations")))
+    assert(out("Business Rule Validator").errors.exists(
+      _.contains("Custom validation failed - nope")))
+    assert(out("Bad Plan").errors === Seq("Validator 'Bad Plan' failed: no plan"))
+    assert(out("Bad Pass").errors.head.startsWith("Validator 'Bad Pass' failed"))
+    assert(out("Bad Pass").errors.head.contains("pass blew up"))
+    assert(out("Exploder").errors === Seq("Validator 'Exploder' failed: dead"))
+  }
+
+  test("fused pipeline: one labelled scan, no more jobs than the quality validator alone") {
+    import org.apache.spark.graftx.JobProbe
+    val df = hourly()
+    val sc = spark.sparkContext
+    val (_, quality) = JobProbe(sc)(QualityValidator().validate(df))
+    val (_, fused) = JobProbe(sc)(
+      ValidationPipeline(hourlyValidators).validate(df))
+    assert(fused.jobs.nonEmpty)
+    assert(fused.jobs.size <= quality.jobs.size,
+      s"pipeline ran ${fused.jobs.size} jobs, quality alone ${quality.jobs.size}")
+    assert(fused.inputRows === 8L) // every source row read exactly once
+    assert(fused.descriptions.forall(_ == "validate:pipeline"),
+      fused.descriptions)
+    assert(sc.getLocalProperty("spark.job.description") == null)
+  }
+
   test("chiSquare matches the hand-computed 2x2 table, keeps null levels") {
     import spark.implicits._
     import graft.validate.Dependence
