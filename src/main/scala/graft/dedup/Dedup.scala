@@ -329,11 +329,10 @@ object Dedup {
     * contract: spec-pinned that incremental results are IDENTICAL
     * before/after, judged end-to-end through `dedup_index_compact`.
     *
-    * The swap is stage-then-rename via the shared lifecycle kernel
-    * (`graft.index.IndexLifecycle`, same machinery as the IVF side's
-    * vacuum): readers racing the rename see either the old or the new
-    * complete directory; a crash between the delete and the rename
-    * heals via the staged directory's `_SUCCESS` marker. The pass is
+    * `buckets` and `tokens` each publish through the lake's one swap
+    * protocol (`graft.sinks.Sinks.swap`, as the IVF side's vacuum):
+    * a probe never sees a partial directory, and a crash in any swap
+    * window is healed by the next compaction. The pass is
     * SNAPSHOT-SCOPED: the tombstone FILE SET is listed once at entry,
     * that one set feeds BOTH sub-swaps (a mid-run takedown can never be
     * applied to buckets but not tokens), and only that set is deleted
@@ -350,16 +349,14 @@ object Dedup {
     val tombSnap = snapshotFiles(s"$path/tombstones")
     val tomb = readSnapshot(spark, s"$path/tombstones", tombSnap)
       .map(_.distinct())
-    def swapIn(sub: String, clustered: DataFrame => DataFrame): Unit = {
-      val live = java.nio.file.Paths.get(s"$path/$sub")
-      val staged = java.nio.file.Paths.get(s"$path/${sub}_compact")
-      swapStaged(live, staged) { dir =>
-        val src = spark.read.parquet(live.toString).distinct()
+    def swapIn(sub: String, clustered: DataFrame => DataFrame): Boolean =
+      graft.sinks.Sinks.swap(s"$path/$sub") { dir =>
+        val src = spark.read.parquet(s"$path/$sub").distinct()
         val kept = tomb.fold(src)(t =>
           src.join(t, Seq("id"), "left_anti"))
         clustered(kept).write.mode("overwrite").parquet(dir)
+        true
       }
-    }
     // the two sub-swaps stage into disjoint directories from the SAME
     // tombstone snapshot (the mid-run-takedown guarantee is the
     // snapshot, not the order) and no spec or Failpoint orders them —

@@ -2,6 +2,8 @@ package graft.etl
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,23 +27,9 @@ object Incremental {
   /** Fold an additive partial aggregate into the rollup at `path`.
     * Every non-key column must be an additive partial (count/sum). */
   def mergeAdditive(spark: SparkSession, path: String, partial: DataFrame,
-      keys: Seq[String]): Unit = {
-    graft.sinks.Sinks.healSwap(path)
-    if (!Files.exists(Paths.get(path))) {
-      partial.write.mode(SaveMode.ErrorIfExists).parquet(path)
-      return
-    }
-    val target = spark.read.parquet(path)
-    val valueCols = partial.columns.filterNot(keys.contains)
-    require(target.columns.sorted.sameElements(partial.columns.sorted),
-      s"rollup schema drift: table ${target.columns.mkString(",")} vs " +
-        s"partial ${partial.columns.mkString(",")}")
-    val combined = target.unionByName(partial)
-      .groupBy(keys.map(col): _*)
-      .agg(sum(col(valueCols.head)).as(valueCols.head),
-        valueCols.tail.map(c => sum(col(c)).as(c)): _*)
-    graft.sinks.Sinks.writeSwap(spark, combined, path)
-  }
+      keys: Seq[String]): Unit =
+    mergeMergeable(spark, path, partial, keys,
+      partial.columns.filterNot(keys.contains).map(_ -> "sum").toSeq)
 
   /** [[mergeAdditive]] generalized to the full MERGEABLE-aggregate
     * algebra: each value column carries its own combine function —
@@ -54,41 +42,49 @@ object Incremental {
     * (`q_hll_union`) — the non-mergeable aggregates (median, exact
     * distinct) are exactly the ones such systems decline to maintain.
     * At 100 TB the increment is batch-sized and the rollup is
-    * aggregate-cardinality; history is never rescanned. */
+    * aggregate-cardinality; history is never rescanned. The first fold
+    * creates the rollup through the same swap as every later one, so
+    * a crash inside it never leaves a partial rollup behind. */
   def mergeMergeable(spark: SparkSession, path: String, partial: DataFrame,
       keys: Seq[String], merges: Seq[(String, String)]): Unit = {
+    graft.sinks.Sinks.healSwap(path)
+    graft.sinks.Sinks.writeSwap(folded(spark, path, partial, keys, merges),
+      path)
+  }
+
+  /** The rollup at `path` with `partial` folded in (just `partial` when
+    * there is no rollup yet). The caller has healed `path`. */
+  private def folded(spark: SparkSession, path: String, partial: DataFrame,
+      keys: Seq[String], merges: Seq[(String, String)]): DataFrame = {
     val mergeFn: Map[String, org.apache.spark.sql.Column =>
         org.apache.spark.sql.Column] =
       Map("sum" -> sum _, "min" -> min _, "max" -> max _)
     val bad = merges.collect { case (c, f) if !mergeFn.contains(f) => s"$c:$f" }
     require(bad.isEmpty, s"unsupported merge fns: ${bad.mkString(",")}")
-    graft.sinks.Sinks.healSwap(path)
-    if (!Files.exists(Paths.get(path))) {
-      partial.write.mode(SaveMode.ErrorIfExists).parquet(path)
-      return
-    }
+    if (!Files.exists(Paths.get(path))) return partial
     val target = spark.read.parquet(path)
     require(target.columns.sorted.sameElements(partial.columns.sorted),
       s"rollup schema drift: table ${target.columns.mkString(",")} vs " +
         s"partial ${partial.columns.mkString(",")}")
     val aggs = merges.map { case (c, f) => mergeFn(f)(col(c)).as(c) }
-    val combined = target.unionByName(partial)
+    target.unionByName(partial)
       .groupBy(keys.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
-    graft.sinks.Sinks.writeSwap(spark, combined, path)
   }
 
   /** EXACTLY-ONCE form of [[mergeMergeable]] for at-least-once callers
     * (Structured Streaming's foreachBatch): additive folds are NOT
     * idempotent — a crash between the fold and the checkpoint commit
     * would double-count the batch on replay (found by the chaos
-    * suite). The applied-batch marker is an empty `_applied_batch_<id>` (no `=` in the name — Spark's hidden-file filter keeps underscore names containing `=`)
-    * file INSIDE the rollup directory, staged alongside the folded
-    * data and published by the SAME atomic swap — so marker and fold
-    * cannot diverge across any crash window: died before the swap →
-    * live table untouched, no marker, replay refolds from unchanged
-    * state; died inside the swap → heal finishes it with the marker
-    * already in place, replay skips. (A side ledger à la
+    * suite). The applied-batch marker is an empty `_applied_batch_<id>`
+    * file (no `=` in the name — Spark's hidden-file filter keeps
+    * underscore names containing `=`) INSIDE the rollup directory,
+    * written by the swap's staging step beside the folded data and
+    * published by the SAME atomic swap — so marker and fold cannot
+    * diverge across any crash window: died before the swap → live
+    * table untouched, no marker, replay refolds from unchanged state;
+    * died inside the swap → heal finishes it with the marker already
+    * in place, replay skips. (A side ledger à la
     * [[graft.sinks.Sinks.exactlyOnce]] cannot give this: its marker
     * commits in a separate step from the effect, which is exactly the
     * window that bites a non-idempotent fold.) Markers are one empty
@@ -102,43 +98,18 @@ object Incremental {
     val markerName = f"_applied_batch_$batchId%d"
     val live = Paths.get(path)
     if (Files.exists(live.resolve(markerName))) return false
-    val mergeFn: Map[String, org.apache.spark.sql.Column =>
-        org.apache.spark.sql.Column] =
-      Map("sum" -> sum _, "min" -> min _, "max" -> max _)
-    val bad = merges.collect { case (c, f) if !mergeFn.contains(f) => s"$c:$f" }
-    require(bad.isEmpty, s"unsupported merge fns: ${bad.mkString(",")}")
-    if (!Files.exists(live)) {
-      // first fold: stage + marker, then ONE atomic rename — a plain
-      // write-then-marker would leave a markerless table on a crash
-      // between the two, and the replay would fold the partial into
-      // itself. The `.__init__` suffix is deliberately unknown to
-      // healSwap so a half-staged init can never be auto-published.
-      val staged = Paths.get(path + ".__init__")
-      graft.index.IndexLifecycle.rmTree(staged)
-      partial.write.mode(SaveMode.Overwrite).parquet(staged.toString)
+    val combined = folded(spark, path, partial, keys, merges)
+    graft.sinks.Sinks.swap(path) { tmp =>
+      combined.write.mode(SaveMode.Overwrite).parquet(tmp)
+      // carry earlier batches' markers forward, then add this one
+      val staged = Paths.get(tmp)
+      if (Files.exists(live))
+        scala.util.Using.resource(Files.list(live))(_.iterator().asScala
+          .filter(_.getFileName.toString.startsWith("_applied_batch_"))
+          .foreach(m => Files.createFile(staged.resolve(m.getFileName))))
       Files.createFile(staged.resolve(markerName))
-      Files.move(staged, live)
-      return true
+      true
     }
-    val target = spark.read.parquet(path)
-    require(target.columns.sorted.sameElements(partial.columns.sorted),
-      s"rollup schema drift: table ${target.columns.mkString(",")} vs " +
-        s"partial ${partial.columns.mkString(",")}")
-    val aggs = merges.map { case (c, f) => mergeFn(f)(col(c)).as(c) }
-    val combined = target.unionByName(partial)
-      .groupBy(keys.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-    graft.sinks.Sinks.writeSwapWith(spark, combined, path) { staged =>
-      // carry earlier batches' markers forward, then add this one —
-      // all before any destructive step
-      import scala.jdk.CollectionConverters._
-      Files.list(live).iterator().asScala
-        .filter(_.getFileName.toString.startsWith("_applied_batch_"))
-        .foreach(m => Files.createFile(staged.resolve(m.getFileName)))
-      Files.createFile(staged.resolve(markerName))
-      ()
-    }
-    true
   }
 
   /** Backfill — the repair tool incremental maintenance needs: when a
@@ -160,8 +131,7 @@ object Incremental {
       .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("day"),
         col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("total"))
-    graft.sinks.Sinks.writeSwap(spark, kept.unionByName(recomputed),
-      rollupPath)
+    graft.sinks.Sinks.writeSwap(kept.unionByName(recomputed), rollupPath)
   }
 
   /** One incremental cycle for a daily event rollup: bookmark-filter

@@ -2,6 +2,8 @@ package graft.etl
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -88,11 +90,14 @@ object Utils {
     }
   }
 
-  private def rmTree(f: java.io.File): Unit = {
-    val kids = f.listFiles()
-    if (kids != null) kids.foreach(rmTree)
-    f.delete(): Unit
-  }
+  /** Recursively delete a directory tree, children first (no-op when
+    * absent). The one recursive delete of the engine. */
+  def rmTree(p: java.nio.file.Path): Unit =
+    if (Files.exists(p)) {
+      val all = scala.util.Using.resource(Files.walk(p))(
+        _.iterator().asScala.toList)
+      all.reverse.foreach(Files.deleteIfExists)
+    }
 
   /** One process-wide scratch root, removed recursively by a SINGLE
     * shutdown hook (registered on first use).
@@ -134,7 +139,7 @@ object Utils {
 
   private lazy val scratchRoot: java.nio.file.Path = {
     val root = Files.createTempDirectory(scratchBase, "graft-scratch-")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(root.toFile)))
+    Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(root)))
     root
   }
 
@@ -159,7 +164,7 @@ object Utils {
     * within a single invocation, which satisfies that. */
   def scratchDir(prefix: String): String = synchronized {
     val p = scratchRoot.resolve(prefix)
-    if (Files.exists(p)) rmTree(p.toFile)
+    rmTree(p)
     Files.createDirectories(p)
     p.toString
   }
@@ -170,8 +175,10 @@ object Utils {
     * because driver code calls them sequentially). For setup jobs whose
     * serialized sum leaves most cores idle: staged micro-batch writes,
     * bounds probes, index builds. Each call gets a private pool sized
-    * to its task count, so nesting can't starve a shared pool; the
-    * first failing task rethrows its ORIGINAL exception on the caller's
+    * to its task count, so nesting can't starve a shared pool. Every
+    * task runs to its end before the call returns, so a failure never
+    * leaves a sibling still writing; then the first failing task (in
+    * argument order) rethrows its ORIGINAL exception on the caller's
     * thread. Only pass tasks with no ordering contract between them
     * (never two writes a Failpoint or crash-recovery contract orders).
     * The pool's threads start on the caller's thread, so each inherits
@@ -183,12 +190,11 @@ object Utils {
     try
       tasks.map(t => pool.submit(new java.util.concurrent.Callable[A] {
         def call(): A = t()
-      })).map { f =>
-        try f.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            throw e.getCause
-        }
+      })).map(f => scala.util.Try(f.get())).map {
+        case scala.util.Success(a) => a
+        case scala.util.Failure(e: java.util.concurrent.ExecutionException) =>
+          throw e.getCause
+        case scala.util.Failure(e) => throw e
       }
     finally { pool.shutdownNow(); () }
   }

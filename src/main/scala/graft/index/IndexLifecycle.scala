@@ -10,10 +10,10 @@ import org.apache.spark.sql.functions.col
 /** Shared kernel of the two on-disk index lifecycles (MinHash-LSH in
   * `graft.dedup.Dedup`, IVF in `graft.similarity.Ann`). Both families
   * grew the same maintenance machinery independently — tombstone
-  * append, mask-at-probe anti-join, stage-then-rename swap,
-  * `_SUCCESS`-guarded crash heal, snapshot-scoped cleanup — and a
-  * crash-heal or exactly-once fix had to land twice. This module is the
-  * single implementation both delegate to.
+  * append, mask-at-probe anti-join, snapshot-scoped cleanup — and an
+  * exactly-once fix had to land twice. This module is the single
+  * implementation both delegate to. Their rewrites publish through
+  * the lake's one swap protocol, `graft.sinks.Sinks.swap`.
   *
   * Correctness properties the kernel pins (each has a direct spec in
   * `IndexLifecycleSpec`, plus the end-to-end purge≡never-indexed
@@ -33,20 +33,19 @@ import org.apache.spark.sql.functions.col
   *    and one snapshot feeds every sub-swap of a pass so a mid-run
   *    tombstone can never be applied to one half of an index (buckets)
   *    but not the other (tokens).
-  *  - **Crash-healing swap.** [[swapStaged]] stages the rewrite beside
-  *    the live directory, deletes live, renames staged in. A reader
-  *    racing the swap sees the old or the new complete directory. A
-  *    crash between the delete and the rename is healed by
-  *    [[healStaged]] (the staged directory's `_SUCCESS` marker proves
-  *    completeness); leftover increments/tombstones from a crash
-  *    BETWEEN the rename and the cleanup are NOT healed here — the
-  *    caller's rewrite must be idempotent against re-applied inputs
-  *    (dedup the union, anti-join already-purged ids), which both
-  *    families' vacuum paths are.
+  *  - **Idempotent maintenance.** A vacuum/compact rewrite publishes
+  *    through `Sinks.swap` (never a partial directory; healed on the
+  *    next pass). Increments/tombstones left over by a crash AFTER the
+  *    swap but before the cleanup are not healed here — the caller's
+  *    rewrite must be idempotent against re-applied inputs (dedup the
+  *    union, anti-join already-purged ids), which both families'
+  *    vacuum paths are.
   *
   * Single-writer contract: maintenance ops (vacuum/compact) assume one
-  * writer at a time against one index; concurrent PROBES and concurrent
-  * tombstone/increment APPENDS are safe by the snapshot rule above.
+  * writer at a time against one index. A concurrent PROBE sees the old
+  * or the new directory, or none for the instant between the swap's
+  * two renames; concurrent tombstone/increment APPENDS are safe by the
+  * snapshot rule above.
   */
 object IndexLifecycle {
 
@@ -126,39 +125,5 @@ object IndexLifecycle {
           Files.delete(r)
       } catch { case _: java.io.IOException => () }
     }
-  }
-
-  /** Recursively delete a directory tree (no-op when absent). */
-  def rmTree(p: Path): Unit = {
-    if (Files.exists(p))
-      Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(Files.delete)
-    ()
-  }
-
-  /** Heal a crash that deleted the live directory but had not yet
-    * renamed the complete staged one in: if `live` is missing and
-    * `staged/_SUCCESS` exists, rename staged → live and return true.
-    * The caller then proceeds with its normal pass — leftover
-    * increments/tombstones the crashed pass had already folded re-apply
-    * idempotently (the rewrite dedups; purged ids anti-join nothing). */
-  def healStaged(live: Path, staged: Path): Boolean =
-    if (!Files.isDirectory(live) &&
-      Files.exists(staged.resolve("_SUCCESS"))) {
-      Files.move(staged, live)
-      true
-    } else false
-
-  /** Stage-then-rename swap: heal a prior crash, discard any stale
-    * staged leftovers, run `write` into the staged path, delete live,
-    * rename staged in. Readers racing the swap see the old or the new
-    * complete directory, never a partial one. */
-  def swapStaged(live: Path, staged: Path)(write: String => Unit): Unit = {
-    healStaged(live, staged)
-    rmTree(staged)
-    write(staged.toString)
-    rmTree(live)
-    Files.move(staged, live)
-    ()
   }
 }

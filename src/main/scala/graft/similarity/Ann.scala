@@ -740,28 +740,26 @@ object Ann {
     * `dedup.Dedup.compactMinhashIndex`). Cost ∝ index size, zero
     * corpus rescan; the codebook is untouched (deletes never retrain).
     *
-    * Swap is stage-then-rename via the shared lifecycle kernel
-    * (`graft.index.IndexLifecycle`): a reader racing the swap sees the
-    * old or the new complete directory; a crash between the delete and
-    * the rename heals on the next run via the staged directory's
-    * `_SUCCESS` marker. The pass is SNAPSHOT-SCOPED and IDEMPOTENT
-    * across every crash window: increments and tombstones are read
+    * The rewrite publishes through the lake's one swap protocol
+    * (`graft.sinks.Sinks.swap`): a probe never sees a partial
+    * `postings` directory, and a crash in any swap window is healed at
+    * the start of the next vacuum. The pass is SNAPSHOT-SCOPED and
+    * IDEMPOTENT across every crash window: increments and tombstones are read
     * from the file set listed at entry and only that set is deleted at
     * the end — tombstones/increments appended concurrently survive for
     * the next pass (never a lost takedown) — and the rewrite
     * `dropDuplicates` on corpus_id (the index's one-vector-per-id
-    * contract), so a crash after the rename but before the cleanup
+    * contract), so a crash after the swap but before the cleanup
     * cannot double the already-folded increment postings when the next
     * vacuum unions them again. */
   def vacuumIvfIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
     import graft.index.IndexLifecycle._
-    val live = java.nio.file.Paths.get(s"$path/postings")
-    val staged = java.nio.file.Paths.get(s"$path/postings_vacuum")
-    // a healed staged dir already contains the crashed pass's folded
+    val live = s"$path/postings"
+    // a healed swap already published the crashed pass's folded
     // increments; the leftover increment/tombstone files below re-fold
     // idempotently (dropDuplicates + anti-join of already-purged ids)
-    healStaged(live, staged)
+    graft.sinks.Sinks.healSwap(live)
     val incrSnap = snapshotFiles(s"$path/increments")
     val tombSnap = snapshotFiles(s"$path/tombstones")
     // preserve the LIVE postings schema wholesale: an index built with
@@ -773,7 +771,7 @@ object Ann {
     // index), and attrCols they never carried fold in as nulls — a
     // filtered probe then simply never matches them, which is the
     // honest semantic for rows whose metadata was never ingested.
-    val liveDf = spark.read.parquet(live.toString)
+    val liveDf = spark.read.parquet(live)
     val liveCols = liveDf.columns.toSeq
     def inLiveSchema(df: DataFrame, pri: Int): DataFrame = {
       val cols = liveCols.map { c =>
@@ -810,8 +808,9 @@ object Ann {
       .drop("__rn", "__pri", "__batch")
     readSnapshot(spark, s"$path/tombstones", tombSnap).foreach(t =>
       post = post.join(t.distinct(), Seq("corpus_id"), "left_anti"))
-    swapStaged(live, staged) { dir =>
+    graft.sinks.Sinks.swap(live) { dir =>
       post.write.mode("overwrite").partitionBy("cell").parquet(dir)
+      true
     }
     deleteSnapshot(s"$path/increments", incrSnap)
     deleteSnapshot(s"$path/tombstones", tombSnap)

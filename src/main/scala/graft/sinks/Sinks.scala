@@ -6,12 +6,18 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.etl.Utils.rmTree
+
 /** Sink layer (SURVEY.md §2.2 K1–K10).
   *
   * Plain-Parquet lake (no Delta/Iceberg jars in this environment), so
-  * merge/delete are read-merge-overwrite with a temp-dir swap —
-  * atomicity across readers is documented as a non-goal (SURVEY §7.3);
-  * on a real deployment these become Delta `MERGE`/`DELETE`.
+  * every rewrite of a lake directory — merge, delete, compaction, the
+  * rollup folds, WAP and the index vacuums — stages the new state
+  * beside the live directory and publishes it through ONE protocol,
+  * [[swap]]: a reader never sees a partial directory, only the old or
+  * the new one or, for the instant between two renames, none; one
+  * writer per path. On a real deployment these become Delta
+  * `MERGE`/`DELETE`.
   *
   * All writers are partition-parallel `df.write` paths; per-batch
   * chunking from the reference (`base_loaders.py:74-98`) is subsumed by
@@ -29,7 +35,6 @@ object Sinks {
     def history: Seq[LoadResult] = synchronized { buf.toSeq }
     def loaded: Long = history.filter(_.status == "success").map(_.count).sum
     def failed: Long = history.count(_.status == "error")
-    def lastN(n: Int): Seq[LoadResult] = history.takeRight(n)
     def toDF(spark: SparkSession): DataFrame = {
       import spark.implicits._
       history.map(r => (r.target, r.status, r.count, r.error.getOrElse("")))
@@ -61,16 +66,12 @@ object Sinks {
     obs.get("n").asInstanceOf[Long]
   }
 
-  /** K3 — document-store insert with `created_at` stamping
-    * (`base_loaders.py:124-147`, `mongo_connector.py:80-93`). */
-  def insertWithCreatedAt(df: DataFrame, path: String): Long =
-    load(df.withColumn("created_at", current_timestamp()), path)
-
   /** K4 — upsert without Delta: full-outer read-merge-overwrite keyed on
     * `keyField` (`base_loaders.py:149-181`, `mongo_connector.py:132-150`).
     * Updates win column-wise (`$set` semantics); `updated_at` stamped on
     * updated rows. Returns (inserted, updated) — computed from the same
-    * join, not extra scans.
+    * join, not extra scans. An absent table is created from `updates`
+    * (all inserted) through the same swap.
     *
     * Scale note: the merge is one shuffle join on the key; with a
     * key-bucketed table layout it degrades gracefully to a co-located
@@ -80,15 +81,12 @@ object Sinks {
   def upsert(spark: SparkSession, path: String, updates: DataFrame,
       keyField: String, stampUpdatedAt: Boolean = true): (Long, Long) = {
     healSwap(path) // a swap-window crash must not read as "no table"
-    val exists = Files.exists(Paths.get(path))
-    if (!exists) {
-      val obs = new org.apache.spark.sql.Observation("upsert_insert_only")
-      updates.observe(obs, count(lit(1)).as("n"))
-        .write.mode(SaveMode.Overwrite).parquet(path)
-      return (obs.get("n").asInstanceOf[Long], 0L)
-    }
-    val target = spark.read.parquet(path)
-    val merged = mergeFrames(target, updates, keyField, stampUpdatedAt)
+    val merged =
+      if (Files.exists(Paths.get(path)))
+        mergeFrames(spark.read.parquet(path), updates, keyField,
+          stampUpdatedAt)
+      else updates.select(col("*"), lit(true).as("__is_insert"),
+        lit(false).as("__is_update"))
     // inserted/updated counts observed DURING the write — the merge join
     // executes once (the earlier agg-then-write form ran it twice)
     val obs = new org.apache.spark.sql.Observation("upsert_metrics")
@@ -96,7 +94,7 @@ object Sinks {
         sum(when(col("__is_insert"), 1L).otherwise(0L)).as("inserted"),
         sum(when(col("__is_update"), 1L).otherwise(0L)).as("updated"))
       .drop("__is_insert", "__is_update")
-    writeSwap(spark, out, path)
+    writeSwap(out, path)
     (obs.get("inserted").asInstanceOf[Long],
       obs.get("updated").asInstanceOf[Long])
   }
@@ -145,7 +143,7 @@ object Sinks {
     val keep = df.observe(obsAll, count(lit(1)).as("n"))
       .where(!(col(tsCol) >= lit(start) && col(tsCol) < lit(stop)))
       .observe(obsKeep, count(lit(1)).as("n"))
-    writeSwap(spark, keep, path)
+    writeSwap(keep, path)
     obsAll.get("n").asInstanceOf[Long] - obsKeep.get("n").asInstanceOf[Long]
   }
 
@@ -167,13 +165,10 @@ object Sinks {
     val keep = df.observe(obsAll, count(lit(1)).as("n"))
       .join(keySide, Seq(keyCol), "left_anti")
       .observe(obsKeep, count(lit(1)).as("n"))
-    writeSwap(spark, keep, path)
+    writeSwap(keep, path)
     obsAll.get("n").asInstanceOf[Long] - obsKeep.get("n").asInstanceOf[Long]
   }
 
-  /** Overwriting a path we are also reading requires materializing away
-    * from it first: write temp dir, swap atomically at the directory
-    * level. */
   /** Exactly-once adapter for `foreachBatch` sinks: Structured
     * Streaming replays an uncommitted micro-batch after restart
     * (at-least-once delivery), so a non-idempotent batch writer
@@ -247,7 +242,7 @@ object Sinks {
     val totalBytes = before.map(Files.size).sum
     val n = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
     val df = spark.read.parquet(path)
-    writeSwap(spark, df.repartition(n), path)
+    writeSwap(df.repartition(n), path)
     (before.size, parquetFiles(root).size)
   }
 
@@ -365,92 +360,87 @@ object Sinks {
       * Returns the versions removed. */
     def vacuum(path: String, keep: Int): Seq[Long] = {
       require(keep >= 1, "must keep at least the current version")
-      import scala.jdk.CollectionConverters._
       val doomed = committed(path).dropRight(keep)
-      doomed.foreach { v =>
-        val d = Paths.get(s"$path/v=$v")
-        Files.walk(d).iterator().asScala.toSeq.reverse
-          .foreach(f => Files.deleteIfExists(f))
-      }
+      doomed.foreach(v => rmTree(Paths.get(s"$path/v=$v")))
       doomed
     }
   }
 
-  /** Heal [[writeSwap]]'s crash windows before touching `path` — MUST
-    * run before a read-modify-write op reads the target or tests its
-    * existence (every such op here calls it first):
-    *  - live missing + staged complete (`_SUCCESS`): the crash hit
-    *    between the two moves — finish the swap (the staged table is
-    *    the later state; an at-least-once caller re-applies its batch
-    *    idempotently on top);
-    *  - live missing + only `.__old__` present: the staged write never
-    *    completed — restore the old table;
-    *  - stale `.__old__`/`.__tmp__` from a crash after the swap (or a
-    *    failed staged write): removed, else the NEXT swap's
-    *    ATOMIC_MOVE onto the existing `.__old__` would throw.
-    * Without this, a crash inside the swap window turned the next
+  /** THE stage-and-publish protocol of the lake. Every rewrite of a
+    * directory goes through here: upsert, the deletes, compaction, the
+    * rollup folds, SCD2 history, write-audit-publish and both index
+    * families' vacuums.
+    *
+    * After [[healSwap]], `stage` writes the complete new state into
+    * the directory it is given (`<path>.__tmp__`): the data plus any
+    * sidecar files, such as applied-batch markers or an audit over the
+    * staged files. A `stage` that returns false (a veto) or throws
+    * discards the staged directory and leaves live untouched.
+    * Otherwise two atomic renames publish it, live → `.__old__` and
+    * staged → live, and `.__old__` is dropped.
+    *
+    * Guarantee: a reader of `path` never sees a partial directory. It
+    * sees the old one, the new one, or, between the two renames,
+    * none. One writer per path at a time. A crash between any two
+    * steps is healed by the next [[swap]] or [[healSwap]]. Returns
+    * whether the staged state was published. */
+  def swap(path: String)(stage: String => Boolean): Boolean = {
+    healSwap(path)
+    val live = Paths.get(path)
+    val tmp = Paths.get(path + ".__tmp__")
+    val old = Paths.get(path + ".__old__")
+    val publish =
+      try stage(tmp.toString)
+      catch { case e: Throwable => rmTree(tmp); throw e }
+    if (!publish) { rmTree(tmp); return false }
+    graft.Failpoints.point("sinks.swap.staged")
+    if (Files.exists(live)) Files.move(live, old, StandardCopyOption.ATOMIC_MOVE)
+    graft.Failpoints.point("sinks.swap.live_removed")
+    Files.move(tmp, live, StandardCopyOption.ATOMIC_MOVE)
+    graft.Failpoints.point("sinks.swap.swapped")
+    rmTree(old)
+    true
+  }
+
+  /** [[swap]] in its common form: `df` is the whole new table. */
+  def writeSwap(df: DataFrame, path: String): Unit = {
+    swap(path) { tmp => df.write.mode(SaveMode.Overwrite).parquet(tmp); true }
+    ()
+  }
+
+  /** Finish or roll back a crashed [[swap]] of `path`. A caller that
+    * tests whether the table exists or reads it before its swap calls
+    * this first; [[swap]] runs it itself. `.__old__` is the commit
+    * mark; Spark's `_SUCCESS` is not trusted, because sidecar files
+    * land after it:
+    *  - live missing, `.__old__` present: the swap had started, so
+    *    the staged directory is complete — publish it, or restore
+    *    `.__old__` if the staged directory is gone;
+    *  - live missing, no `.__old__`: nothing was published — the
+    *    staged directory is discarded and the at-least-once caller
+    *    replays;
+    *  - `.__old__`/`.__tmp__` beside a live table are removed, else
+    *    the next swap's rename onto `.__old__` would throw.
+    * Without this a crash inside the swap window turned the next
     * upsert into an insert-only write that silently dropped every
     * other key of the target (found by the chaos suite). */
   def healSwap(path: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    val p = Paths.get(path)
+    val live = Paths.get(path)
     val tmp = Paths.get(path + ".__tmp__")
-    val del = Paths.get(path + ".__old__")
-    def rm(d: java.nio.file.Path): Unit = {
-      if (Files.exists(d))
-        Files.walk(d).iterator().asScala.toSeq.reverse
-          .foreach(f => Files.deleteIfExists(f))
-      ()
-    }
-    if (!Files.exists(p)) {
-      if (Files.exists(tmp.resolve("_SUCCESS")))
-        Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE)
-      else if (Files.exists(del))
-        Files.move(del, p, StandardCopyOption.ATOMIC_MOVE)
-    }
-    rm(del); rm(tmp)
+    val old = Paths.get(path + ".__old__")
+    if (!Files.exists(live) && Files.exists(old))
+      Files.move(if (Files.exists(tmp)) tmp else old, live,
+        StandardCopyOption.ATOMIC_MOVE)
+    rmTree(old); rmTree(tmp)
   }
 
-  /** Stage-then-swap table rewrite: readers racing the swap see the
-    * old or the new complete table. Crash windows between the
-    * failpoints are healed by [[healSwap]] on the next op. */
-  def writeSwap(spark: SparkSession, df: DataFrame, path: String): Unit =
-    writeSwapWith(spark, df, path)(_ => ())
-
-  /** [[writeSwap]] with a post-stage hook: `afterStage` runs on the
-    * COMPLETE staged directory before any destructive step, so sidecar
-    * files it adds (e.g. applied-batch markers — see
-    * `Incremental.mergeMergeableOnce`) publish ATOMICALLY with the
-    * data: a crash during the hook leaves the live table untouched
-    * (the stale staged dir is discarded on the next op), and once the
-    * swap starts the staged dir already carries everything. */
-  def writeSwapWith(spark: SparkSession, df: DataFrame, path: String)(
-      afterStage: java.nio.file.Path => Unit): Unit = {
-    healSwap(path)
-    val tmp = path + ".__tmp__"
-    df.write.mode(SaveMode.Overwrite).parquet(tmp)
-    afterStage(Paths.get(tmp))
-    graft.Failpoints.point("sinks.swap.staged")
-    val p = Paths.get(path)
-    val del = Paths.get(path + ".__old__")
-    if (Files.exists(p)) Files.move(p, del, StandardCopyOption.ATOMIC_MOVE)
-    graft.Failpoints.point("sinks.swap.live_removed")
-    Files.move(Paths.get(tmp), p, StandardCopyOption.ATOMIC_MOVE)
-    graft.Failpoints.point("sinks.swap.swapped")
-    if (Files.exists(del)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(del).iterator().asScala.toSeq.reverse
-        .foreach(f => Files.deleteIfExists(f))
-    }
-  }
-
-  /** WRITE-AUDIT-PUBLISH: the lakehouse promotion protocol — data is
+  /** WRITE-AUDIT-PUBLISH: the lakehouse promotion protocol — `df` is
     * staged beside the live table, the audit runs against the STAGED
     * files (what readers would actually see, not the in-memory frame
-    * that produced them), and only a passing audit swaps staging into
-    * the live path ([[writeSwap]] — readers never observe a partial
-    * table). A failing audit leaves the live table untouched and
-    * returns the reason; staging is removed either way.
+    * that produced them), and only a passing audit publishes them
+    * through [[swap]]. A vetoing or throwing audit leaves the live
+    * table untouched and returns the reason; the staged files are
+    * removed either way.
     *
     * `audit` returns None to approve or Some(reason) to veto — the
     * caller plugs in the engine's validators (`validate.Validators`,
@@ -459,46 +449,24 @@ object Sinks {
     * refs; on plain parquet the staged directory plays the branch. */
   def writeAuditPublish(spark: SparkSession, df: DataFrame, path: String,
       audit: DataFrame => Option[String]): Either[String, Long] = {
-    // heal a prior crashed swap first (WAP's promote shares the
-    // .__old__ suffix with writeSwap): a stale .__old__ would make
-    // this promote's ATOMIC_MOVE throw, and a live table lost between
-    // a crashed promote's two moves must be restored before we stage
-    healSwap(path)
-    val staging = path + ".__staging__"
-    df.write.mode(SaveMode.Overwrite).parquet(staging)
-    val staged = spark.read.parquet(staging)
-    val verdict =
-      try audit(staged)
-      catch { case e: Exception => Some(s"audit threw: ${e.getMessage}") }
-    val result = verdict match {
-      case Some(reason) => Left(reason)
-      case None => Right(staged.count())
-    }
-    result match {
-      case Right(_) =>
-        // promote the already-written staged files; no second write
-        val p = Paths.get(path)
-        val del = Paths.get(path + ".__old__")
-        if (Files.exists(p)) Files.move(p, del, StandardCopyOption.ATOMIC_MOVE)
-        Files.move(Paths.get(staging), p, StandardCopyOption.ATOMIC_MOVE)
-        if (Files.exists(del)) {
-          import scala.jdk.CollectionConverters._
-          Files.walk(del).iterator().asScala.toSeq.reverse
-            .foreach(f => Files.deleteIfExists(f))
-        }
-      case Left(_) =>
-        import scala.jdk.CollectionConverters._
-        Files.walk(Paths.get(staging)).iterator().asScala.toSeq.reverse
-          .foreach(f => Files.deleteIfExists(f))
+    var result: Either[String, Long] = null
+    swap(path) { tmp =>
+      df.write.mode(SaveMode.Overwrite).parquet(tmp)
+      val staged = spark.read.parquet(tmp)
+      val verdict =
+        try audit(staged)
+        catch { case e: Exception => Some(s"audit threw: ${e.getMessage}") }
+      result = verdict.toLeft(staged.count())
+      result.isRight
     }
     result
   }
 
-  /** K5 — points load: declared tag columns (stringified) + field
+  /** K5 — points frame: declared tag columns (stringified) + field
     * columns + time column; when no field list is given, every numeric
     * non-tag non-time column becomes a field
     * (`base_loaders.py:207-256`, `influx_connector.py:82-111`). Output is
-    * long-format partitioned by measurement. */
+    * long-format, one row per (time, measurement, tags, field). */
   def pointsFrame(df: DataFrame, measurement: String, timeField: String,
       tagFields: Seq[String], fieldFields: Seq[String] = Nil): DataFrame = {
     import org.apache.spark.sql.types._
@@ -515,18 +483,6 @@ object Sinks {
         fields.map(col): _*)
     graft.sources.Sources.toLong(tagged, "time",
       "measurement" +: tagFields.map(t => s"tag_$t"), fields)
-  }
-
-  def loadPoints(df: DataFrame, path: String, measurement: String,
-      timeField: String, tagFields: Seq[String],
-      fieldFields: Seq[String] = Nil): Long = {
-    val pts = pointsFrame(df, measurement, timeField, tagFields, fieldFields)
-    // point count observed during the write (no second pass over the
-    // long-format explode)
-    val obs = new org.apache.spark.sql.Observation()
-    pts.observe(obs, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Append).partitionBy("measurement").parquet(path)
-    obs.get("n").asInstanceOf[Long]
   }
 
   /** Date/source-partitioned lake layout (SURVEY.md §7.4 #6): the

@@ -485,7 +485,7 @@ object Streaming {
       } else {
         graft.operators.Scd2.fromChangeLog(incoming, key, ts, tie, attrs)
       }
-    graft.sinks.Sinks.writeSwap(spark, history, path)
+    graft.sinks.Sinks.writeSwap(history, path)
   }
 
   /** STREAMING QUALITY GATE — audited append: every micro-batch is

@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 
 import graft.index.IndexLifecycle
 import graft.similarity.Ann
+import graft.sinks.Sinks
 
 /** The shared index-lifecycle kernel ([[graft.index.IndexLifecycle]])
   * and the crash/race hazards it closes in BOTH index families:
@@ -24,8 +25,13 @@ import graft.similarity.Ann
   *    that matched nothing);
   *  - tombstone masking on EVERY probe API (`ivfIndexTopK`, not just
   *    the lifecycle-aware `ivfLiveTopK`);
-  *  - `_SUCCESS`-guarded heal of a crash between the live delete and
-  *    the staged rename.
+  *  - the lake's one swap protocol (`graft.sinks.Sinks.swap`), which
+  *    both families' rewrites publish through: its heal
+  *    ([[graft.sinks.Sinks.healSwap]]) takes `.__old__`, not Spark's
+  *    `_SUCCESS`, as the mark of a started swap, and a kill in any
+  *    swap window of an IVF vacuum or a MinHash compaction leaves the
+  *    index directory absent or whole, never partial, and the next
+  *    pass converges.
   */
 class IndexLifecycleSpec extends SparkSpec {
   import spark.implicits._
@@ -140,25 +146,150 @@ class IndexLifecycleSpec extends SparkSpec {
     assert(leaked === 0L)
   }
 
-  test("healStaged folds a complete staged dir in; an incomplete one " +
-      "is left for the rebuild") {
+  test("healSwap publishes a staged dir only once the swap has started " +
+      "(.__old__), never on _SUCCESS alone") {
     val tmp = Files.createTempDirectory("graft_ilc_heal")
     val live = tmp.resolve("live")
-    val staged = tmp.resolve("staged")
-    // incomplete staged (no _SUCCESS): not healed
-    Files.createDirectories(staged)
-    Files.writeString(staged.resolve("part-0"), "x")
-    assert(!IndexLifecycle.healStaged(live, staged))
-    assert(!Files.isDirectory(live))
-    // complete staged: healed into live
-    Files.writeString(staged.resolve("_SUCCESS"), "")
-    assert(IndexLifecycle.healStaged(live, staged))
-    assert(Files.isDirectory(live) &&
-      Files.exists(live.resolve("part-0")) && !Files.exists(staged))
-    // live present: heal is a no-op even with a complete staged dir
-    Files.createDirectories(staged)
-    Files.writeString(staged.resolve("_SUCCESS"), "")
-    assert(!IndexLifecycle.healStaged(live, staged))
+    val staged = tmp.resolve("live.__tmp__")
+    val old = tmp.resolve("live.__old__")
+    def dir(d: Path, file: String): Unit = {
+      Files.createDirectories(d)
+      Files.writeString(d.resolve(file), "x"): Unit
+    }
+    // incomplete staged (no _SUCCESS, no .__old__): not published
+    dir(staged, "part-0")
+    Sinks.healSwap(live.toString)
+    assert(!Files.exists(live) && !Files.exists(staged))
+    // no .__old__: even a complete staged dir is discarded — nothing
+    // was ever published, the at-least-once caller replays
+    dir(staged, "part-0"); dir(staged, "_SUCCESS")
+    Sinks.healSwap(live.toString)
+    assert(!Files.exists(live) && !Files.exists(staged))
+    // complete staged + .__old__ (crash between the renames): published
+    dir(old, "part-old"); dir(staged, "part-0")
+    Sinks.healSwap(live.toString)
+    assert(Files.exists(live.resolve("part-0")) &&
+      !Files.exists(staged) && !Files.exists(old))
+    // live present: a no-op on live, leftovers beside it removed
+    dir(staged, "part-new"); dir(old, "part-old")
+    Sinks.healSwap(live.toString)
+    assert(Files.exists(live.resolve("part-0")) &&
+      !Files.exists(live.resolve("part-new")) &&
+      !Files.exists(staged) && !Files.exists(old))
+    // .__old__ without a staged dir: the old table is restored
+    Files.move(live, old)
+    Sinks.healSwap(live.toString)
+    assert(Files.exists(live.resolve("part-0")) && !Files.exists(old))
+  }
+
+  private final class Kill extends RuntimeException("chaos kill")
+
+  /** Run `body` with the first firing of `tag` killed; it must die. */
+  private def killedAt(tag: String)(body: => Unit): Unit = {
+    val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+    intercept[Kill] {
+      Failpoints.withHook(t =>
+        if (t == tag && fired.compareAndSet(false, true)) throw new Kill)(
+        body)
+    }
+    ()
+  }
+
+  private def rowsAt(dir: String): Option[Long] =
+    if (Files.isDirectory(java.nio.file.Paths.get(dir)))
+      Some(spark.read.parquet(dir).count())
+    else None
+
+  private val swapWindows = Seq("sinks.swap.staged",
+    "sinks.swap.live_removed", "sinks.swap.swapped")
+
+  /** What a kill in each swap window leaves at the swapped path. */
+  private def leftAt(tag: String, before: Long, after: Long): Option[Long] =
+    tag match {
+      case "sinks.swap.staged" => Some(before)
+      case "sinks.swap.live_removed" => None
+      case _ => Some(after)
+    }
+
+  test("a kill in every swap window of an IVF vacuum leaves postings " +
+      "absent or whole; the next vacuum converges") {
+    val tmp = Files.createTempDirectory("graft_ilc_ivfchaos")
+    val base = tmp.resolve("base")
+    Ann.buildIvfIndex(emb.filter(col("vec_id") < 300), "embedding",
+      "vec_id", base.toString, nlist = 8)
+    Ann.appendIvfBatch(spark,
+      emb.filter(col("vec_id") >= 300 && col("vec_id") < 400),
+      "embedding", "vec_id", base.toString, batchId = 0L)
+    Ann.deleteFromIvfIndex(emb.filter(col("vec_id") % 7 === 0)
+      .select(col("vec_id")), "vec_id", base.toString)
+    val q = emb.filter(col("vec_id") < 5)
+    def probe(idx: String): Seq[Seq[Any]] =
+      Ann.ivfLiveTopK(spark, q, "embedding", "vec_id", idx, k = 3,
+          nprobe = 3)
+        .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
+    val clean = tmp.resolve("clean")
+    copyTree(base, clean)
+    val before = rowsAt(s"$clean/postings").get
+    Ann.vacuumIvfIndex(spark, clean.toString)
+    val after = rowsAt(s"$clean/postings").get
+    assert(before === 300L && after === 400L - 58L)
+    val want = probe(clean.toString)
+    swapWindows.foreach { tag =>
+      val idx = tmp.resolve(tag).toString
+      copyTree(base, tmp.resolve(tag))
+      killedAt(tag)(Ann.vacuumIvfIndex(spark, idx))
+      assert(rowsAt(s"$idx/postings") === leftAt(tag, before, after), tag)
+      Ann.vacuumIvfIndex(spark, idx)
+      assert(rowsAt(s"$idx/postings") === Some(after), tag)
+      assert(probe(idx) === want, tag)
+    }
+  }
+
+  test("a kill in every swap window of a MinHash compaction leaves " +
+      "buckets/tokens absent or whole; the next compaction converges") {
+    import graft.dedup.Dedup
+    val tmp = Files.createTempDirectory("graft_ilc_mhchaos")
+    val base = tmp.resolve("base")
+    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+      .select(col("doc_id"), col("text"))
+    Dedup.buildMinhashIndex(docs.filter(col("doc_id") < 200), "text",
+      "doc_id", base.toString)
+    // an at-least-once replay's duplicate rows, plus a takedown: the
+    // compaction collapses the one and purges the other
+    Dedup.appendToMinhashIndex(docs.filter(col("doc_id") < 50), "text",
+      "doc_id", base.toString)
+    Dedup.deleteFromMinhashIndex(docs.filter(col("doc_id") % 9 === 0)
+      .select(col("doc_id")), "doc_id", base.toString)
+    val fresh = docs.filter(col("doc_id") < 60)
+      .withColumn("doc_id", col("doc_id") + 1000000L)
+    def probe(idx: String): Set[Seq[Any]] =
+      Dedup.incrementalDupes(spark, fresh, "text", "doc_id", idx)
+        .collect().map(_.toSeq).toSet
+    val subs = Seq("buckets", "tokens")
+    val clean = tmp.resolve("clean")
+    copyTree(base, clean)
+    val before = subs.map(sub => sub -> rowsAt(s"$clean/$sub").get).toMap
+    Dedup.compactMinhashIndex(spark, clean.toString)
+    val after = subs.map(sub => sub -> rowsAt(s"$clean/$sub").get).toMap
+    subs.foreach(sub => assert(after(sub) < before(sub), sub))
+    val want = probe(clean.toString)
+    assert(want.nonEmpty)
+    swapWindows.foreach { tag =>
+      val idx = tmp.resolve(tag).toString
+      copyTree(base, tmp.resolve(tag))
+      killedAt(tag)(Dedup.compactMinhashIndex(spark, idx))
+      // the two sub-swaps run side by side: the killed one is in the
+      // window's state, the other one finished
+      subs.foreach { sub =>
+        val left = rowsAt(s"$idx/$sub")
+        assert(left === leftAt(tag, before(sub), after(sub)) ||
+          left === Some(after(sub)), s"$tag $sub")
+      }
+      Dedup.compactMinhashIndex(spark, idx)
+      subs.foreach(sub =>
+        assert(rowsAt(s"$idx/$sub") === Some(after(sub)), s"$tag $sub"))
+      assert(probe(idx) === want, tag)
+    }
   }
 
   test("string-id takedown masks on the MinHash side too") {

@@ -154,17 +154,19 @@ class IvfIngestSpec extends SparkSpec {
       emb.filter(col("vec_id") % 7 === 0).select(col("vec_id")),
       "vec_id", idx)
     val want = probe(idx)
-    // simulate the crash window: stage the rewrite by hand, then drop
-    // the live dir without renaming
+    // crash the vacuum between its two renames: live postings moved
+    // aside, the complete staged rewrite not yet renamed in
     val live = java.nio.file.Paths.get(idx, "postings")
-    val staged = java.nio.file.Paths.get(idx, "postings_vacuum")
-    val tomb = spark.read.parquet(s"$idx/tombstones").distinct()
-    spark.read.parquet(live.toString)
-      .join(tomb, Seq("corpus_id"), "left_anti")
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(staged.toString)
-    Files.walk(live).iterator().asScala.toSeq.reverse
-      .foreach(Files.delete)
+    val staged = java.nio.file.Paths.get(idx, "postings.__tmp__")
+    val crash = intercept[IllegalStateException] {
+      Failpoints.withHook(t =>
+        if (t == "sinks.swap.live_removed")
+          throw new IllegalStateException("crash")) {
+        Ann.vacuumIvfIndex(spark, idx)
+      }
+    }
+    assert(crash.getMessage === "crash")
+    assert(!Files.isDirectory(live) && Files.isDirectory(staged))
     Ann.vacuumIvfIndex(spark, idx) // heal path
     assert(Files.isDirectory(live) && !Files.exists(staged))
     assert(!Files.isDirectory(java.nio.file.Paths.get(idx, "tombstones")))

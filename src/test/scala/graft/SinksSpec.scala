@@ -364,6 +364,57 @@ class SinksSpec extends SparkSpec {
     assert(spark.read.parquet(path).count() == 2)
   }
 
+  test("writeAuditPublish: a veto on an absent live table leaves neither " +
+      "a live nor a staged directory") {
+    import java.nio.file.{Files, Paths}
+    val path = s"${tmp()}/t"
+    val veto = Sinks.writeAuditPublish(spark, Seq((1L, -1.0)).toDF("k", "v"),
+      path, _ => Some("vetoed"))
+    assert(veto == Left("vetoed"))
+    assert(!Files.exists(Paths.get(path)))
+    assert(!Files.exists(Paths.get(path + ".__tmp__")))
+  }
+
+  test("first writes go through the swap: a kill before the first " +
+      "mergeAdditive / upsert publishes nothing, and the replay equals " +
+      "the uncrashed table") {
+    import java.nio.file.{Files, Paths}
+    import graft.etl.Incremental
+    val p1 = Seq(("2024-01-01", "click", 2L), ("2024-01-02", "view", 1L))
+      .toDF("day", "event_type", "n")
+    val p2 = Seq(("2024-01-01", "click", 3L), ("2024-01-03", "view", 4L))
+      .toDF("day", "event_type", "n")
+    val keys = Seq("day", "event_type")
+    def rollup(path: String): Set[(String, String, Long)] =
+      spark.read.parquet(path).as[(String, String, Long)].collect().toSet
+    def killed(body: => Unit): Unit = {
+      val e = intercept[IllegalStateException] {
+        Failpoints.withHook(t =>
+          if (t == "sinks.swap.staged")
+            throw new IllegalStateException("chaos kill"))(body)
+      }
+      assert(e.getMessage == "chaos kill")
+      ()
+    }
+    val clean = s"${tmp()}/rollup"
+    Incremental.mergeAdditive(spark, clean, p1, keys)
+    Incremental.mergeAdditive(spark, clean, p2, keys)
+    val crashed = s"${tmp()}/rollup"
+    killed(Incremental.mergeAdditive(spark, crashed, p1, keys))
+    assert(!Files.exists(Paths.get(crashed)))
+    Incremental.mergeAdditive(spark, crashed, p1, keys) // the replay
+    Incremental.mergeAdditive(spark, crashed, p2, keys)
+    assert(rollup(crashed) == rollup(clean))
+    // upsert's insert-only first write: same swap, same counts
+    val users = s"${tmp()}/users"
+    val rows = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+    killed(Sinks.upsert(spark, users, rows, "id"))
+    assert(!Files.exists(Paths.get(users)))
+    assert(Sinks.upsert(spark, users, rows, "id") == ((2L, 0L)))
+    assert(spark.read.parquet(users).as[(Long, String)].collect().toSet ==
+      Set((1L, "a"), (2L, "b")))
+  }
+
   test("JdbcSink: live distributed upsert — update vs insert split, idempotent, null-safe") {
     import org.apache.spark.sql.types._
     import graft.sinks.JdbcSink
