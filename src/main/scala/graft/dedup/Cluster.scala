@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.plans.{Pin, Pinned}
 
 /** Near-duplicate CLUSTER formation: the step after pair detection that
   * an actual corpus dedup needs — connected components over the
@@ -57,10 +58,9 @@ object Cluster {
     // checkpoint the raw pairs once: both paths re-read them, and the
     // upstream pair generation (an LSH/shingle join, the most expensive
     // stage of the whole dedup) must not re-execute per use
-    val (oneWay, owBytes) = graft.plans.Pin.pinSized(
+    val Pinned(oneWay, owBytes, edgeCount) = Pin(
       edges.select(col(srcCol).cast("long").as("node"),
         col(dstCol).cast("long").as("nbr")))
-    val edgeCount = oneWay.count() // cheap: scans checkpoint blocks
     if (edgeCount <= smallGraphEdges) driverUnionFind(oneWay)
     else distributedCC(oneWay, owBytes, edgeCount, maxIter)._1
   }
@@ -71,10 +71,10 @@ object Cluster {
   private[graft] def connectedComponentsWithRounds(edges: DataFrame,
       srcCol: String, dstCol: String,
       maxIter: Int = 25): (DataFrame, Int) = {
-    val (oneWay, owBytes) = graft.plans.Pin.pinSized(
+    val Pinned(oneWay, owBytes, edgeCount) = Pin(
       edges.select(col(srcCol).cast("long").as("node"),
         col(dstCol).cast("long").as("nbr")))
-    distributedCC(oneWay, owBytes, oneWay.count(), maxIter)
+    distributedCC(oneWay, owBytes, edgeCount, maxIter)
   }
 
   /** Small-graph path: one collect + path-compressed union-find. */
@@ -125,7 +125,7 @@ object Cluster {
       // leaf lineage, same as every round below; contraction only ever
       // SHRINKS the edge frame, so the measured root bytes price every
       // round's pin in one shot
-      .transform(graft.plans.Pin.pinHinted(_, owBytes))
+      .transform(Pin(_, owBytes).df)
     var fingerprint = e.agg(count(lit(1)), sum(col("u")), sum(col("v")))
       .collect()(0).toSeq
     var converged = false
@@ -156,7 +156,7 @@ object Cluster {
       // plan ~16× per round and explode exponentially; the eager
       // checkpoint truncates to a leaf and doubles as the
       // fingerprint's materializing action
-      val next = next0.transform(graft.plans.Pin.pinHinted(_, owBytes))
+      val next = next0.transform(Pin(_, owBytes).df)
       // at the star fixpoint BOTH operations are identities and edge
       // endpoints only ever decrease, so an unchanged fingerprint is
       // the fixpoint, never a coincidence
@@ -194,13 +194,6 @@ object Cluster {
       .select(col("node"), coalesce(col("comp"), col("node")).as("comp"))
     (comp, it)
   }
-
-  /** Cluster rollup: one row per component with size and id span. */
-  def clusterStats(components: DataFrame): DataFrame =
-    components.groupBy(col("comp"))
-      .agg(count(lit(1)).as("n_members"),
-        min(col("node")).as("member_min"),
-        max(col("node")).as("member_max"))
 
   /** End-to-end near-dup collapse: keep one survivor per cluster (the
     * min id) plus every document that never appeared in a pair. */

@@ -116,19 +116,6 @@ object Dedup {
     array(mins: _*)
   }
 
-  /** LSH banding: signature rows grouped into `bands` bands of
-    * `numHashes/bands` rows; band hash = xxhash64 over the slice.
-    * Documents sharing any band hash become candidates. */
-  def bandHashes(sig: Column, numHashes: Int, bands: Int): Column = {
-    val r = numHashes / bands
-    array((0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64(concat_ws(",",
-          transform(slice(sig, b * r + 1, r), x => x.cast("string")))
-        ).as("h"))
-    }: _*)
-  }
-
   /** MinHash-LSH near-dup candidate pairs with exact-Jaccard
     * verification of candidates only.
     *
@@ -412,14 +399,6 @@ object Dedup {
       .select(col("id_a"), col("id_b")).distinct()
     val corpusToks = spark.read.parquet(s"$indexPath/tokens")
     verifyJaccard(candidates, corpusToks, newToks, verifyThreshold)
-  }
-
-  /** Exact token-set Jaccard of two texts (verification predicate). */
-  def jaccardTokens(a: Column, b: Column): Column = {
-    val ta = array_distinct(tokens(lower(a)))
-    val tb = array_distinct(tokens(lower(b)))
-    val inter = size(array_intersect(ta, tb)).cast("double")
-    round(inter / (size(ta) + size(tb) - inter), 6)
   }
 
   // ── SimHash near-dup ───────────────────────────────────────────────

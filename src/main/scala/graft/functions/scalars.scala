@@ -47,9 +47,6 @@ object scalars {
   /** strip whitespace (`data_transformers.py:46`). */
   def trimmed(c: Column): Column = trim(c)
 
-  /** email lowercasing (`data_transformers.py:48-49`). */
-  def normalizeEmail(c: Column): Column = lower(trim(c))
-
   /** Title-casing for country/state/status (`data_transformers.py:50-51`).
     * Divergence: Python `str.title()` also splits on digits/apostrophes;
     * `initcap` splits on whitespace only — acceptable per SURVEY §7.3. */

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.plans.{Pin, Pinned}
 
 /** Hop-bounded cheapest path (distributed Bellman–Ford) — weighted
   * shortest distance from a source set, the weighted sibling of
@@ -41,10 +42,9 @@ object CheapestPath {
       rounds: Int): DataFrame = {
     require(rounds >= 0, s"need rounds >= 0, got $rounds")
     // measured root pin; relaxation frames are node-grained ⊆ the
-    // edge frame, so its bytes price the whole loop (Pin.pinHinted)
-    val (e, eBytes) = graft.plans.Pin.pinSized(
-      edges.select(col("src"), col("dst"),
-        col("w").cast("long").as("w")))
+    // edge frame, so its bytes price the whole loop
+    val Pinned(e, eBytes, _) = Pin(edges.select(col("src"), col("dst"),
+      col("w").cast("long").as("w")))
     // converged iff nothing improved: relaxation is monotone
     // non-increasing per node and can only add nodes, so comparing
     // (rows, total mass) detects any change without a join. The
@@ -57,7 +57,7 @@ object CheapestPath {
       d.agg(count(lit(1)), sum(col("dist"))).head()
     var dist = sources.select(col("node")).distinct()
       .withColumn("dist", lit(0L))
-      .transform(graft.plans.Pin.pinLazyHinted(_, eBytes))
+      .transform(Pin.deferred(_, eBytes))
     var distSig = sig(dist)
     var r = 0
     var converged = false
@@ -66,7 +66,7 @@ object CheapestPath {
         .select(e("dst").as("node"), (col("dist") + col("w")).as("dist"))
         .unionByName(dist)
         .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-        .transform(graft.plans.Pin.pinLazyHinted(_, eBytes))
+        .transform(Pin.deferred(_, eBytes))
       val after = sig(relaxed)
       if (distSig == after) converged = true
       dist = relaxed

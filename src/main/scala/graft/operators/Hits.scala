@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.plans.{Pin, Pinned}
 
 /** DataFrame-native HITS (Kleinberg hubs & authorities) — the
   * centrality that PageRank structurally cannot express on a BIPARTITE
@@ -46,8 +47,8 @@ object Hits {
       pinEachRound: Boolean = true): DataFrame = {
     require(iters >= 1, "hits needs at least one iteration")
     // measured root pin; score vectors are node-grained ⊆ the edge
-    // frame, so its bytes price the whole loop (Pin.pinHinted)
-    val (e, eBytes) = graft.plans.Pin.pinSized(edges)
+    // frame, so its bytes price the whole loop
+    val Pinned(e, eBytes, _) = Pin(edges)
     // ONE role-flagged node pass replaces the former srcs/dsts pair of
     // distinct+pin chains and their two count() jobs (4 serialized
     // driver actions → 2): `roles` is distinct on node with is-source /
@@ -64,7 +65,7 @@ object Hits {
         lit(0).as("__s"), lit(1).as("__d")))
       .groupBy(col("node"))
       .agg(max(col("__s")).as("__s"), max(col("__d")).as("__d"))
-      .transform(graft.plans.Pin.pinLazyHinted(_, eBytes))
+      .transform(Pin.deferred(_, eBytes))
     // broadcast dispatch must key on the LARGER side's cardinality:
     // the hub vector is |srcs| rows but the auth vector is |dsts| —
     // a 1M-source / 50M-destination fan-out graph would broadcast the
@@ -80,7 +81,7 @@ object Hits {
     // raw vector is lazy-pinned and its L1 total collected immediately
     // — the scalar's aggregate job is the pin's first (and only
     // concurrent) reader, so it materializes the blocks and truncates
-    // lineage before any other reference exists (the pinCountHinted
+    // lineage before any other reference exists (the counted-pin
     // pattern, guide §5), and the normalization becomes a constant
     // division over the pinned vector. The former shape — lazy pin +
     // crossJoin(broadcast(total)) with the NEXT half-step broadcasting
@@ -96,7 +97,7 @@ object Hits {
     // the mass total's value is identical (same two-phase aggregate).
     def pinL1(raw: DataFrame, c: String): DataFrame =
       if (pinEachRound) {
-        val pinned = graft.plans.Pin.pinLazyHinted(raw, eBytes)
+        val pinned = Pin.deferred(raw, eBytes)
         val tot = pinned.agg(sum(col(c))).collect()(0).getDouble(0)
         pinned.select(col("node"), (col(c) / lit(tot)).as(c))
       } else

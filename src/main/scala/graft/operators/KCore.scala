@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.plans.{Pin, Pinned}
 
 /** k-core decomposition by iterative peeling — the fourth
   * iterative-graph primitive next to connected components
@@ -43,13 +44,11 @@ object KCore {
     require(k >= 1, s"need k >= 1, got $k")
     require(rounds >= 1, s"need rounds >= 1, got $rounds")
     // measured root pin; every peel round's frame is ⊆ this edge
-    // frame, so its bytes price the whole loop (Pin.pinHinted)
-    // pin + edge count fused into ONE materialization action
-    // (Pin.pinSizedCounted / pinCountHinted, guide §5): the count is
-    // the job that fills the blocks, so each peel round pays one
-    // driver round-trip where it paid two
-    val (e0, eBytes, n0) = graft.plans.Pin.pinSizedCounted(
-      edges.select(col("src"), col("dst")))
+    // frame, so its bytes price the whole loop. The pin's row count
+    // is the edge count (guide §5): the count is the job that fills
+    // the blocks, so each peel round pays one driver round-trip where
+    // it paid two
+    val Pinned(e0, eBytes, n0) = Pin(edges.select(col("src"), col("dst")))
     var e = e0
     // the per-round edge count is the only driver-side value; it
     // doubles as the convergence test (peeling is monotone, so an
@@ -60,7 +59,7 @@ object KCore {
     while (r < rounds && !converged && nEdges > 0) {
       val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       val keep = deg.filter(col("deg") >= k).select(col("src").as("node"))
-      val (next, n) = graft.plans.Pin.pinCountHinted(e
+      val Pinned(next, _, n) = Pin(e
         .join(keep, e("src") === keep("node"), "left_semi")
         .join(keep, e("dst") === keep("node"), "left_semi"), eBytes)
       if (n == nEdges) converged = true

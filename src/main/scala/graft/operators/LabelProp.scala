@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.plans.{Pin, Pinned}
 
 /** Synchronous min-label propagation — bounded-round community
   * formation over an edge list, the fourth iterative-graph primitive
@@ -38,14 +39,12 @@ object LabelProp {
   def propagate(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0, s"need rounds >= 0, got $rounds")
     // measured root pin; round frames are node-grained ⊆ the edge
-    // frame, so its bytes price the whole loop (Pin.pinHinted)
-    val (e, eBytes) = graft.plans.Pin.pinSized(
-      edges.select(col("src"), col("dst")))
+    // frame, so its bytes price the whole loop
+    val Pinned(e, eBytes, _) = Pin(edges.select(col("src"), col("dst")))
     // eager pin: the node set anchors the loop — it feeds the
     // self-loop edges AND the round-1 label frame (two concurrent
     // readers), and the final semi-join
-    val nodes0 = graft.plans.Pin.pinHinted(
-      e.select(col("src").as("node")).distinct(), eBytes)
+    val nodes0 = Pin(e.select(col("src").as("node")).distinct(), eBytes).df
     // SELF-LOOP FORM (guide §2.4): `min(self, in-neighbors)` is a
     // single min-aggregate over the edge list augmented with one
     // (v, v) loop per node — the self contribution arrives through
@@ -76,7 +75,7 @@ object LabelProp {
               max((eAug("src") === eAug("dst")).cast("int")).as("__s"))
             .filter(col("__s") === 1).drop("__s")
         else grouped.agg(min(col("label")).as("label")))
-          .transform(graft.plans.Pin.pinLazyHinted(_, eBytes))
+          .transform(Pin.deferred(_, eBytes))
     }
     labels
   }

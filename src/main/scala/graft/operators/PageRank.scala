@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.plans.{Pin, Pinned}
 
 /** DataFrame-native PageRank — fixed-iteration power method over an
   * edge list, the second iterative-graph primitive next to connected
@@ -49,10 +50,10 @@ object PageRank {
     // the ROOT pin is measured (SER-first); every dependent frame is
     // ⊆ the edge frame, so its measured bytes price the rest of the
     // operator in one-shot hinted pins — no per-frame re-measurement
-    val (e, eBytes) = graft.plans.Pin.pinSized(edges)
+    val Pinned(e, eBytes, _) = Pin(edges)
     // pin+count in ONE driver action (guide §5): the pin's
-    // materialization job IS the count (Pin.pinCountHinted)
-    val (nodes, n) = graft.plans.Pin.pinCountHinted(
+    // materialization job IS the count
+    val Pinned(nodes, _, n) = Pin(
       e.select(col("src").as("node"))
         .union(e.select(col("dst").as("node"))).distinct(), eBytes)
     require(n > 0, "pageRank needs a non-empty edge list")
@@ -66,7 +67,7 @@ object PageRank {
     // dedicated driver action needed (guide §5)
     val contribEdges = e.join(outdeg, "src")
       .select(col("src"), col("dst"), (lit(1.0) / col("deg")).as("w"))
-      .transform(graft.plans.Pin.pinLazyHinted(_, eBytes))
+      .transform(Pin.deferred(_, eBytes))
     // The superstep join's SMALL side is the rank vector — (node,
     // double), 16 bytes a row — while the edge list is the frame that
     // must never move. A checkpoint erases the edge frame's partitioning
@@ -116,8 +117,8 @@ object PageRank {
     // NaN and return silently-poisoned results instead of failing fast
     require(damping > 0.0 && damping < 1.0,
       s"damping must be in (0, 1), got $damping")
-    val (e, eBytes) = graft.plans.Pin.pinSized(edges)
-    val (nodes, n) = graft.plans.Pin.pinCountHinted(
+    val Pinned(e, eBytes, _) = Pin(edges)
+    val Pinned(nodes, _, n) = Pin(
       e.select(col("src").as("node"))
         .union(e.select(col("dst").as("node"))).distinct(), eBytes)
     require(n > 0, "personalizedPageRank needs a non-empty edge list")
@@ -134,7 +135,7 @@ object PageRank {
     val flagged = nodes.join(
         seeds.select(col("node")).distinct().withColumn("__s", lit(1)),
         Seq("node"), "left")
-      .transform(graft.plans.Pin.pinLazyHinted(_, eBytes))
+      .transform(Pin.deferred(_, eBytes))
     val nSeeds = flagged.agg(sum(col("__s"))).collect()(0) match {
       case r if r.isNullAt(0) => 0L
       case r => r.getLong(0)
@@ -147,7 +148,7 @@ object PageRank {
     // lazy for the same consumers-are-sequential reason as pageRank
     val contribEdges = e.join(outdeg, "src")
       .select(col("src"), col("dst"), (lit(1.0) / col("deg")).as("w"))
-      .transform(graft.plans.Pin.pinLazyHinted(_, eBytes))
+      .transform(Pin.deferred(_, eBytes))
     val hintRanks: DataFrame => DataFrame =
       if (n <= 10_000_000L) broadcast else identity
     var ranks = tele.select(col("node"),

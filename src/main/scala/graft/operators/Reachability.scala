@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.plans.{Pin, Pinned}
 
 /** Frontier-expansion BFS over an edge list — hop distance from a
   * source set, the third iterative-graph primitive next to connected
@@ -37,16 +38,15 @@ object Reachability {
       maxDepth: Int): DataFrame = {
     require(maxDepth >= 0, s"need maxDepth >= 0, got $maxDepth")
     // measured root pin; frontier/visited frames are node-grained ⊆
-    // the edge frame, so its bytes price the loop (Pin.pinHinted)
-    val (e, eBytes) = graft.plans.Pin.pinSized(
-      edges.select(col("src"), col("dst")))
+    // the edge frame, so its bytes price the loop
+    val Pinned(e, eBytes, _) = Pin(edges.select(col("src"), col("dst")))
     // pin + emptiness test fused into ONE driver action per frame
-    // (Pin.pinCountHinted, guide §5): the count job is the pin's
+    // (the pin's row count, guide §5): the count job is the pin's
     // materialization. The growing visited set pins LAZILY — its first
     // consumer is the next round's anti-join (inside that round's
     // fused pin+count job), which reads every partition before any
     // other reference, so no dedicated materialization action either.
-    val (visited0, nSrc) = graft.plans.Pin.pinCountHinted(
+    val Pinned(visited0, _, nSrc) = Pin(
       sources.select(col("node")).distinct()
         .withColumn("depth", lit(0)), eBytes)
     var visited = visited0
@@ -54,7 +54,7 @@ object Reachability {
     var d = 1
     var exhausted = nSrc == 0
     while (d <= maxDepth && !exhausted) {
-      val (next, n) = graft.plans.Pin.pinCountHinted(
+      val Pinned(next, _, n) = Pin(
         frontier.join(e, frontier("node") === e("src"))
           .select(e("dst").as("node")).distinct()
           .join(visited, Seq("node"), "left_anti"), eBytes)
@@ -62,7 +62,7 @@ object Reachability {
       else {
         visited = visited
           .union(next.withColumn("depth", lit(d)))
-          .transform(graft.plans.Pin.pinLazyHinted(_, eBytes))
+          .transform(Pin.deferred(_, eBytes))
         frontier = next
         d += 1
       }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.plans.{Pin, Pinned}
 
 /** Bounded-round strongly-connected-component detection over a
   * DIRECTED edge list — the forward-backward "coloring" step (Orzan's
@@ -56,14 +57,13 @@ object Scc {
   def colorScc(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0, s"need rounds >= 0, got $rounds")
     // measured root pin; every round frame is node-grained ⊆ the edge
-    // frame, so its bytes price the whole loop (Pin.pinHinted)
-    val (e, eBytes) = graft.plans.Pin.pinSized(
-      edges.select(col("src"), col("dst")))
+    // frame, so its bytes price the whole loop
+    val Pinned(e, eBytes, _) = Pin(edges.select(col("src"), col("dst")))
     // eager pin: the node set feeds the self-loop edges AND the
     // round-1 color frame (two concurrent readers)
-    val nodes0 = graft.plans.Pin.pinHinted(
+    val nodes0 = Pin(
       e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct(), eBytes)
+        .union(e.select(col("dst").as("node"))).distinct(), eBytes).df
     // SELF-LOOP FORM for the forward coloring (guide §2.4, same move
     // as LabelProp.propagate): `min(self, in-colors)` becomes one
     // min-aggregate over the edge list augmented with a (v, v) loop
@@ -81,12 +81,12 @@ object Scc {
       colors = colors.join(eAug, colors("node") === eAug("src"))
         .groupBy(eAug("dst").as("node"))
         .agg(min(col("color")).as("color"))
-        .transform(graft.plans.Pin.pinLazyHinted(_, eBytes))
+        .transform(Pin.deferred(_, eBytes))
     }
     var flags = colors
       .select(col("node"), col("color"),
         (col("node") === col("color")).as("in_scc"))
-      .transform(graft.plans.Pin.pinHinted(_, eBytes))
+      .transform(Pin(_, eBytes).df)
     for (_ <- 1 to rounds) {
       // flagged dst endpoints hand the flag to their in-edge srcs —
       // but only within the same color class (see scaladoc: lossless)
@@ -99,7 +99,7 @@ object Scc {
           flags("color") === toSrc("c2"), "left")
         .select(col("node"), col("color"),
           (col("in_scc") || col("n2").isNotNull).as("in_scc"))
-        .transform(graft.plans.Pin.pinHinted(_, eBytes))
+        .transform(Pin(_, eBytes).df)
     }
     flags
   }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.plans.{Pin, Pinned}
 
 /** Earliest-arrival reachability over a TEMPORAL directed graph —
   * edges carry timestamps and a path is valid only if it respects
@@ -39,12 +40,12 @@ object TemporalReach {
       startTs: Column, rounds: Int): DataFrame = {
     require(rounds >= 0, s"need rounds >= 0, got $rounds")
     // measured root pin; arrival frames are node-grained ⊆ the edge
-    // frame, so its bytes price the whole loop (Pin.pinHinted)
-    val (e, eBytes) = graft.plans.Pin.pinSized(
-      edges.select(col("src"), col("dst"), col("ts")))
+    // frame, so its bytes price the whole loop
+    val Pinned(e, eBytes, _) =
+      Pin(edges.select(col("src"), col("dst"), col("ts")))
     var labels = sources.select(col("node")).distinct()
       .withColumn("arrival", startTs.cast(e.schema("ts").dataType))
-      .transform(graft.plans.Pin.pinHinted(_, eBytes))
+      .transform(Pin(_, eBytes).df)
     for (_ <- 1 to rounds) {
       val relax = labels
         .join(e, labels("node") === e("src") &&
@@ -59,7 +60,7 @@ object TemporalReach {
           // engines then agree on one-sided-null merges by construction
           least(coalesce(col("arrival"), col("arr2")),
             coalesce(col("arr2"), col("arrival"))).as("arrival"))
-        .transform(graft.plans.Pin.pinHinted(_, eBytes))
+        .transform(Pin(_, eBytes).df)
     }
     labels
   }

@@ -51,12 +51,12 @@ object Triangles {
       .filter(col("u") =!= col("v")
         && col("u").isNotNull && col("v").isNotNull)
       .distinct()
-      .transform(graft.plans.Pin.pin)
+      .transform(graft.plans.Pin(_).df)
 
     val deg = e.select(col("u").as("x"))
       .unionAll(e.select(col("v").as("x")))
       .groupBy(col("x")).agg(count(lit(1)).as("d"))
-      .transform(graft.plans.Pin.pin)
+      .transform(graft.plans.Pin(_).df)
 
     // orient by (degree, id): src ≺ dst. The degree join is two hash
     // joins against a node-cardinality table.

@@ -1,8 +1,14 @@
 package graft.plans
 
+import org.apache.spark.{SparkEnv, TaskContext}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.storage.{RDDBlockId, StorageLevel}
+
+/** A materialized [[Pin]]: the frame, its serialized footprint (measured,
+  * or the caller's hint) and its row count. */
+final case class Pinned[T](df: Dataset[T], bytes: Long, rows: Long)
 
 /** Spill-safe lineage pin for loop-invariant and per-round frames,
   * with a MEASURED storage-level tier.
@@ -28,38 +34,39 @@ import org.apache.spark.storage.StorageLevel
   * regardless of the frame's true size, which is unknowable before
   * materialization; a Catalyst estimate would be a guess that joins
   * inflate multiplicatively and compression deflates), then the ACTUAL
-  * cached bytes are read from the block manager's storage info. A
+  * cached bytes are read from the block managers that store them. A
   * frame under the small-frame budget re-pins DESERIALIZED from the
   * serialized copy (one cheap in-memory pass — by construction only
   * ever paid on small frames) and the serialized copy is dropped;
   * supersteps then re-read row objects at zero decode cost. A frame
   * over the budget stays serialized — the sf10 OOM fix intact.
   *
-  * Budget: `spark.graft.pin.smallBytes` if set, else
-  * min(heap/32, 1 GiB) — at the bench's 32 GiB heap every sf0.1/sf1
-  * graph frame (≤ ~300 MB serialized) tiers deserialized while the
-  * sf10 117M-edge frame (multi-GB serialized) stays SER; at the
-  * 4 GiB MemStress heap the budget shrinks to 128 MB, so constrained
-  * heaps keep the spill-safe form for everything that matters.
+  * Budget: min(heap/32, 1 GiB) — at the bench's 32 GiB heap every
+  * sf0.1/sf1 graph frame (≤ ~300 MB serialized) tiers deserialized
+  * while the sf10 117M-edge frame (multi-GB serialized) stays SER; at
+  * the 4 GiB MemStress heap the budget shrinks to 128 MB, so
+  * constrained heaps keep the spill-safe form for everything that
+  * matters.
   *
   * A THIRD tier (round 12) covers the memory-HOSTILE end: frames
-  * whose serialized footprint exceeds `spark.graft.pin.diskOnlyBytes`
-  * (default heap/8) re-pin DISK_ONLY, because the SER form's
-  * disk-spilled blocks are re-INFLATED wholesale on every re-read
-  * (`maybeCacheDiskBytesInMemory`) and 32 concurrent readers of a
-  * multi-GB pin OOM a constrained heap — see [[diskOnlyBytes]] for
-  * the measured failure.
+  * whose serialized footprint reaches heap/8 re-pin DISK_ONLY, because
+  * the SER form's disk-spilled blocks are re-INFLATED wholesale on
+  * every re-read (`maybeCacheDiskBytesInMemory`) and 32 concurrent
+  * readers of a multi-GB pin OOM a constrained heap — see
+  * [[diskOnlyBytes]] for the measured failure.
   *
-  * Every iterative operator (PageRank, HITS, CC, SCC, k-core,
-  * label-prop, Bellman–Ford, reachability, temporal reach) and every
+  * Two calls: [[apply]] materializes (one job, like an eager
+  * checkpoint, plus the tier re-pin when it measures) and returns the
+  * frame with its bytes and row count; [[deferred]] truncates the plan
+  * at once and leaves the blocks to its first reader. Every iterative
+  * operator (PageRank, HITS, CC, SCC, k-core, label-prop,
+  * Bellman–Ford, reachability, temporal reach) and every
   * boundary-pinning materialization in `plans.Scale` pins through
   * here, so the storage-level decision lives in one place. */
 object Pin {
 
-  private def smallBytes(df: Dataset[_]): Long =
-    df.sparkSession.conf.getOption("spark.graft.pin.smallBytes")
-      .map(_.toLong)
-      .getOrElse(math.min(Runtime.getRuntime.maxMemory / 32, 1L << 30))
+  private def smallBytes: Long =
+    math.min(Runtime.getRuntime.maxMemory / 32, 1L << 30)
 
   /** Threshold above which a pin drops the MEMORY half entirely
     * (DISK_ONLY). Measured failure mode (round 12, sf10 under an
@@ -77,101 +84,84 @@ object Pin {
     * to have spilled anyway (> heap/8 serialized) serves strictly
     * safer from disk, at sequential-read cost the superstep loop
     * already paid once per round under SER. */
-  private def diskOnlyBytes(df: Dataset[_]): Long =
-    df.sparkSession.conf.getOption("spark.graft.pin.diskOnlyBytes")
-      .map(_.toLong)
-      .getOrElse(Runtime.getRuntime.maxMemory / 8)
+  private def diskOnlyBytes: Long = Runtime.getRuntime.maxMemory / 8
 
-  def pin[T](df: Dataset[T]): Dataset[T] = pinSized(df)._1
-
-  /** AUTO pin that also RETURNS the measured serialized footprint
-    * (Long.MaxValue when it could not be read — treated as big), so an
-    * operator can derive the level of its DEPENDENT pins from one
-    * measurement instead of paying the SER-first re-pin on every
-    * frame: an iterative operator measures its root edge frame once
-    * and pins every loop frame (⊆ the root by construction) through
-    * [[pinHinted]] in a single materialization. */
-  def pinSized[T](df: Dataset[T]): (Dataset[T], Long) = {
-    val (p, bytes, _) = pinSizedCounted(df)
-    (p, bytes)
-  }
-
-  /** [[pinSized]] that also returns the frame's ROW COUNT for free:
-    * the eager `localCheckpoint`'s internal materialization job IS a
-    * count over the marked RDD (`Dataset.checkpoint` runs
-    * `internalRdd.count()` when eager) — running the same count at
-    * Dataset level keeps the scalar, so operators that previously
-    * paid pin-then-count as two serialized driver actions
-    * (`KCore.kCore`, `Cluster.connectedComponents`) pay one
-    * (guide §5: the driver should do almost no work — and almost no
-    * WAITING either; each extra action is a full schedule round-trip
-    * that amortizes to zero at scale but dominates small inputs). */
-  def pinSizedCounted[T](df: Dataset[T]): (Dataset[T], Long, Long) = {
-    val ser = df.localCheckpoint(false, StorageLevel.MEMORY_AND_DISK_SER)
-    val n = ser.count() // materializes the SER pin AND counts, one job
-    // the checkpointed Dataset's plan is a LogicalRDD over the cached
-    // RDD — its id keys the block manager's storage info, giving the
-    // frame's REAL footprint (mem + any spilled disk bytes)
-    val pinnedRdd = ser.queryExecution.analyzed.collectFirst {
-      case l: LogicalRDD => l.rdd
-    }
-    val bytes = pinnedRdd.flatMap { r =>
-      ser.sparkSession.sparkContext.getRDDStorageInfo
-        .find(_.id == r.id).map(i => i.memSize + i.diskSize)
-    }
-    if (bytes.exists(_ <= smallBytes(ser))) {
-      val deser = ser.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK)
-      pinnedRdd.foreach(_.unpersist(blocking = false))
-      (deser, bytes.get, n)
-    } else if (bytes.getOrElse(Long.MaxValue) >= diskOnlyBytes(ser)) {
-      // memory-hostile frame: one more serialize pass re-pins it
-      // DISK_ONLY (see diskOnlyBytes — the SER form's disk-spill
-      // re-inflation OOMs constrained heaps on re-read)
-      val disk = ser.localCheckpoint(true, StorageLevel.DISK_ONLY)
-      pinnedRdd.foreach(_.unpersist(blocking = false))
-      (disk, bytes.getOrElse(Long.MaxValue), n)
-    } else (ser, bytes.getOrElse(Long.MaxValue), n)
-  }
-
-  private def levelFor(df: Dataset[_], hintBytes: Long): StorageLevel =
-    if (hintBytes <= smallBytes(df)) StorageLevel.MEMORY_AND_DISK
-    else if (hintBytes >= diskOnlyBytes(df)) StorageLevel.DISK_ONLY
+  private def levelFor(bytes: Long): StorageLevel =
+    if (bytes <= smallBytes) StorageLevel.MEMORY_AND_DISK
+    else if (bytes >= diskOnlyBytes) StorageLevel.DISK_ONLY
     else StorageLevel.MEMORY_AND_DISK_SER
 
-  /** ONE-SHOT pin at the level a frame of `hintBytes` serialized size
-    * warrants — no SER-first measurement pass. For frames BOUNDED by
-    * an already-measured sibling: every per-round frame of an
-    * iterative operator is at most nodes ⊆ edges, so the root edge
-    * frame's [[pinSized]] measurement prices the whole loop. The hint
-    * errs conservative at scale (a multi-GB edge frame keeps every
-    * loop frame serialized — the sf10-OOM-safe form); under the budget
-    * it recovers the zero-decode re-reads the superstep family lives
-    * on. */
-  def pinHinted[T](df: Dataset[T], hintBytes: Long): Dataset[T] =
-    df.localCheckpoint(true, levelFor(df, hintBytes))
+  /** The RDD behind a locally checkpointed Dataset: its plan is a
+    * `LogicalRDD` leaf over the marked RDD. */
+  private def checkpointed(d: Dataset[_]): RDD[_] =
+    d.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd }.get
 
-  /** [[pinHinted]] fused with the count its caller was about to pay a
-    * SECOND driver action for: the pin is marked LAZY and the
-    * materialization job is the Dataset-level `count()` — exactly the
-    * job the eager form runs internally and discards. One action where
-    * pin-then-count/isEmpty chains paid two (guide §5; the convergence
-    * tests of KCore/Reachability/escalating-ANN are the callers). */
-  def pinCountHinted[T](df: Dataset[T], hintBytes: Long): (Dataset[T], Long) = {
-    val d = df.localCheckpoint(false, levelFor(df, hintBytes))
-    (d, d.count())
-  }
+  /** Materializing pin. Counting the checkpointed RDD fills its blocks
+    * in one job — the job an eager `localCheckpoint` runs internally —
+    * and keeps the row count, where a `Dataset.count()` would plan its
+    * own aggregate exchange on top (one more job).
+    *
+    * With a `hintBytes` ≥ 0 the frame pins once at the level a frame
+    * of that serialized size warrants — for frames BOUNDED by an
+    * already-measured sibling: every per-round frame of an iterative
+    * operator is at most nodes ⊆ edges, so the root edge frame's
+    * measurement prices the whole loop. The hint errs conservative at
+    * scale (a multi-GB edge frame keeps every loop frame serialized —
+    * the sf10-OOM-safe form); under the budget it recovers the
+    * zero-decode re-reads the superstep family lives on.
+    *
+    * Without one (the default; any negative value) the frame pins
+    * serialized, and the same job sums its real footprint (memory plus
+    * any spilled disk bytes): each task reads the size of the block it
+    * just stored from its own block manager. The driver's
+    * `getRDDStorageInfo` cannot serve here — the listener bus feeds it
+    * asynchronously, so right after the job it may not list the blocks
+    * yet, and it omits an RDD with no cached bytes (an empty frame);
+    * either way a small frame would price as unreadable and re-pin
+    * DISK_ONLY. A frame outside the SER tier re-pins at its level in
+    * one more pass. */
+  def apply[T](df: Dataset[T], hintBytes: Long = -1L): Pinned[T] =
+    if (hintBytes >= 0) {
+      val d = deferred(df, hintBytes)
+      Pinned(d, hintBytes, checkpointed(d).count())
+    } else {
+      val ser = df.localCheckpoint(false, StorageLevel.MEMORY_AND_DISK_SER)
+      val rdd = checkpointed(ser)
+      val id = rdd.id
+      val parts = ser.sparkSession.sparkContext.runJob(rdd,
+        (ctx: TaskContext, it: Iterator[_]) => {
+          val rows = it.size.toLong
+          val stored = SparkEnv.get.blockManager
+            .getStatus(RDDBlockId(id, ctx.partitionId()))
+          (rows, stored.map(s => s.memSize + s.diskSize).getOrElse(0L))
+        })
+      val rows = parts.map(_._1).sum
+      val bytes = parts.map(_._2).sum
+      val level = levelFor(bytes)
+      if (level == StorageLevel.MEMORY_AND_DISK_SER) Pinned(ser, bytes, rows)
+      else {
+        val repinned = ser.localCheckpoint(true, level)
+        rdd.unpersist(blocking = false)
+        Pinned(repinned, bytes, rows)
+      }
+    }
 
-  /** LAZY hinted pin: plan truncation is immediate (the returned plan
-    * is the same `LogicalRDD` leaf the eager form yields) but the
-    * blocks materialize inside the FIRST consuming job instead of a
-    * dedicated driver action. ONLY for frames whose consumers are
-    * ordered — the first consumer computes every partition before any
-    * sibling reads it (a broadcast subtree feeding the other readers,
-    * a count, the single join probe of the next superstep). Two
-    * genuinely CONCURRENT first readers (independent AQE stages) would
-    * duplicate the subtree's compute — the eager form remains the
-    * right call there (the per-round pins of SCC/LabelProp, whose two
-    * round-k+1 references are independent exchange stages). */
-  def pinLazyHinted[T](df: Dataset[T], hintBytes: Long): Dataset[T] =
-    df.localCheckpoint(false, levelFor(df, hintBytes))
+  /** LAZY pin at the level a frame of `hintBytes` serialized size
+    * warrants: plan truncation is immediate (the returned plan is the
+    * same `LogicalRDD` leaf [[apply]] yields) but the blocks
+    * materialize inside the FIRST consuming job instead of a dedicated
+    * driver action. (Exchanges below the frame still run at the call:
+    * adaptive execution materializes them when the pin is planned.)
+    *
+    * Contract — a SINGLE FIRST READER: the first consumer must compute
+    * every partition before any sibling reads it (a broadcast subtree
+    * feeding the other readers, a count, the single join probe of the
+    * next superstep). Two genuinely CONCURRENT first readers
+    * (independent AQE stages, two broadcast futures fired at plan
+    * construction) each recompute the untruncated subtree, and nested
+    * across loop rounds that recompute grows exponentially — the HITS
+    * storm of round 13. Use [[apply]] there (SCC's per-round flag pins,
+    * whose two round-k+1 references are independent exchange stages). */
+  def deferred[T](df: Dataset[T], hintBytes: Long): Dataset[T] =
+    df.localCheckpoint(false, levelFor(hintBytes))
 }

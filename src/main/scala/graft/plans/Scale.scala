@@ -518,7 +518,7 @@ object Scale {
     // leaking one cached frame per library call
     val local = parted
       .withColumn("__local", sum(col(valueCol)).over(wLocal))
-      .transform(graft.plans.Pin.pin)
+      .transform(graft.plans.Pin(_).df)
     val wOff = Window.orderBy(col("__pid"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val offsets = local.groupBy(col("__pid"))
@@ -553,7 +553,7 @@ object Scale {
       .withColumn("__lrk", row_number().over(wLocal).cast("long"))
       .withColumn("__lsum", sum(col(valueCol)).over(
         wLocal.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .transform(graft.plans.Pin.pin) // boundary pin + auto-cleaned, per prefixSum
+      .transform(graft.plans.Pin(_).df) // boundary pin + auto-cleaned, per prefixSum
     val wOff = Window.orderBy(col("__pid"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val offsets = local.groupBy(col("__pid"))
@@ -593,7 +593,7 @@ object Scale {
     val wLocal = Window.partitionBy(col("__pid")).orderBy(orderCols: _*)
     val local = parted
       .withColumn("__local", row_number().over(wLocal).cast("long"))
-      .transform(graft.plans.Pin.pin) // boundary pin + auto-cleaned, per prefixSum
+      .transform(graft.plans.Pin(_).df) // boundary pin + auto-cleaned, per prefixSum
     // one tiny aggregate carries BOTH the exclusive prefix (rank
     // offset) and the grand total — no separate count job over df
     val wOff = Window.orderBy(col("__pid"))

@@ -422,8 +422,8 @@ object RelationalQueries extends QuerySection {
     // pin once: the hits() result frame is lazy (final assembly joins
     // + last-round normalizations over the pinned half-steps), and the
     // two role filters below would otherwise each re-execute it
-    val out = graft.plans.Pin.pin(
-      graft.operators.Hits.hits(edges, iters = 2))
+    val out = graft.plans.Pin(
+      graft.operators.Hits.hits(edges, iters = 2)).df
     val lbl = when(col("node") % 2 === 0,
         concat(lit("c"), (col("node") / 2).cast("long")))
       .otherwise(concat(lit("s"), ((col("node") - 1) / 2).cast("long")))
@@ -752,7 +752,7 @@ object RelationalQueries extends QuerySection {
     val classes = ErBlocking.nameClasses(Tables.load(s, dir, "part"),
       split(col("p_name"), " ").getItem(0), col("p_name"),
       col("p_partkey"), keepSmallest = 1)
-      .transform(graft.plans.Pin.pin)
+      .transform(graft.plans.Pin(_).df)
     ErBlocking.requireBoundedBlocks(classes, 10000L, "j19_fuzzy_blocked")
     val dist3 = levenshtein(col("a_name"), col("b_name"), 3)
     ErBlocking.classPairs(classes, strict = true)
@@ -764,7 +764,7 @@ object RelationalQueries extends QuerySection {
   private def j19FuzzyBlocked(s: SparkSession, dir: String): DataFrame = {
     val p = Tables.load(s, dir, "part")
     val scored = j19Scored(s, dir)
-      .transform(graft.plans.Pin.pin) // tiny (class grain); consumed by three subtrees
+      .transform(graft.plans.Pin(_).df) // tiny (class grain); consumed by three subtrees
     val nPairs = scored.groupBy(col("block"), col("dist"))
       .agg(sum(col("n_cross")).as("n_pairs"))
     // per (block, dist, name): the largest partner max-key — the strict
@@ -1889,7 +1889,7 @@ object RelationalQueries extends QuerySection {
     val classes = ErBlocking.nameClasses(Tables.load(s, dir, "part"),
       split(col("p_name"), " ").getItem(0), col("p_name"),
       col("p_partkey"), keepSmallest = 4)
-      .transform(graft.plans.Pin.pin)
+      .transform(graft.plans.Pin(_).df)
     ErBlocking.requireBoundedBlocks(classes, 10000L, "j30_jw_linkage")
     ErBlocking.classPairs(classes, strict = false)
       .withColumn("jw", round(JaroWinkler(col("a_name"), col("b_name")), 6))
@@ -1899,7 +1899,7 @@ object RelationalQueries extends QuerySection {
   private def j30JwLinkage(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.ErBlocking
     val scored = j30Scored(s, dir)
-      .transform(graft.plans.Pin.pin) // class grain; feeds the count and the top-k
+      .transform(graft.plans.Pin(_).df) // class grain; feeds the count and the top-k
     val nPairs = scored.groupBy(col("block"))
       .agg(sum(col("n_cross")).as("n_pairs"))
     val w = Window.partitionBy(col("block"))
@@ -1946,7 +1946,7 @@ object RelationalQueries extends QuerySection {
       .groupBy(col("p_name"))
       .agg(count(lit(1)).as("cnt"), min(col("p_partkey")).as("ckey"))
       .withColumn("block", split(col("p_name"), " ").getItem(0))
-      .transform(graft.plans.Pin.pin)
+      .transform(graft.plans.Pin(_).df)
     ErBlocking.requireBoundedBlocks(
       classes.select(col("block"), col("p_name").as("name")),
       10000L, "j34_er_pipeline")
@@ -2561,7 +2561,7 @@ object RelationalQueries extends QuerySection {
       // localCheckpoint materializes once and is ContextCleaner-freed
       // when unreferenced — a persist() would outlive the query in the
       // CacheManager (nobody is left to unpersist a returned plan)
-      .transform(graft.plans.Pin.pin)
+      .transform(graft.plans.Pin(_).df)
     // lower recency is BETTER: rank ascending so quintile 1 = freshest
     val rMap = graft.plans.Scale.globalNtile(
       base.select(col("o_custkey"), col("recency_days")),

@@ -466,7 +466,7 @@ object SimilarityQueries extends QuerySection {
       // eager localCheckpoint, not persist(): same single-materialization
       // guarantee, but the 200-row block is ContextCleaner-freed with
       // the plan instead of leaking a CacheManager entry per call
-      .transform(graft.plans.Pin.pin)
+      .transform(graft.plans.Pin(_).df)
     Ann.rerank(cand, q, e, "embedding", "vec_id", k = 5)
       .join(cand.select(col("query_id"), col("corpus_id"),
         col("rank").as("adc_rank")), Seq("query_id", "corpus_id"))

@@ -352,12 +352,12 @@ object TextQueries extends QuerySection {
     // count-table aggregate AND the per-doc bigram occurrences — left
     // unpinned, the final job re-tokenized the whole corpus for `bg`
     // (the r12 residual: the old window form's Exchange was being
-    // reused where the narrow form re-derived). The pin+count fusion
-    // makes its materialization the usual single action (guide §5).
+    // reused where the narrow form re-derived). The pin's
+    // materialization is the usual single action (guide §5).
     // widen the raw single-row-group scan before the per-token work
     // (Scale.widen is a no-op at production scan parallelism) — every
     // downstream stage here was otherwise one task on a 32-core box
-    val (tk, tkBytes, _) = graft.plans.Pin.pinSizedCounted(
+    val graft.plans.Pinned(tk, tkBytes, _) = graft.plans.Pin(
       graft.plans.Scale.widen(docs(s, dir)).select(col("doc_id"),
         TextAnalysis.tokens(col("text")).as("__toks")))
     val bg = tk.select(col("doc_id").as("id"),
@@ -377,7 +377,7 @@ object TextQueries extends QuerySection {
     val cnt = tk.select(explode(concat(col("__toks"),
         TextAnalysis.shinglesOfTokens(col("__toks"), 2))).as("g"))
       .groupBy(col("g")).agg(count(lit(1)).as("c"))
-      .transform(graft.plans.Pin.pinLazyHinted(_, tkBytes))
+      .transform(graft.plans.Pin.deferred(_, tkBytes))
     val cAb = cnt.filter(col("g").contains(" "))
       .select(col("g").as("shingle"), col("c").as("c_ab"))
     val cA = cnt.filter(!col("g").contains(" "))

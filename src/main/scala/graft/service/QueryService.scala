@@ -170,16 +170,6 @@ final class QueryService(spark: SparkSession, sfDir: String) {
       graft.similarity.Ann.ivfIndexTopKEscalating(spark, queries,
         vecCol, idCol, indexPath, k, nprobe, where))
 
-  /** MMR-diversified search ([[graft.similarity.Ann.mmrTopK]]): top-k
-    * balancing relevance against redundancy — the serving shape for
-    * retrieval-augmented sampling. */
-  def vectorSearchDiverse(queries: DataFrame, corpus: DataFrame,
-      k: Int = 10, lambdaRel: Double = 0.7, candK: Int = 50,
-      vecCol: String = "embedding", idCol: String = "vec_id"): Response =
-    Response("success", "mmr",
-      graft.similarity.Ann.mmrTopK(queries, corpus, vecCol, idCol, k,
-        lambdaRel, candK))
-
   /** HITS hub/authority centrality over an edge frame
     * ([[graft.operators.Hits]]) — long-running: batch pool. */
   def graphHits(edges: DataFrame, iters: Int = 2): Response =
@@ -187,23 +177,6 @@ final class QueryService(spark: SparkSession, sfDir: String) {
       Response("success", "hits", graft.operators.Hits.hits(edges, iters),
         QueryService.BatchPool)
     }
-
-  /** Personalized PageRank from a seed set
-    * ([[graft.operators.PageRank.personalizedPageRank]]). */
-  def graphPersonalizedPageRank(edges: DataFrame, seeds: DataFrame,
-      iters: Int = 3, damping: Double = 0.85): Response =
-    inPool(QueryService.BatchPool) {
-      Response("success", "ppr",
-        graft.operators.PageRank.personalizedPageRank(edges, seeds,
-          iters, damping), QueryService.BatchPool)
-    }
-
-  /** MP4 container metadata probe
-    * ([[graft.multimodal.Multimodal.probeMp4Meta]]): duration /
-    * dimensions / codecs from box bytes alone. */
-  def mp4Meta(media: DataFrame): Response =
-    Response("success", "mp4_meta",
-      graft.multimodal.Multimodal.probeMp4Meta(media))
 
   /** Per-track MP4 sample-table stats
     * ([[graft.multimodal.Multimodal.probeMp4Tracks]]): fps / bitrate /

@@ -631,12 +631,12 @@ object Ann {
     var remaining = queries
     val rounds = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var exhausted = false
-    // the round-1 result pin is MEASURED (pinSized); later frames reuse
-    // its bytes as the tier hint, so each subsequent round pays zero
-    // dedicated pin actions: the result pin is LAZY (materialized by
-    // the starved-set count job that reads it through `satisfied`) and
-    // the starved-set pin is fused with its emptiness count
-    // (Pin.pinCountHinted) — 5 driver actions per round before, 1 now.
+    // the round-1 result pin is MEASURED; later frames reuse its bytes
+    // as the tier hint, so each subsequent round pays zero dedicated
+    // pin actions: the result pin is deferred (materialized by the
+    // starved-set count job that reads it through `satisfied`) and the
+    // starved-set pin's row count is its emptiness test — 5 driver
+    // actions per round before, 1 now.
     var resBytes = -1L
     while (!exhausted) {
       val raw = ivfIndexTopK(spark, remaining, vecCol, idCol, path, k,
@@ -647,8 +647,8 @@ object Ann {
       val res =
         if (last) raw
         else if (resBytes < 0) {
-          val (p, b) = graft.plans.Pin.pinSized(raw); resBytes = b; p
-        } else graft.plans.Pin.pinLazyHinted(raw, resBytes)
+          val p = graft.plans.Pin(raw); resBytes = p.bytes; p.df
+        } else graft.plans.Pin.deferred(raw, resBytes)
       if (last) { rounds += res; exhausted = true }
       else {
         val satisfied = res.groupBy(col("query_id"))
@@ -667,7 +667,7 @@ object Ann {
         // re-executes nothing of rounds 1..r-1.
         val satAsIdCol = broadcast(
           satisfied.withColumnRenamed("query_id", idCol))
-        val (next, nNext) = graft.plans.Pin.pinCountHinted(
+        val graft.plans.Pinned(next, _, nNext) = graft.plans.Pin(
           remaining.join(satAsIdCol, Seq(idCol), "left_anti"), resBytes)
         if (nNext == 0) { rounds += res; exhausted = true }
         else {

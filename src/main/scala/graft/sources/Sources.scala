@@ -340,8 +340,4 @@ object Sources {
 
   def tableSchema(df: DataFrame): Seq[(String, String)] =
     df.schema.fields.map(f => f.name -> f.dataType.simpleString).toSeq
-
-  /** Distinct field keys of a long-format measurement table. */
-  def measurementFields(df: DataFrame, fieldCol: String): Seq[String] =
-    df.select(fieldCol).distinct().collect().map(_.getString(0)).toSeq.sorted
 }

@@ -81,11 +81,6 @@ object TextAnalysis {
       size(regexp_extract_all(c, lit("[.,;:!?'\"()-]"), lit(0))).cast("double")
         / length(c)).otherwise(0.0)
 
-  def upperRatio(c: Column): Column =
-    when(length(c) > 0,
-      size(regexp_extract_all(c, lit("[A-Z]"), lit(0))).cast("double") /
-        length(c)).otherwise(0.0)
-
   def digitRatio(c: Column): Column =
     when(length(c) > 0,
       size(regexp_extract_all(c, lit("[0-9]"), lit(0))).cast("double") /
@@ -399,25 +394,6 @@ object TextAnalysis {
           explode(array_distinct(shinglesOfTokens(col("__toks"), n)))
             .as("shingle"))
 
-  /** [[fingerprint]] as a table op: (id, fp) for every input row, empty
-    * array when the document has fewer than n tokens. */
-  def fingerprintTable(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, k: Int = 4): DataFrame = {
-    // tokenize once per doc into a materialized array column, build the
-    // shingle array over that attribute (linear, not quadratic), explode,
-    // then md5 + min-k aggregate run in codegen — no window
-    // exchange/sort, one shuffle on the doc id
-    val fps = df
-      .select(col(idCol).as("id"), tokens(col(textCol)).as("__toks"))
-      .select(col("id"), explode(shinglesOfTokens(col("__toks"), n)).as("shingle"))
-      .select(col("id"), md5(col("shingle")).as("h"))
-      .groupBy(col("id"))
-      .agg(slice(array_sort(collect_list(col("h"))), 1, k).as("fp"))
-    df.select(col(idCol).as("id")).join(fps, Seq("id"), "left")
-      .select(col("id"),
-        coalesce(col("fp"), array().cast("array<string>")).as("fp"))
-  }
-
   /** Cross-document boilerplate mining: word n-grams that recur in at
     * least `minFrac` of a GROUP's documents (same site/source/template)
     * — headers, footers, nav text, license blurbs. The training-data
@@ -501,7 +477,7 @@ object TextAnalysis {
     * is a 1-row collect, and the merge rewrite is a pure codegen
     * fold (`functions.aggregate` with an (out, pending) accumulator —
     * the pending slot IS the greedy lookahead, no UDF). Each
-    * iteration re-pins the vocab ([[graft.plans.Pin.pin]]) so lineage
+    * iteration re-pins the vocab ([[graft.plans.Pin]]) so lineage
     * stays flat across merges. This is why corpus-scale BPE trainers
     * operate on word-frequency tables: 100 TB of text costs one
     * tokenize pass, the loop costs |vocab| per merge. */
@@ -517,7 +493,7 @@ object TextAnalysis {
       .groupBy(col("w")).agg(count(lit(1)).as("f"))
       .withColumn("syms", transform(sequence(lit(1), length(col("w"))),
         i => col("w").substr(i, lit(1))))
-      .transform(graft.plans.Pin.pin)
+      .transform(graft.plans.Pin(_).df)
     def st(out: Column, pend: Column): Column =
       struct(out.as("out"), pend.cast("string").as("pend"))
     val merges =
@@ -559,7 +535,7 @@ object TextAnalysis {
             acc => when(acc.getField("pend").isNull, acc.getField("out"))
               .otherwise(concat(acc.getField("out"),
                 array(acc.getField("pend"))))))
-          .transform(graft.plans.Pin.pin)
+          .transform(graft.plans.Pin(_).df)
         it += 1
       }
     }

@@ -83,9 +83,6 @@ case class Cleaning(coerce: Map[String, String] = Map.empty,
     }
     stamp(coerced, "_cleaned_at")
   }
-
-  def withInferred(df: DataFrame): DataFrame =
-    Cleaning(Cleaning.inferCoercions(df), stamp)(df)
 }
 
 object Cleaning {

@@ -92,7 +92,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       }: Expression))
     ext.injectOptimizerRule(_ => DeferExpensiveProjection)
     ext.injectOptimizerRule(_ => MvRewrite)
-    ext.injectOptimizerRule(_ => EliminateRelyJoin)
     ext.injectPlannerStrategy(_ => TopKPerGroupStrategy)
   }
 }

@@ -19,16 +19,19 @@ import org.apache.spark.sql.internal.SQLConf
   * through `SparkSessionExtensions.injectPlannerStrategy` — grouped
   * top-k without sorting the full input the way Spark's own plan does.
   *
-  * `row_number() OVER (PARTITION BY g ORDER BY o) <= k` plans as
-  * Exchange(g) → **Sort(g, o) of every row** → Window → Filter: the
-  * sort is O(n log n) per partition, buffers the full partition, and
-  * every input row crosses the exchange. This operator keeps a bounded
-  * k-heap per group in a PARTIAL pass before the exchange — O(n log k),
-  * no sort buffer over the raw input — cutting each partition's
-  * contribution to ≤ k rows per group, so the shuffle moves
-  * ≤ k·partitions rows per group rather than all of them. That
-  * partial-combine is the piece no window rewrite can express —
-  * windows are all-or-nothing per partition key.
+  * Spark 4.1 plans `row_number() OVER (PARTITION BY g ORDER BY o) <= k`
+  * with `InferWindowGroupLimit`: a partial `WindowGroupLimit` below the
+  * exchange already cuts each partition to ≤ k rows per group (see
+  * `plans.Scale.groupedTopK`), so both forms shuffle the same bound.
+  * The difference is the partial pass itself: the stock partial limit
+  * needs a local **Sort(g, o) of every input row** first — O(n log n),
+  * buffering the whole partition — where this operator keeps a bounded
+  * k-heap per group (O(n log k), no sort over the raw input). Measured
+  * on a 4-vCPU host (`local[4]`, medians, this operator vs stock):
+  * events top-5 per type at sf0.1 126 vs 264 ms; 20M rows in 8 groups
+  * 0.52 vs 8.3 s; 20M rows in 2M groups 18.0 vs 6.5 s — at high group
+  * cardinality the per-group heap map costs more than the sort it
+  * saves, and stock wins.
   *
   * Memory contract (ENFORCED, not just documented):
   *  - the partial pass caps its heap state at

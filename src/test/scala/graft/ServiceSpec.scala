@@ -214,10 +214,10 @@ class ServiceSpec extends SparkSpec {
       idxPath, nlist = 4, attrCols = Seq("label"))
     val queries = e.filter(col("vec_id") < 4)
     val media = graft.multimodal.SyntheticImages.mp4Table(spark, sf0001,
-      n = 24).transform(graft.plans.Pin.pin)
+      n = 24).transform(graft.plans.Pin(_).df)
     val events = Tables.load(spark, sf0001, "events")
     val lines = graft.sources.LineProtocol.serialize(events, "events",
-      "ts", Seq("event_type")).transform(ds => graft.plans.Pin.pin(ds))
+      "ts", Seq("event_type")).transform(ds => graft.plans.Pin(ds).df)
     // single-threaded ground truth
     val wantSearch = svc.vectorSearch(queries, idxPath, k = 3,
       nprobe = 2, where = Some(col("label") >= 0)).count
@@ -267,10 +267,10 @@ class ServiceSpec extends SparkSpec {
     import java.util.concurrent.{Executors, TimeUnit}
     val media = graft.multimodal.SyntheticImages
       .mp4AsciiTable(spark, sf0001, n = 24)
-      .transform(graft.plans.Pin.pin)
+      .transform(graft.plans.Pin(_).df)
     val events = Tables.load(spark, sf0001, "events")
     val docs = graft.sources.ExtendedJson.serialize(events)
-      .transform(ds => graft.plans.Pin.pin(ds))
+      .transform(ds => graft.plans.Pin(ds).df)
     val wantSamples = svc.mp4Samples(media).count
     val wantDocs = svc.ingestExtendedJson(docs, events.schema).count
     assert(wantSamples > 0 && wantDocs == events.count())
