@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every judged query against
@@ -63,12 +64,29 @@ import org.apache.spark.sql.SparkSession
   * from the lake's volume, see `calibrateRead`) — because this host's
   * interference comes in all three flavors and each is invisible to
   * the other two probes.
+  *
+  * NAMES MODE (`runMain graft.Bench q1_agg graph_scc …`): runs only the
+  * named queries for `SPARK_GRAFT_REPS` passes and, per query, prints
+  * its formatted physical plan once and then the per-job table of the
+  * warm pass (see `profile`). It writes no `BENCH_FULL.json` and no
+  * `BENCH_PIN_PREV.json`.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
+    // shuffle files / block store / spill on the fast scratch volume
+    // (same SPARK_GRAFT_SCRATCH → /dev/shm → tmpdir resolution as the
+    // query-surface scratch; guide §6). MemStress deliberately does
+    // NOT do this — its evidence is disk-spill behavior.
+    val spark = Session("graft-bench", Map("spark.local.dir" ->
+      graft.etl.Utils.tempDir("graft_local").toString))
+    if (args.nonEmpty) {
+      profile(spark, sfDir, reps, args.toSeq)
+      spark.stop()
+      return
+    }
+    val cpus = Session.cores(spark.sparkContext.master)
     // PIN HYGIENE: every run overwrites BENCH_FULL.json, so a noisy or
     // subset run would silently destroy the committed pin's
     // working-tree twin (observed round 10: the driver's contended
@@ -85,23 +103,6 @@ object Bench {
         ()
       }
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      // shuffle files / block store / spill on the fast scratch volume
-      // (same SPARK_GRAFT_SCRATCH → /dev/shm → tmpdir resolution as the
-      // query-surface scratch; guide §6). MemStress deliberately does
-      // NOT do this — its evidence is disk-spill behavior.
-      .config("spark.local.dir",
-        graft.etl.Utils.tempDir("graft_local").toString)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions",
-        "org.apache.spark.sql.graftx.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // DOCUMENTED LOG FILTER (VERDICT r11 #6): WindowExec's "No
     // Partition Defined … moving all data to a single partition"
     // warning is demoted to ERROR for THIS benchmark JVM only. Every
@@ -116,9 +117,8 @@ object Bench {
     // exchange + a follow-on range exchange on 4 judged plans
     // (PlanGate: shuffles 2→4 on q_cumulative_distinct), which is the
     // wrong trade for silencing a cosmetic log line. Real global-
-    // window regressions stay caught by graft.Audit (flags global
-    // windows over non-aggregate cardinality) and graft.PlanGate
-    // (flags window/shuffle-count growth per query).
+    // window regressions stay caught by graft.PlanGate (its
+    // global-window flag and per-query window/shuffle-count budget).
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
@@ -592,6 +592,63 @@ object Bench {
       System.err.println(s"[bench] ${failed.size} queries failed: " +
         failed.mkString(", "))
       sys.exit(2)
+    }
+  }
+
+  /** Names mode: for each query, its formatted physical plan once, then
+    * every Spark job of the warm (last) of `reps` passes into the noop
+    * sink — start offset, duration, gap since the previous job, stage
+    * task totals and job description — so serialized driver actions
+    * and their relative weight are visible without the UI. Every pass
+    * starts from an empty cache. */
+  private def profile(spark: SparkSession, sfDir: String, reps: Int,
+      names: Seq[String]): Unit = {
+    case class Job(id: Int, start: Long, var end: Long = -1L,
+      var tasks: Int = 0, var taskMs: Long = 0L, desc: String = "")
+    val jobs = scala.collection.concurrent.TrieMap.empty[Int, Job]
+    val stageToJob = scala.collection.concurrent.TrieMap.empty[Int, Int]
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs(e.jobId) = Job(e.jobId, e.time,
+          desc = Option(e.properties.getProperty("spark.job.description"))
+            .getOrElse(""))
+        e.stageIds.foreach(s => stageToJob(s) = e.jobId)
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        jobs.get(e.jobId).foreach(_.end = e.time)
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        stageToJob.get(e.stageInfo.stageId).flatMap(jobs.get).foreach { j =>
+          j.tasks += e.stageInfo.numTasks
+          j.taskMs += e.stageInfo.taskMetrics.executorRunTime
+        }
+    })
+
+    names.foreach { name =>
+      val fn = SparkEntry.queries(name)
+      println(s"\n========== $name ==========")
+      fn(spark, sfDir).explain("formatted")
+      (1 to reps).foreach { rep =>
+        jobs.clear(); stageToJob.clear()
+        spark.sparkContext.getPersistentRDDs.values
+          .foreach(_.unpersist(blocking = false))
+        spark.catalog.clearCache()
+        val t0 = System.nanoTime()
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        val wall = (System.nanoTime() - t0) / 1e9
+        Thread.sleep(300) // let the listener bus drain
+        if (rep == reps) { // print the warm pass only
+          println(f"\n===== $name pass$rep wall=$wall%.3f s jobs=${jobs.size} =====")
+          val t0ms = jobs.values.map(_.start).minOption.getOrElse(0L)
+          var lastEnd = 0L
+          jobs.values.toSeq.sortBy(_.start).foreach { j =>
+            val gap = j.start - t0ms - lastEnd
+            println(f"  job ${j.id}%3d +${(j.start - t0ms) / 1000.0}%6.2fs " +
+              f"dur=${(j.end - j.start) / 1000.0}%6.3fs gap=${gap / 1000.0}%6.3fs " +
+              f"tasks=${j.tasks}%4d taskTime=${j.taskMs / 1000.0}%7.3fs ${j.desc.take(60)}")
+            lastEnd = j.end - t0ms
+          }
+        }
+      }
     }
   }
 }

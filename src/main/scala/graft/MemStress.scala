@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Constrained-memory evidence: run the heaviest queries under a
   * DELIBERATELY small heap and record per-query spill, proving the
   * engine degrades to disk instead of dying. Every scale claim the
@@ -23,24 +21,14 @@ import org.apache.spark.sql.SparkSession
   * Output: one JSON line per run — per-query secs + memory/disk spill
   * bytes, `n_failed` (an OOM lands there or kills the JVM, either way
   * loud) — also written to MEMSTRESS.json. Uses default
-  * `spark.memory.fraction`; shuffle partitions stay at 32 so the
-  * partition sizing claim ("fits in executor memory at the target SF")
-  * is tested, not tuned around. */
+  * `spark.memory.fraction` and [[Session]]'s shuffle partitions (one
+  * per core) so the partition sizing claim ("fits in executor memory
+  * at the target SF") is tested, not tuned around. */
 object MemStress {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-memstress")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions",
-        "org.apache.spark.sql.graftx.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // no spark.local.dir override: the evidence is disk-spill behavior
+    val spark = Session("graft-memstress")
     val heapMb = Runtime.getRuntime.maxMemory() / 1048576
     // JVM/codegen warmup (Bench's protocol) so secs aren't JIT-noise;
     // the spill numbers are unaffected either way

@@ -27,6 +27,10 @@ import org.apache.spark.sql.SparkSession
   * at deploy. Broadcast-count changes print as notices only (AQE
   * legitimately flips shuffle joins to broadcast at small SF).
   *
+  * It also fails on two absolute plan-hygiene [[flags]], whatever the
+  * budget says, and on a budgeted query that no longer builds (missing
+  * from the catalog, or throwing while it plans).
+  *
   * Run: `sbt "runMain graft.PlanGate"`        — gate
   *      `sbt "runMain graft.PlanGate update"` — rewrite PLAN_BUDGET.json
   */
@@ -46,38 +50,98 @@ object PlanGate {
       count(plan, "BroadcastNestedLoopJoin"),
     window = count(plan, "\\bWindow(GroupLimit)? \\["))
 
-  private def fingerprints(spark: SparkSession): Map[String, Fp] = {
+  private val GlobalWindow = "Window \\[[^\\]]*\\], \\[\\]".r
+
+  /** Plan shapes that don't survive scale, flagged in any query:
+    *
+    *  - `CartesianProduct`: an unintended cross join (the theta join is
+    *    supposed to be a BroadcastNestedLoopJoin over an aggregated
+    *    side, never a cartesian of two big inputs);
+    *  - `GlobalWindow`: a window function with an EMPTY partition spec —
+    *    the whole dataset sorts on one task.
+    *
+    * `Exchange SinglePartition` is NOT flagged: global scalar aggregates
+    * legitimately converge their per-task partial rows (one row each)
+    * on a single partition — that's bytes, not data. */
+  def flags(plan: String): Seq[String] = Seq(
+    "CartesianProduct" -> plan.contains("CartesianProduct"),
+    "GlobalWindow" -> GlobalWindow.findFirstIn(plan).isDefined
+  ).collect { case (flag, true) => flag }
+
+  /** One gate verdict line: `FAIL`, `NEW` or `note`. */
+  final case class Finding(kind: String, name: String, detail: String) {
+    def fails: Boolean = kind == "FAIL"
+    override def toString: String = f"[plangate] $kind%-5s $name: $detail"
+  }
+
+  /** Judges each query's physical plan (`Right`) or planning error
+    * (`Left`) against the budget. A budgeted query with no plan at all
+    * — renamed away or dropped from the catalog — fails like one that
+    * throws. */
+  def judge(budget: Map[String, Fp],
+      plans: Map[String, Either[String, String]]): Seq[Finding] =
+    (budget.keySet ++ plans.keySet).toSeq.sorted.flatMap { name =>
+      (budget.get(name), plans.get(name)) match {
+        case (_, None) =>
+          Seq(Finding("FAIL", name, "does not build: not in the catalog"))
+        case (_, Some(Left(err))) =>
+          Seq(Finding("FAIL", name, s"does not build: $err"))
+        case (budgeted, Some(Right(plan))) =>
+          val f = fingerprint(plan)
+          val fails = budgeted.toSeq.flatMap { b =>
+            Seq(
+              (f.exchange > b.exchange,
+                s"shuffles ${b.exchange}→${f.exchange}"),
+              (f.cartesian > b.cartesian,
+                s"cartesian/nested-loop ${b.cartesian}→${f.cartesian}"),
+              (f.window > b.window, s"windows ${b.window}→${f.window}"))
+              .collect { case (true, msg) => msg }
+          } ++ flags(plan)
+          if (fails.nonEmpty) Seq(Finding("FAIL", name, fails.mkString(", ")))
+          else budgeted match {
+            case None =>
+              Seq(Finding("NEW", name, "not budgeted — re-run update"))
+            case Some(b) if f.broadcast != b.broadcast =>
+              Seq(Finding("note", name,
+                s"broadcasts ${b.broadcast}→${f.broadcast}"))
+            case _ => Nil
+          }
+      }
+    }
+
+  private def plans(
+      spark: SparkSession): Map[String, Either[String, String]] = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    graft.queries.Catalog.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        scala.util.Try {
-          name -> fingerprint(
-            fn(spark, dir).queryExecution.executedPlan.toString)
-        }.toOption // a query that cannot build is Audit/Verify's problem
-    }.toMap
+    graft.queries.Catalog.queries.map { case (name, fn) =>
+      name -> (try Right(fn(spark, dir).queryExecution.executedPlan.toString)
+        catch { case e: Throwable =>
+          Left(String.valueOf(e).linesIterator.nextOption().getOrElse(""))
+        })
+    }
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-plangate")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.extensions",
-        "org.apache.spark.sql.graftx.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session("graft-plangate")
     spark.sparkContext.setLogLevel("ERROR")
-    val current = fingerprints(spark)
+    val current = plans(spark)
+    spark.stop()
 
     if (args.headOption.contains("update")) {
-      val body = current.toSeq.sortBy(_._1).map { case (n, f) =>
+      val broken = current.collect { case (n, Left(err)) => s"$n: $err" }
+      if (broken.nonEmpty) {
+        broken.toSeq.sorted.foreach(b => println(s"[plangate] FAIL  $b"))
+        println(s"[plangate] ${broken.size} queries do not build; " +
+          s"$BudgetFile left unchanged")
+        sys.exit(1)
+      }
+      val body = current.toSeq.sortBy(_._1).collect { case (n, Right(p)) =>
+        val f = fingerprint(p)
         s"""  "$n": {"exchange": ${f.exchange}, "broadcast": ${f.broadcast}, "cartesian": ${f.cartesian}, "window": ${f.window}}"""
       }.mkString("{\n", ",\n", "\n}\n")
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(BudgetFile), body)
       println(s"[plangate] wrote $BudgetFile (${current.size} queries)")
-      spark.stop(); return
+      return
     }
 
     val budgetPath = java.nio.file.Paths.get(BudgetFile)
@@ -91,30 +155,11 @@ object PlanGate {
           e.getValue.get("cartesian").asInt(),
           e.getValue.get("window").asInt())
       }.toMap
-    var bad = 0
-    current.toSeq.sortBy(_._1).foreach { case (name, f) =>
-      budget.get(name) match {
-        case None =>
-          println(s"[plangate] NEW   $name (not budgeted — re-run update)")
-        case Some(b) =>
-          val fails = Seq(
-            (f.exchange > b.exchange,
-              s"shuffles ${b.exchange}→${f.exchange}"),
-            (f.cartesian > b.cartesian,
-              s"cartesian/nested-loop ${b.cartesian}→${f.cartesian}"),
-            (f.window > b.window, s"windows ${b.window}→${f.window}"))
-            .collect { case (true, msg) => msg }
-          if (fails.nonEmpty) {
-            bad += 1
-            println(s"[plangate] FAIL  $name: ${fails.mkString(", ")}")
-          } else if (f.broadcast != b.broadcast) {
-            println(s"[plangate] note  $name: broadcasts " +
-              s"${b.broadcast}→${f.broadcast}")
-          }
-      }
-    }
-    println(s"[plangate] done, $bad regressions")
-    spark.stop()
+    val findings = judge(budget, current)
+    findings.foreach(println)
+    val bad = findings.count(_.fails)
+    println(s"[plangate] done, ${current.count(_._2.isRight)} built, " +
+      s"$bad regressions")
     if (bad > 0) sys.exit(1)
   }
 }

@@ -1,25 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // shuffle/spill on the fast scratch volume, same resolution as
-      // the query-surface scratch (see Utils.scratchBase)
-      .config("spark.local.dir",
-        graft.etl.Utils.tempDir("graft_local").toString)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions",
-        "org.apache.spark.sql.graftx.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // shuffle/spill on the fast scratch volume, same resolution as
+    // the query-surface scratch (see Utils.scratchBase)
+    val spark = Session("graft-verify", Map("spark.local.dir" ->
+      graft.etl.Utils.tempDir("graft_local").toString))
     new java.io.File(outDir).mkdirs()
     // dev-only subset filter (comma-separated names); driver leaves unset
     val only = sys.env.get("SPARK_GRAFT_ONLY")

@@ -200,8 +200,8 @@ object Utils {
   }
 
   /** Run `f` with the Spark jobs it launches labelled `desc` (the
-    * `spark.job.description` that `graft.Profile` prints); the caller's
-    * previous label is restored afterwards. */
+    * `spark.job.description` that `graft.Bench <names>` prints); the
+    * caller's previous label is restored afterwards. */
   def withJobDescription[A](sc: org.apache.spark.SparkContext,
       desc: String)(f: => A): A = {
     val prev = sc.getLocalProperty(JobDescription)

@@ -468,7 +468,7 @@ object Scale {
     * `sum(v) OVER (ORDER BY …)`. A bare global ordered window funnels
     * the ENTIRE table through ONE task (Spark plans it as a
     * single-partition Window — the canonical 100 TB scale killer,
-    * and exactly what `graft.Audit` flags); this is the classic
+    * and exactly what `graft.PlanGate` flags); this is the classic
     * two-phase scan instead:
     *
     *   1. `repartitionByRange` on the order columns — every partition

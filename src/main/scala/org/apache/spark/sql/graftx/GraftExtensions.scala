@@ -7,21 +7,27 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Session extension registering graft's native expressions as SQL
-  * functions, so the pure-SQL surface (`spark.sql`, the reference's
-  * query-endpoint passthrough shape, src/api/main.py:154-221) can call
-  * them:
+/** Session extension carrying every graft Catalyst addition. It is
+  * installed through `spark.sql.extensions`, which `graft.Session` sets
+  * for every session it builds:
   *
   * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)   // or
-  *   .config("spark.sql.extensions", "org.apache.spark.sql.graftx.GraftExtensions")
+  * val spark = graft.Session("my-app")
   * spark.sql("SELECT cosine_similarity(a.embedding, b.embedding) ...")
   * }}}
   *
-  * Catalyst injection points used: `injectFunction` for the native
-  * expressions, `injectOptimizerRule` for [[DeferExpensiveProjection]]
-  * (late materialization of expensive projections through top-k).
+  * Catalyst injection points used:
+  *  - `injectFunction` for six native expressions, so the pure-SQL
+  *    surface (`spark.sql`, the reference's query-endpoint passthrough
+  *    shape, src/api/main.py:154-221) can call them: `cosine_similarity`,
+  *    `dot_product`, `unaccent`, `jaro_winkler`, `damerau_levenshtein`
+  *    and the `space_saving_topk` aggregate;
+  *  - `injectOptimizerRule` for [[DeferExpensiveProjection]] (late
+  *    materialization of expensive projections through top-k) and
+  *    [[MvRewrite]] (answers a matching aggregate from a registered
+  *    rollup);
+  *  - `injectPlannerStrategy` for [[TopKPerGroupStrategy]] (per-group
+  *    top-k planned as partial → exchange → final).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -93,18 +99,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => DeferExpensiveProjection)
     ext.injectOptimizerRule(_ => MvRewrite)
     ext.injectPlannerStrategy(_ => TopKPerGroupStrategy)
-  }
-}
-
-object GraftExtensions {
-  /** Imperative registration onto an existing session (tests, REPLs). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("cosine_similarity",
-      args => CosineSimilarity(args(0), args(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("dot_product",
-      args => DotProduct(args(0), args(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("unaccent",
-      args => Unaccent(args(0)), "scala_udf")
   }
 }

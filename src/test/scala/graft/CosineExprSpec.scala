@@ -7,7 +7,6 @@ import graft.dedup.Dedup
 class CosineExprSpec extends SparkSpec {
 
   test("SQL surface: extensions register cosine_similarity / dot_product") {
-    org.apache.spark.sql.graftx.GraftExtensions.register(spark)
     val row = spark.sql(
       """SELECT round(cosine_similarity(array(1.0d, 0.0d), array(1.0d, 0.0d)), 6) AS c,
         |       dot_product(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d""".stripMargin)
@@ -54,7 +53,6 @@ class CosineExprSpec extends SparkSpec {
     // null propagates; SQL surface resolves
     val withNull = Seq(Option.empty[String]).toDF("s")
     assert(withNull.select(Unaccent($"s")).head().isNullAt(0))
-    org.apache.spark.sql.graftx.GraftExtensions.register(spark)
     assert(spark.sql("SELECT unaccent('résumé') AS r").head().getString(0)
       === "resume")
     // stays inside whole-stage codegen — no fallback (probe over a

@@ -4,25 +4,13 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session; suites run
-  * in the same forked JVM under `sbt test`). */
+  * in the same forked JVM under `sbt test`): the deployment session of
+  * [[graft.Session]] on `local[4]` (so 4 shuffle partitions), so specs
+  * exercise what the mains run; its FAIR scheduling lets ServiceSpec
+  * prove request-class pool isolation. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions",
-        "org.apache.spark.sql.graftx.GraftExtensions")
-      // FAIR so ServiceSpec can prove request-class pool isolation;
-      // with every job in one pool this is FIFO-equivalent for the
-      // other suites
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession =
+    Session("graft-test", Map("spark.master" -> "local[4]"))
 }
 
 abstract class SparkSpec extends AnyFunSuite {
