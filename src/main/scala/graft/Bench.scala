@@ -411,9 +411,7 @@ object Bench {
         // queries' timings (measured: a mid-alphabet cluster read 2-4×
         // its isolated cost in the full run). Each query now starts
         // from the same cold-store state its isolated run sees.
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        spark.catalog.clearCache()
+        org.apache.spark.graftx.Blocks.dropAll(spark)
       }
       // pass-END probe: the last timeline segment must be bracketed too,
       // or the tail queries of a pass would be un-adjudicable
@@ -549,9 +547,7 @@ object Bench {
                 acc(name) = math.min(acc.getOrElse(name, Double.MaxValue),
                   secs)
               }
-              spark.sparkContext.getPersistentRDDs.values
-                .foreach(_.unpersist(blocking = false))
-              spark.catalog.clearCache()
+              org.apache.spark.graftx.Blocks.dropAll(spark)
             }
           }
           val decade = math.log10(b / m)
@@ -629,9 +625,7 @@ object Bench {
       fn(spark, sfDir).explain("formatted")
       (1 to reps).foreach { rep =>
         jobs.clear(); stageToJob.clear()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        spark.catalog.clearCache()
+        org.apache.spark.graftx.Blocks.dropAll(spark)
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         val wall = (System.nanoTime() - t0) / 1e9

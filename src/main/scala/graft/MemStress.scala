@@ -57,9 +57,7 @@ object MemStress {
       val d = org.apache.spark.graftx.StageMetrics
         .totals(spark.sparkContext, acc) - before
       out += ((name, secs, d.spillMem, d.spillDisk))
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
+      org.apache.spark.graftx.Blocks.dropAll(spark)
     }
     val qJson = out.map { case (n, s, sm, sd) =>
       "\"" + n + f"""\":{"secs":$s%.3f,"spill_mem_mb":${sm / 1048576.0}%.1f,""" +

@@ -199,17 +199,19 @@ object Utils {
     finally { pool.shutdownNow(); () }
   }
 
-  /** Run `f` with the Spark jobs it launches labelled `desc` (the
-    * `spark.job.description` that `graft.Bench <names>` prints); the
-    * caller's previous label is restored afterwards. */
-  def withJobDescription[A](sc: org.apache.spark.SparkContext,
-      desc: String)(f: => A): A = {
-    val prev = sc.getLocalProperty(JobDescription)
-    sc.setJobDescription(desc)
-    try f finally sc.setLocalProperty(JobDescription, prev)
+  /** Run `f` with the Spark local property `key` (read at job submit,
+    * inherited by threads `f` starts) set to `value`, then restore the
+    * caller's value, `null` included. The engine sets the job label
+    * `graft.Bench <names>` prints and the FAIR scheduler pool. */
+  def withLocalProperty[A](sc: org.apache.spark.SparkContext, key: String,
+      value: String)(f: => A): A = {
+    val prev = sc.getLocalProperty(key)
+    sc.setLocalProperty(key, value)
+    try f finally sc.setLocalProperty(key, prev)
   }
 
-  private val JobDescription = "spark.job.description"
+  val JobDescription = "spark.job.description"
+  val SchedulerPool = "spark.scheduler.pool"
 
   /** `ConfigUtils.merge_configs` (common_utils.py:354-365): deep merge,
     * later maps win, nested maps merge recursively. */

@@ -141,7 +141,7 @@ object Pin {
       if (level == StorageLevel.MEMORY_AND_DISK_SER) Pinned(ser, bytes, rows)
       else {
         val repinned = ser.localCheckpoint(true, level)
-        rdd.unpersist(blocking = false)
+        org.apache.spark.graftx.Blocks.drop(rdd)
         Pinned(repinned, bytes, rows)
       }
     }

@@ -42,9 +42,10 @@ import graft.transform.Stamp
   * blocking (spec-driven at 64 callers in ServiceHttpSpec).
   *
   * Scale stance: unchanged from QueryService — every data endpoint's
-  * response page is limit-bounded BEFORE `records` collects, so a
-  * 100 TB lake behind the query endpoints costs one pruned scan and
-  * driver memory only for the returned page.
+  * response is one limit-bounded page, collected once by `records`
+  * (its `count` is the page size), so a 100 TB lake behind the query
+  * endpoints costs one pruned scan and driver memory only for the
+  * returned page.
   */
 final class HttpFront(spark: SparkSession, sfDir: String,
     port: Int = 0) {
@@ -135,14 +136,13 @@ final class HttpFront(spark: SparkSession, sfDir: String,
 
   private def need(p: Map[String, String], k: String): String =
     p.getOrElse(k, throw BadRequest(s"missing required parameter '$k'"))
-  /** FastAPI types its query params: a non-integer `limit` is a 422
+  /** The page `limit`, from the query string or a JSON body. FastAPI
+    * types its params: anything but a non-negative integer is a 422
     * request-validation error there, so here too — not a 500. */
-  private def intParam(p: Map[String, String], k: String,
-      dflt: Int): Int =
-    p.get(k).map { v =>
-      try v.toInt
-      catch { case _: NumberFormatException =>
-        throw BadRequest(s"parameter '$k' must be an integer, got '$v'") }
+  private def limitParam(raw: Option[Any], dflt: Int): Int =
+    raw.map(String.valueOf).map { v =>
+      v.toIntOption.filter(_ >= 0).getOrElse(throw BadRequest(
+        s"parameter 'limit' must be a non-negative integer, got '$v'"))
     }.getOrElse(dflt)
   private def needB(b: Map[String, Any], k: String): Any =
     b.getOrElse(k, throw BadRequest(s"missing required field '$k'"))
@@ -161,7 +161,7 @@ final class HttpFront(spark: SparkSession, sfDir: String,
     }
 
   /** Envelope a query response the way the reference's query endpoints
-    * do (`main.py:168-173`): status + materialized page + count +
+    * do (`main.py:168-173`): status + materialized page + its size +
     * source identity under the given key. */
   private def envelope(r: service.Response,
       key: String): Map[String, Any] = Map(
@@ -263,13 +263,13 @@ final class HttpFront(spark: SparkSession, sfDir: String,
         val p = params(ex)
         val r = service.query(need(p, "table"),
           p.get("where").filter(_.nonEmpty),
-          intParam(p, "limit", 100))
+          limitParam(p.get("limit"), 100))
         (200, envelope(r, "table"))
       case "/api/v1/query/mongodb" if get =>
         val p = params(ex)
         val r = service.queryCollectionJson(need(p, "collection"),
           p.getOrElse("filter", "{}"),
-          intParam(p, "limit", 100))
+          limitParam(p.get("limit"), 100))
         (200, envelope(r, "collection"))
       case "/api/v1/query/influxdb" if get =>
         val p = params(ex)
@@ -285,8 +285,7 @@ final class HttpFront(spark: SparkSession, sfDir: String,
       case "/api/v1/sql" if post =>
         val b = parseBody(ex)
         val r = service.sql(String.valueOf(needB(b, "sql")),
-          b.get("limit").map(String.valueOf(_).toInt)
-            .getOrElse(QueryService.DefaultLimit))
+          limitParam(b.get("limit"), QueryService.DefaultLimit))
         (200, envelope(r, "source"))
       case "/api/v1/explain" if post =>
         val b = parseBody(ex)
@@ -380,7 +379,7 @@ object HttpFront {
   /** The reference's error contract: handler failure → HTTP 500 with
     * FastAPI's `{"detail": "<context>: <message>"}` envelope
     * (`main.py` wraps every endpoint body in exactly this). A missing
-    * required parameter/field → 422, FastAPI's request-validation
+    * or ill-typed parameter/field → 422, FastAPI's request-validation
     * code. */
   private final case class BadRequest(msg: String)
       extends RuntimeException(msg)

@@ -3,7 +3,7 @@ package graft.service
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.Tables
-import graft.etl.{EtlJob, EtlResult}
+import graft.etl.{EtlJob, EtlResult, Utils}
 import graft.sinks.Sinks
 import graft.sources.Sources
 
@@ -17,46 +17,41 @@ import graft.sources.Sources
   * surface.
   *
   * Scale stance: every query method returns a LAZY DataFrame wrapped
-  * in the response envelope; nothing is collected until the caller
-  * asks for `records` (the HTTP-response materialization, bounded by
-  * the same `limit` the reference applies). A 100 TB table behind
+  * in the response envelope, and every envelope is built by one helper
+  * that bounds it to one page (`limit`, else [[QueryService.DefaultLimit]]).
+  * Nothing runs until the caller first asks for `records`, which
+  * collects that page once; `count` is its size. A 100 TB table behind
   * `query(...)` costs one pruned scan of whatever the predicate
   * selects, driver memory only for the page returned.
   */
 final class QueryService(spark: SparkSession, sfDir: String) {
 
-  /** Response envelope (`main.py:168-173`): status + count + lazy data.
-    * `count` triggers the one aggregating job; `records` collects the
-    * (limit-bounded) page for transport. Materialization runs in the
-    * response's request-class scheduler `pool`, so 100+ concurrent
-    * callers (the reference's claim, `docs/README.md:264`) share the
-    * cluster FAIRly instead of head-of-line blocking behind whoever
-    * submitted first. */
+  /** Response envelope (`main.py:168-173`): status + page + count.
+    * `data` is the lazy, limit-bounded page; `records` collects it once,
+    * on first use, in the request-class scheduler `pool` (so 100+
+    * concurrent callers, `docs/README.md:264`, share the cluster FAIRly),
+    * and `count` is the page size, as the reference's `len(results)`. */
   final case class Response(status: String, source: String, data: DataFrame,
       pool: String = QueryService.InteractivePool) {
-    lazy val count: Long = inPool(pool)(data.count())
-    /** Driver-side page materialization — bounded: every service entry
-      * point applies a row limit before this. */
-    def records: Seq[Map[String, Any]] = inPool(pool) {
+    lazy val records: Seq[Map[String, Any]] = inPool(pool) {
       val cols = data.columns
       data.collect().toSeq
         .map(r => cols.zipWithIndex.map { case (c, i) => c -> r.get(i) }.toMap)
     }
+    def count: Long = records.size.toLong
   }
 
-  /** Run `f`'s Spark jobs in the named scheduler pool. Pool membership
-    * is a thread-local property read at job-submit time, so each
-    * concurrent caller thread tags its own jobs; with
-    * `spark.scheduler.mode=FAIR` the pools then share executors by
-    * weight instead of FIFO. The previous value is restored so nested
-    * service calls (an ETL trigger issuing interactive lookups) keep
-    * their own class. */
-  def inPool[T](pool: String)(f: => T): T = {
-    val sc = spark.sparkContext
-    val prev = sc.getLocalProperty("spark.scheduler.pool")
-    sc.setLocalProperty("spark.scheduler.pool", pool)
-    try f finally sc.setLocalProperty("spark.scheduler.pool", prev)
-  }
+  /** The one place a [[Response]] is built: `df` bounded to one page. */
+  private def page(source: String, df: DataFrame,
+      limit: Int = QueryService.DefaultLimit,
+      pool: String = QueryService.InteractivePool): Response =
+    Response("success", source, df.limit(limit), pool)
+
+  /** Run `f`'s Spark jobs in the named scheduler pool: a thread-local
+    * property read at job submit, so each concurrent caller tags its own
+    * jobs, and under `spark.scheduler.mode=FAIR` pools share by weight. */
+  private def inPool[T](pool: String)(f: => T): T =
+    Utils.withLocalProperty(spark.sparkContext, Utils.SchedulerPool, pool)(f)
 
   /** GET /health (`main.py:63-70`) — can the lake be planned against? */
   def health: Map[String, String] = Map(
@@ -76,15 +71,14 @@ final class QueryService(spark: SparkSession, sfDir: String) {
     * predicate and Catalyst pushes it into the parquet scan. */
   def query(table: String, where: Option[String] = None,
       limit: Int = 100): Response =
-    Response("success", table,
-      Sources.table(spark, sfDir, table, where, Some(limit)))
+    page(table, Sources.table(spark, sfDir, table, where), limit)
 
   /** GET /api/v1/query/mongodb (`main.py:180-201`): filter-dict
     * equality conjunction over a collection-style table. */
   def queryCollection(collection: String,
       filter: Map[String, Any] = Map.empty, limit: Int = 100): Response =
-    Response("success", collection,
-      Sources.collection(spark, sfDir, collection, filter, Some(limit)))
+    page(collection, Sources.collection(spark, sfDir, collection, filter),
+      limit)
 
   /** String-filter convenience: the reference's endpoint takes the
     * filter as a JSON document (`main.py:187` `json.loads(filter)`). */
@@ -111,18 +105,17 @@ final class QueryService(spark: SparkSession, sfDir: String) {
       if (fields.isEmpty) ranged
       else ranged.select((tsCol +: fields).distinct
         .map(org.apache.spark.sql.functions.col): _*)
-    Response("success", measurement, projected.limit(limit))
+    page(measurement, projected, limit)
   }
 
   /** Interactive SQL over the whole lake — the surface a reference user
     * reaches for when the canned endpoints don't fit; every table is a
-    * temp view, Catalyst owns the plan. `limit` caps the RESPONSE page
-    * (so `records` is never an unbounded collect on a lake-scale
-    * result); it sits above the user's own LIMIT/aggregation and is a
-    * no-op when the query already returns fewer rows. */
+    * temp view, Catalyst owns the plan. `limit` caps the RESPONSE page;
+    * it sits above the user's own LIMIT/aggregation and is a no-op when
+    * the query already returns fewer rows. */
   def sql(text: String, limit: Int = QueryService.DefaultLimit): Response = {
     Tables.registerAll(spark, sfDir)
-    Response("success", "sql", spark.sql(text).limit(limit))
+    page("sql", spark.sql(text), limit)
   }
 
   /** Engine extension the reference cannot offer: the optimized plan
@@ -148,10 +141,7 @@ final class QueryService(spark: SparkSession, sfDir: String) {
     * response mirrors the endpoint's `{status, extracted_count,
     * transformation_stats, load_results}`. */
   def runEtl(job: EtlJob): (String, EtlResult) =
-    inPool(QueryService.BatchPool) {
-      val result = job.run(spark)
-      ("success", result)
-    }
+    inPool(QueryService.BatchPool)(("success", job.run(spark)))
 
   // ---- vector / graph / multimodal entry points ---------------------
   // The operator families the engine adds beyond the reference's API;
@@ -166,54 +156,47 @@ final class QueryService(spark: SparkSession, sfDir: String) {
   def vectorSearch(queries: DataFrame, indexPath: String, k: Int = 10,
       nprobe: Int = 2, where: Option[Column] = None,
       vecCol: String = "embedding", idCol: String = "vec_id"): Response =
-    Response("success", indexPath,
-      graft.similarity.Ann.ivfIndexTopKEscalating(spark, queries,
-        vecCol, idCol, indexPath, k, nprobe, where))
+    page(indexPath, graft.similarity.Ann.ivfIndexTopKEscalating(spark,
+      queries, vecCol, idCol, indexPath, k, nprobe, where))
 
   /** HITS hub/authority centrality over an edge frame
     * ([[graft.operators.Hits]]) — long-running: batch pool. */
   def graphHits(edges: DataFrame, iters: Int = 2): Response =
-    inPool(QueryService.BatchPool) {
-      Response("success", "hits", graft.operators.Hits.hits(edges, iters),
-        QueryService.BatchPool)
-    }
+    inPool(QueryService.BatchPool)(page("hits",
+      graft.operators.Hits.hits(edges, iters), pool = QueryService.BatchPool))
 
   /** Per-track MP4 sample-table stats
     * ([[graft.multimodal.Multimodal.probeMp4Tracks]]): fps / bitrate /
     * keyframe density, no codec. */
   def mp4TrackStats(media: DataFrame): Response =
-    Response("success", "mp4_tracks",
-      graft.multimodal.Multimodal.probeMp4Tracks(media))
+    page("mp4_tracks", graft.multimodal.Multimodal.probeMp4Tracks(media))
 
   /** MP4 video-sample extraction
     * ([[graft.multimodal.Multimodal.probeMp4Samples]]):
     * `stsz`/`stsc`/`stco`/`co64` resolved into exact payload bytes —
     * the codec-free sample grain below [[mp4TrackStats]]. */
   def mp4Samples(media: DataFrame): Response =
-    Response("success", "mp4_samples",
-      graft.multimodal.Multimodal.probeMp4Samples(media))
+    page("mp4_samples", graft.multimodal.Multimodal.probeMp4Samples(media))
 
   /** Influx line-protocol ingest ([[graft.sources.LineProtocol]]):
     * text lines → typed point frame, malformed lines skipped. */
   def ingestLineProtocol(lines: org.apache.spark.sql.Dataset[String])
       : Response =
-    Response("success", "line_protocol",
-      graft.sources.LineProtocol.parse(lines))
+    page("line_protocol", graft.sources.LineProtocol.parse(lines))
 
   /** MongoDB Extended JSON ingest ([[graft.sources.ExtendedJson]]):
     * one canonical-v2 document per line → `schema`-typed frame,
     * malformed lines skipped. */
   def ingestExtendedJson(lines: org.apache.spark.sql.Dataset[String],
       schema: org.apache.spark.sql.types.StructType): Response =
-    Response("success", "extended_json",
-      graft.sources.ExtendedJson.parse(lines, schema))
+    page("extended_json", graft.sources.ExtendedJson.parse(lines, schema))
 }
 
 object QueryService {
-  /** Default response-page cap for the free-form entry points (`sql`,
-    * `queryRange`) — the endpoints whose result size the service can't
-    * predict. Mirrors the canned endpoints' explicit `limit` so that
-    * `Response.records` is bounded on EVERY path. */
+  /** Response-page cap for every entry point that takes no explicit
+    * `limit` (`sql` and `queryRange` default to it; the vector, graph,
+    * multimodal and ingest entry points always use it), so
+    * `Response.records` is bounded on every path. */
   val DefaultLimit: Int = 10000
 
   /** Request-class scheduler pools (deploy with

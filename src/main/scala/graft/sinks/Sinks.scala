@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.etl.Utils
 import graft.etl.Utils.rmTree
 
 /** Sink layer (SURVEY.md §2.2 K1–K10).
@@ -545,7 +546,7 @@ object Sinks {
       s"duplicate route names in: ${names.mkString(", ")}")
     val sc = df.sparkSession.sparkContext
     def write(src: DataFrame, r: Route): LoadResult = scala.util.Try(
-        graft.etl.Utils.withJobDescription(sc, s"route:${r.name}")(
+        Utils.withLocalProperty(sc, Utils.JobDescription, s"route:${r.name}")(
           r.sink(src.where(r.predicate)))) match {
       case scala.util.Success(n) => LoadResult(r.name, "success", n)
       case scala.util.Failure(e) =>
@@ -555,7 +556,7 @@ object Sinks {
       if (routes.sizeIs <= 1) routes.map(write(df, _))
       else {
         val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-        try graft.etl.Utils.inParallel(
+        try Utils.inParallel(
           routes.map(r => () => write(cached, r)): _*)
         finally cached.unpersist()
       }

@@ -321,8 +321,9 @@ case class ValidationPipeline(validators: Seq[Validator]) {
       case a: AggregateValidator => Some(Try(a.plan(df)))
       case _ => None
     }
-    val fused = Try(graft.etl.Utils.withJobDescription(
-        df.sparkSession.sparkContext, "validate:pipeline") {
+    val fused = Try(graft.etl.Utils.withLocalProperty(
+        df.sparkSession.sparkContext, graft.etl.Utils.JobDescription,
+        "validate:pipeline") {
       AggregateValidator.evaluate(df,
         plans.flatten.collect { case Success(p) => p })
     }).toOption.map(_.iterator)

@@ -191,6 +191,14 @@ class ServiceHttpSpec extends SparkSpec with BeforeAndAfterAll {
     val (c422, j422) = get("/api/v1/query/postgres") // missing ?table=
     assert(c422 == 422 &&
       j422.get("detail").asText().contains("table"))
+    // a limit that is not a non-negative integer is a validation error,
+    // from the query string and from a JSON body alike
+    for ((c, j) <- Seq(
+        get("/api/v1/query/postgres?table=customer&limit=-1"),
+        get("/api/v1/query/mongodb?collection=orders&limit=abc"),
+        post("/api/v1/sql", """{"sql": "SELECT 1 AS one", "limit": "abc"}"""),
+        post("/api/v1/sql", """{"sql": "SELECT 1 AS one", "limit": -5}""")))
+      assert(c == 422 && j.get("detail").asText().contains("limit"), j)
     val (c500, j500) =
       get("/api/v1/query/postgres?table=no_such_table")
     assert(c500 == 500 && j500.get("detail").asText().nonEmpty)
