@@ -180,7 +180,7 @@ object SimilarityQueries extends QuerySection {
 
   /** Filtered search over a LIVE (streamed) index
     * ([[Ann.appendIvfBatch]] with an attribute payload →
-    * [[Ann.ivfLiveTopK]] with a `where` predicate): the index is
+    * [[Ann.ivfIndexTopK]] with a `where` predicate): the index is
     * built from history (vec_id < 400 — contains the 8 seed vectors,
     * so the codebook equals the full-corpus one), the rest arrives as
     * an exactly-once increment batch CARRYING its metadata, and the
@@ -196,7 +196,7 @@ object SimilarityQueries extends QuerySection {
       "vec_id", path, nlist = 8, attrCols = Seq("label"))
     Ann.appendIvfBatch(s, e.filter(col("vec_id") >= 400), "embedding",
       "vec_id", path, batchId = 0L, attrCols = Seq("label"))
-    Ann.ivfLiveTopK(s, e.filter(col("vec_id") < 10), "embedding",
+    Ann.ivfIndexTopK(s, e.filter(col("vec_id") < 10), "embedding",
         "vec_id", path, k = 5, nprobe = 3,
         where = Some(col("label") < 3))
       .orderBy(col("query_id"), col("rank"))
@@ -266,23 +266,23 @@ object SimilarityQueries extends QuerySection {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** INCREMENTAL index maintenance judged ([[Ann.appendIvfIndex]]):
+  /** INCREMENTAL index maintenance judged ([[Ann.appendIvfBatch]]):
     * the index is built from the historical slice (vec_id < 400 —
     * which contains the 8 seed vectors, so the codebook equals the
-    * full-corpus one), the increment (vec_id ≥ 400) is APPENDED using
-    * the index's stored codebook, and the query result over the
-    * combined postings must equal the inline full-corpus route —
-    * judged against the SAME oracle SQL as `ann_ivf`. This is the
-    * daily-batch contract at 100 TB: history is never rescanned or
-    * rewritten, and correctness of the merged index is
-    * oracle-checked, not assumed. */
+    * full-corpus one), the increment (vec_id ≥ 400) lands as one
+    * increment-log batch assigned with the index's stored codebook,
+    * and the query result over base ∪ increments must equal the
+    * inline full-corpus route — judged against the SAME oracle SQL as
+    * `ann_ivf`. This is the daily-batch contract at 100 TB: history is
+    * never rescanned or rewritten, and correctness of the merged index
+    * is oracle-checked, not assumed. */
   private def annIvfIncremental(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
     val path = graft.etl.Utils.scratchDir("graft_ivfinc") + "/idx"
     Ann.buildIvfIndex(e.filter(col("vec_id") < 400), "embedding",
       "vec_id", path, nlist = 8)
-    Ann.appendIvfIndex(s, e.filter(col("vec_id") >= 400), "embedding",
-      "vec_id", path)
+    Ann.appendIvfBatch(s, e.filter(col("vec_id") >= 400), "embedding",
+      "vec_id", path, batchId = 0L)
     Ann.ivfIndexTopK(s, e.filter(col("vec_id") < 10), "embedding",
         "vec_id", path, k = 5, nprobe = 3)
       .orderBy(col("query_id"), col("rank"))
@@ -306,7 +306,7 @@ object SimilarityQueries extends QuerySection {
     Ann.deleteFromIvfIndex(e.filter(col("vec_id") % 7 === 0)
       .select(col("vec_id")), "vec_id", path)
     Ann.vacuumIvfIndex(s, path)
-    Ann.ivfLiveTopK(s, e.filter(col("vec_id") < 10), "embedding",
+    Ann.ivfIndexTopK(s, e.filter(col("vec_id") < 10), "embedding",
         "vec_id", path, k = 5, nprobe = 3)
       .orderBy(col("query_id"), col("rank"))
   }

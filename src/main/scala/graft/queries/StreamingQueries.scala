@@ -754,7 +754,7 @@ object StreamingQueries extends QuerySection {
     * corpus arrives as TWO micro-batches through
     * [[graft.streaming.Streaming.ivfIngestStream]] (each landing as an
     * exactly-once increment-log partition), and the probe over
-    * base + increments ([[graft.similarity.Ann.ivfLiveTopK]]) must
+    * base + increments ([[graft.similarity.Ann.ivfIndexTopK]]) must
     * equal the one-shot inline IVF route — judged against the SAME
     * oracle SQL as `ann_ivf`. Cell assignment is per-row against the
     * frozen stored codebook, so the emitted index is batch-split
@@ -787,7 +787,7 @@ object StreamingQueries extends QuerySection {
         "vec_id", idx, tmp.resolve("ckpt").toString).start()
     }
     q.awaitTermination()
-    graft.similarity.Ann.ivfLiveTopK(s, e.filter(col("vec_id") < 10),
+    graft.similarity.Ann.ivfIndexTopK(s, e.filter(col("vec_id") < 10),
         "embedding", "vec_id", idx, k = 5, nprobe = 3)
       .orderBy(col("query_id"), col("rank"))
   }

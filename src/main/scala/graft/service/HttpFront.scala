@@ -279,7 +279,8 @@ final class HttpFront(spark: SparkSession, sfDir: String,
           tsCol = p.getOrElse("ts_col", "ts"), start = start,
           stop = stop,
           fields = p.get("fields").toSeq
-            .flatMap(_.split(',').map(_.trim).filter(_.nonEmpty)))
+            .flatMap(_.split(',').map(_.trim).filter(_.nonEmpty)),
+          limit = limitParam(p.get("limit"), QueryService.DefaultLimit))
         (200, envelope(r, "measurement") +
           ("time_range" -> s"$start to $stop"))
       case "/api/v1/sql" if post =>

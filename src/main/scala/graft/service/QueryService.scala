@@ -152,7 +152,10 @@ final class QueryService(spark: SparkSession, sfDir: String) {
   /** Vector search over a STORED IVF index
     * ([[graft.similarity.Ann.buildIvfIndex]]) with optional attribute
     * filtering and the k-guarantee escalation: a starved query widens
-    * its probe rather than silently returning short lists. */
+    * its probe rather than silently returning short lists. Vectors
+    * streamed in since the build
+    * ([[graft.streaming.Streaming.ivfIngestStream]]) are visible
+    * before any vacuum: the probe reads base ∪ increment log. */
   def vectorSearch(queries: DataFrame, indexPath: String, k: Int = 10,
       nprobe: Int = 2, where: Option[Column] = None,
       vecCol: String = "embedding", idCol: String = "vec_id"): Response =

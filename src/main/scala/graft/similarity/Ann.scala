@@ -503,32 +503,20 @@ object Ann {
     ()
   }
 
-  /** Append a corpus INCREMENT into a stored IVF index: the new rows
-    * are assigned with the index's OWN stored codebook (read back, so
-    * assignment drift between build-time and append-time is impossible
-    * by construction) and appended as cell-partitioned files. History
-    * is never rewritten — the 100 TB maintenance contract, same as
-    * `dedup.Dedup.buildMinhashIndex`'s bucket appends. */
-  def appendIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      increment: DataFrame, vecCol: String, idCol: String,
-      path: String): Unit = {
-    val centroids = readCodebook(spark, path)
-    increment.select(col(idCol).as("corpus_id"),
-        col(vecCol).cast("array<double>").as("cv"))
-      .withColumn("cell", bestCell(centroids, col("cv")))
-      .write.mode("append").partitionBy("cell")
-      .parquet(s"$path/postings")
-  }
-
-  /** Top-k against a STORED IVF index ([[buildIvfIndex]]): read the
-    * codebook (nlist×dim doubles — driver/broadcast state by design),
-    * compute each query's probe cells, statically prune the postings
-    * scan to the batch's probe-cell partitions, and exact-rank inside
-    * them. Identical results to [[ivfTopK]] with the same codebook —
-    * what changes is WHERE the cell assignment work happened (once, at
-    * index build) and how much of the corpus the query scan touches
-    * (nprobe/nlist of the partitions, enforced by partition pruning,
-    * not a full pass). */
+  /** Top-k against a STORED IVF index ([[buildIvfIndex]]) and its
+    * streamed increment log ([[appendIvfBatch]]) — the one probe over
+    * the stored layout: read the codebook (nlist×dim doubles —
+    * driver/broadcast state by design), compute each query's probe
+    * cells, statically prune the base postings scan AND the increment
+    * log scan to the batch's probe-cell partitions (for the log, `cell`
+    * prunes at the second partition level under `batch`), mask
+    * tombstones ([[deleteFromIvfIndex]]) and exact-rank inside the
+    * cells. Identical results to [[ivfTopK]] over base ∪ increments
+    * with the same codebook — what changes is WHERE the cell assignment
+    * work happened (once, at build or append) and how much of the
+    * corpus the query scan touches (nprobe/nlist of the files however
+    * many batches have landed, enforced by partition pruning). An index
+    * with no `increments/` directory scans the postings alone. */
   def ivfIndexTopK(spark: org.apache.spark.sql.SparkSession,
       queries: DataFrame, vecCol: String, idCol: String, path: String,
       k: Int, nprobe: Int = 2, where: Option[Column] = None,
@@ -541,34 +529,48 @@ object Ann {
         explode(probeCells(centroids, nprobe,
           col(vecCol).cast("array<double>"))).as("cell")))
     // the batch's probe-cell set: ≤ nlist driver-side ints, turned into
-    // a static partition-pruning predicate on the postings scan. At
+    // a static partition-pruning predicate on both scans. At
     // nprobe ≥ nlist every query probes every cell by construction, so
     // the collect job AND the vacuous isin are skipped (full scan).
     val cells =
       if (nprobe >= centroids.length) centroids.indices.toSeq
       else q.select(col("cell")).distinct().collect()
         .map(_.getInt(0)).toSeq
+    val baseScan = spark.read.parquet(s"$path/postings")
+      .filter(col("cell").isin(cells: _*))
     // FILTERED search (`where` over attrCols stored at build): the
-    // predicate lands on the postings SCAN — inside the cell pruning,
+    // predicate is validated against the BASE postings' attribute
+    // vocabulary and lands on the SCANS — inside the cell pruning,
     // before ranking — so Parquet pushdown sees it and a selective
     // filter cheapens the probe instead of starving a post-filtered
     // top-k. Semantics = brute force over the filtered corpus within
     // the probed cells (assignment is per-row; a filter never moves a
     // vector between cells). Under very selective predicates callers
-    // widen nprobe — the recall/selectivity trade every vector store
-    // documents — which here is just a parameter, not a rebuild.
-    val scan = spark.read.parquet(s"$path/postings")
-      .filter(col("cell").isin(cells: _*))
-    where.foreach(validateWhere(spark, scan.schema, _))
-    val filtered = where.map(scan.filter).getOrElse(scan)
-    // tombstoned ids mask here too: EVERY probe over the stored layout
-    // honors the "delete is visible immediately" contract, not just the
-    // lifecycle-aware ivfLiveTopK — a caller mixing the two probe APIs
-    // must never see takedown leakage
-    val post = graft.index.IndexLifecycle.maskTombstoned(
-      filtered.select(col("cell"), col("corpus_id"), col("cv")),
-      "corpus_id", s"$path/tombstones")
-    rankCellCandidates(post, q, k)
+    // widen nprobe (or escalate, [[ivfIndexTopKEscalating]]). Both
+    // sides project to the base attr schema: an increment appended
+    // without a payload folds in with null attrs and simply never
+    // matches a filtered probe, the same honest semantic as vacuum's
+    // fold.
+    where.foreach(validateWhere(spark, baseScan.schema, _))
+    val attrs = baseScan.columns.toSeq
+      .filterNot(Set("cell", "corpus_id", "cv"))
+    def proj(df: DataFrame): DataFrame = df.select(
+      (Seq("corpus_id", "cv", "cell").map(col) ++ attrs.map(a =>
+        if (df.columns.contains(a)) col(a)
+        else lit(null).cast(baseScan.schema(a).dataType).as(a))): _*)
+    val base = proj(baseScan)
+    val post = if (new java.io.File(s"$path/increments").isDirectory)
+      base.unionByName(proj(spark.read.parquet(s"$path/increments")
+        .filter(col("cell").isin(cells: _*))))
+    else base
+    val filtered = where.map(post.filter).getOrElse(post)
+      .select(col("cell"), col("corpus_id"), col("cv"))
+    // tombstoned ids are masked at probe time; a takedown-sized set
+    // anti-joins cheaply (AQE broadcasts it), a purge-sized one is what
+    // [[vacuumIvfIndex]] is for
+    val visible = graft.index.IndexLifecycle.maskTombstoned(
+      filtered, "corpus_id", s"$path/tombstones")
+    rankCellCandidates(visible, q, k)
   }
 
   /** The filtered-search predicate may reference ONLY the attribute
@@ -683,14 +685,15 @@ object Ann {
 
   /** Append a corpus increment to a stored IVF index as ONE batch
     * partition of its increment log (`path/increments/batch=<id>/
-    * cell=<i>/…`), via DYNAMIC partition overwrite on (batch, cell).
-    * This is the EXACTLY-ONCE form of [[appendIvfIndex]] for an
-    * at-least-once caller (Structured Streaming's foreachBatch): a
-    * replayed batch overwrites exactly its own partition directories
-    * instead of appending duplicate postings that would shift every
-    * downstream rank. History — the base postings AND every other
-    * batch's increments — is never touched; `cell` stays the trailing
-    * partition column so probe-side pruning works unchanged. */
+    * cell=<i>/…`), via DYNAMIC partition overwrite on (batch, cell) —
+    * the one way to add vectors to an index after [[buildIvfIndex]].
+    * Exactly-once for an at-least-once caller (Structured Streaming's
+    * foreachBatch): a replayed batch overwrites exactly its own
+    * partition directories instead of appending duplicate postings
+    * that would shift every downstream rank. History — the base
+    * postings AND every other batch's increments — is never touched;
+    * `cell` stays the trailing partition column so [[ivfIndexTopK]]'s
+    * pruning reaches it. */
   def appendIvfBatch(spark: org.apache.spark.sql.SparkSession,
       increment: DataFrame, vecCol: String, idCol: String,
       path: String, batchId: Long,
@@ -698,7 +701,7 @@ object Ann {
     val centroids = readCodebook(spark, path)
     // attrCols ride each increment exactly as they ride the base
     // postings (buildIvfIndex): a streamed index stays FILTERABLE —
-    // [[ivfLiveTopK]]'s `where` gates increment candidates too, and
+    // [[ivfIndexTopK]]'s `where` gates increment candidates too, and
     // batches ingested WITHOUT metadata simply never match a filtered
     // probe (the same honest semantic vacuum applies when folding)
     increment.select((col(idCol).as("corpus_id") +:
@@ -715,10 +718,10 @@ object Ann {
   /** Tombstone-DELETE ids from a stored IVF index — the TAKEDOWN
     * primitive that completes the index lifecycle (build → append →
     * delete → [[vacuumIvfIndex]]): the ids land as an append-only
-    * tombstone file set that every lifecycle-aware probe
-    * ([[ivfLiveTopK]]) anti-joins, so a deletion is O(ids) and visible
-    * immediately without touching a single posting file — no
-    * corpus-sized rewrite on the takedown path. Idempotent under
+    * tombstone file set that the probe ([[ivfIndexTopK]]) anti-joins,
+    * so a deletion is O(ids) and visible immediately without touching
+    * a single posting file — no corpus-sized rewrite on the takedown
+    * path. Idempotent under
     * at-least-once callers: duplicate tombstone rows collapse in the
     * probe's distinct. Masking is not purging — the deleted vectors'
     * BYTES survive until [[vacuumIvfIndex]] rewrites them away.
@@ -793,9 +796,9 @@ object Ann {
     // completeness TIES — the NEWEST batch before live (__batch desc
     // before __pri: an increment that re-ingests a live id with
     // equally-complete attributes, e.g. an updated embedding, must
-    // win, because ivfLiveTopK already serves that increment row
-    // pre-vacuum — results for updated vectors must not change across
-    // a vacuum); final hash tie-break makes the survivor a pure
+    // win, because ivfIndexTopK already serves that increment row
+    // pre-vacuum (beside the superseded base row, which the fold
+    // drops); final hash tie-break makes the survivor a pure
     // function of the data.
     val attrs = liveCols.filterNot(Set("cell", "corpus_id", "cv"))
     val nullAttrs = attrs.map(c => when(col(c).isNull, 1).otherwise(0))
@@ -814,60 +817,6 @@ object Ann {
     }
     deleteSnapshot(s"$path/increments", incrSnap)
     deleteSnapshot(s"$path/tombstones", tombSnap)
-  }
-
-  /** Top-k against a stored IVF index PLUS its streaming increment log
-    * ([[appendIvfBatch]]) — the serving view of an index that is being
-    * fed continuously: both the base postings and the increments scan
-    * prune statically to the query batch's probe cells (for the
-    * increment log, `cell` prunes at the second partition level under
-    * `batch`), so cost stays nprobe/nlist of the files no matter how
-    * many batches have landed. Identical results to a one-shot
-    * [[ivfTopK]] over base ∪ increments with the same codebook. */
-  def ivfLiveTopK(spark: org.apache.spark.sql.SparkSession,
-      queries: DataFrame, vecCol: String, idCol: String, path: String,
-      k: Int, nprobe: Int = 2,
-      where: Option[Column] = None): DataFrame = {
-    val centroids = readCodebook(spark, path)
-    val q = broadcast(queries.select(col(idCol).as("query_id"),
-        col(vecCol).cast("array<double>").as("qv"),
-        explode(probeCells(centroids, nprobe,
-          col(vecCol).cast("array<double>"))).as("cell")))
-    // at nprobe ≥ nlist every query probes every cell by construction —
-    // skip the probe-cell collect job (the isin is then vacuous)
-    val cells =
-      if (nprobe >= centroids.length) centroids.indices.toSeq
-      else q.select(col("cell")).distinct().collect()
-        .map(_.getInt(0)).toSeq
-    val baseScan = spark.read.parquet(s"$path/postings")
-      .filter(col("cell").isin(cells: _*))
-    // FILTERED live search: the predicate is validated against the
-    // BASE postings' attribute vocabulary, then gates base AND
-    // increment candidates uniformly — both sides project to the base
-    // attr schema (an increment appended without a payload folds in
-    // with null attrs and simply never matches a filtered probe, the
-    // same honest semantic as vacuum's fold)
-    where.foreach(validateWhere(spark, baseScan.schema, _))
-    val attrs = baseScan.columns.toSeq
-      .filterNot(Set("cell", "corpus_id", "cv"))
-    def proj(df: DataFrame): DataFrame = df.select(
-      (Seq("corpus_id", "cv", "cell").map(col) ++ attrs.map(a =>
-        if (df.columns.contains(a)) col(a)
-        else lit(null).cast(baseScan.schema(a).dataType).as(a))): _*)
-    val base = proj(baseScan)
-    val incrDir = new java.io.File(s"$path/increments")
-    val post = if (incrDir.isDirectory)
-      base.unionByName(proj(spark.read.parquet(s"$path/increments")
-        .filter(col("cell").isin(cells: _*))))
-    else base
-    val filtered = where.map(post.filter).getOrElse(post)
-      .select(col("cell"), col("corpus_id"), col("cv"))
-    // tombstoned ids ([[deleteFromIvfIndex]]) are masked at probe time;
-    // a takedown-sized set anti-joins cheaply (AQE broadcasts it), a
-    // purge-sized one is what [[vacuumIvfIndex]] is for
-    val visible = graft.index.IndexLifecycle.maskTombstoned(
-      filtered, "corpus_id", s"$path/tombstones")
-    rankCellCandidates(visible, q, k)
   }
 
   /** Product quantization — the memory side of ANN at 100 TB. Each

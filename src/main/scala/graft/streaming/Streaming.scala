@@ -370,7 +370,7 @@ object Streaming {
     * where a plain append would duplicate postings and shift ranks).
     * History is never re-read or rewritten — per-batch work ∝ batch,
     * never ∝ corpus — and a probe served mid-stream
-    * ([[graft.similarity.Ann.ivfLiveTopK]]) still prunes to its probe
+    * ([[graft.similarity.Ann.ivfIndexTopK]]) still prunes to its probe
     * cells across base + all landed increments. State store: NONE; the
     * index IS the state, the same 100 TB argument as the near-dup
     * lifecycle. Batch-split invariance (cell assignment is per-row

@@ -345,21 +345,30 @@ class AnnMultimodalSpec extends SparkSpec {
       .toString + "/idx"
     Ann.buildIvfIndex(base, "embedding", "vec_id", path, nlist = 8)
     val beforeFiles = fileSet(s"$path/postings")
-    Ann.appendIvfIndex(spark, inc, "embedding", "vec_id", path)
+    Ann.appendIvfBatch(spark, inc, "embedding", "vec_id", path,
+      batchId = 0L)
     // append-only: every pre-existing posting file survives unmodified
     assert(fileSet(s"$path/postings").keySet.intersect(beforeFiles.keySet)
       .forall(f => fileSet(s"$path/postings")(f) == beforeFiles(f)),
       "append must not rewrite historical posting files")
-    val merged = Ann.ivfIndexTopK(spark, q, "embedding", "vec_id", path,
-      k = 5, nprobe = 3)
     val fullPath = java.nio.file.Files.createTempDirectory("graft_ivffull")
       .toString + "/idx"
     Ann.buildIvfIndex(e, "embedding", "vec_id", fullPath, nlist = 8)
     val rebuilt = Ann.ivfIndexTopK(spark, q, "embedding", "vec_id",
       fullPath, k = 5, nprobe = 3)
-    assert(merged.exceptAll(rebuilt).isEmpty &&
-      rebuilt.exceptAll(merged).isEmpty,
-      "incrementally-maintained index must equal a full rebuild")
+    def assertEqualsRebuild(): Unit = {
+      val merged = Ann.ivfIndexTopK(spark, q, "embedding", "vec_id", path,
+        k = 5, nprobe = 3)
+      assert(merged.exceptAll(rebuilt).isEmpty &&
+        rebuilt.exceptAll(merged).isEmpty,
+        "incrementally-maintained index must equal a full rebuild")
+    }
+    assertEqualsRebuild()
+    // an at-least-once caller replays the batch: the answer must not
+    // move (a plain append would duplicate the increment's postings)
+    Ann.appendIvfBatch(spark, inc, "embedding", "vec_id", path,
+      batchId = 0L)
+    assertEqualsRebuild()
   }
 
   private def fileSet(dir: String): Map[String, Long] = {

@@ -187,9 +187,9 @@ class FilteredAnnSpec extends SparkSpec {
       "embedding", "vec_id", path, 1L)
     val q = e.filter(col("vec_id") < 6)
     val pred = Some(col("label") >= 0) // matches every labeled vector
-    val filtered = Ann.ivfLiveTopK(spark, q, "embedding", "vec_id",
+    val filtered = Ann.ivfIndexTopK(spark, q, "embedding", "vec_id",
       path, k = 400, nprobe = 8, where = pred).collect()
-    val unfiltered = Ann.ivfLiveTopK(spark, q, "embedding", "vec_id",
+    val unfiltered = Ann.ivfIndexTopK(spark, q, "embedding", "vec_id",
       path, k = 400, nprobe = 8).collect()
     val ids = filtered.map(_.getLong(1)).toSet
     // metadata-less batch-1 vectors (vec_id >= 400) never match a
@@ -208,7 +208,7 @@ class FilteredAnnSpec extends SparkSpec {
         .filter(col("label") >= 0), "embedding", "vec_id",
         k = 400, nlist = 8, nprobe = 8, codebook = Some(seeded))
       .orderBy(col("query_id"), col("rank")).collect()
-    val got = Ann.ivfLiveTopK(spark, q, "embedding", "vec_id", path,
+    val got = Ann.ivfIndexTopK(spark, q, "embedding", "vec_id", path,
         k = 400, nprobe = 8, where = pred)
       .orderBy(col("query_id"), col("rank")).collect()
     assert(got.map(_.toString).toSeq === ref.map(_.toString).toSeq)
@@ -245,7 +245,7 @@ class FilteredAnnSpec extends SparkSpec {
     val q = upd.select((col("vec_id") + 900000L).as("vec_id"),
       col("embedding"))
     // pre-vacuum the live view serves the increment row...
-    val before = Ann.ivfLiveTopK(spark, q, "embedding", "vec_id", path,
+    val before = Ann.ivfIndexTopK(spark, q, "embedding", "vec_id", path,
         k = 3, nprobe = 8).orderBy(col("rank")).collect()
     Ann.vacuumIvfIndex(spark, path)
     // ...and post-vacuum the stored index must serve the SAME rows

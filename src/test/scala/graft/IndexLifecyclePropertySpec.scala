@@ -64,7 +64,7 @@ class IndexLifecyclePropertySpec extends SparkSpec {
           emb.filter(col("vec_id").isin(live.toSeq: _*)),
           "embedding", "vec_id", fresh, nlist = 6,
           codebook = Some(codebook))
-        val got = Ann.ivfLiveTopK(spark, queries, "embedding", "vec_id",
+        val got = Ann.ivfIndexTopK(spark, queries, "embedding", "vec_id",
             idx, k = 4, nprobe = 3)
           .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
         val want = Ann.ivfIndexTopK(spark, queries, "embedding", "vec_id",

@@ -23,8 +23,7 @@ import graft.sinks.Sinks
   *  - type-preserving tombstones (a string-id corpus's delete must
   *    actually mask; the old cast-to-long produced null tombstones
   *    that matched nothing);
-  *  - tombstone masking on EVERY probe API (`ivfIndexTopK`, not just
-  *    the lifecycle-aware `ivfLiveTopK`);
+  *  - tombstone masking in the stored-index probe (`ivfIndexTopK`);
   *  - the lake's one swap protocol (`graft.sinks.Sinks.swap`), which
   *    both families' rewrites publish through: its heal
   *    ([[graft.sinks.Sinks.healSwap]]) takes `.__old__`, not Spark's
@@ -113,7 +112,7 @@ class IndexLifecycleSpec extends SparkSpec {
         col("embedding"))
     Ann.buildIvfIndex(corpus, "embedding", "sid", idx, nlist = 4)
     val queries = corpus.limit(3)
-    val before = Ann.ivfLiveTopK(spark, queries, "embedding", "sid",
+    val before = Ann.ivfIndexTopK(spark, queries, "embedding", "sid",
       idx, k = 5, nprobe = 4)
     val victim = before.select(col("corpus_id")).limit(1)
       .collect().head.getString(0)
@@ -123,7 +122,7 @@ class IndexLifecycleSpec extends SparkSpec {
       .schema("corpus_id").dataType
     assert(tombType === org.apache.spark.sql.types.StringType)
     // …and the delete is actually visible: the victim never surfaces
-    val after = Ann.ivfLiveTopK(spark, queries, "embedding", "sid",
+    val after = Ann.ivfIndexTopK(spark, queries, "embedding", "sid",
       idx, k = 5, nprobe = 4)
       .filter(col("corpus_id") === victim).count()
     assert(after === 0L)
@@ -224,7 +223,7 @@ class IndexLifecycleSpec extends SparkSpec {
       .select(col("vec_id")), "vec_id", base.toString)
     val q = emb.filter(col("vec_id") < 5)
     def probe(idx: String): Seq[Seq[Any]] =
-      Ann.ivfLiveTopK(spark, q, "embedding", "vec_id", idx, k = 3,
+      Ann.ivfIndexTopK(spark, q, "embedding", "vec_id", idx, k = 3,
           nprobe = 3)
         .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
     val clean = tmp.resolve("clean")

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.similarity.Ann
 
 /** The streaming IVF-index lifecycle ([[Ann.appendIvfBatch]] /
-  * [[Ann.ivfLiveTopK]] / [[graft.streaming.Streaming.ivfIngestStream]]):
+  * [[Ann.ivfIndexTopK]] / [[graft.streaming.Streaming.ivfIngestStream]]):
   * the streamed index must equal the one-shot inline route for ANY
   * batch split, a replayed stream must leave the increment log
   * byte-identical (exactly-once via dynamic partition overwrite), and
@@ -42,7 +42,7 @@ class IvfIngestSpec extends SparkSpec {
   }
 
   private def probe(idx: String): Seq[(Long, Long, Double, Int)] =
-    Ann.ivfLiveTopK(spark, emb.filter(col("vec_id") < 5), "embedding",
+    Ann.ivfIndexTopK(spark, emb.filter(col("vec_id") < 5), "embedding",
         "vec_id", idx, k = 3, nprobe = 3)
       .orderBy(col("query_id"), col("rank"))
       .collect()
@@ -82,7 +82,7 @@ class IvfIngestSpec extends SparkSpec {
         lo = hi
       }
       runStream(stage, idx, tmp.resolve("ckpt"))
-      val got = Ann.ivfLiveTopK(spark, emb.filter(col("vec_id") < 5),
+      val got = Ann.ivfIndexTopK(spark, emb.filter(col("vec_id") < 5),
           "embedding", "vec_id", idx, k = 3, nprobe = 3)
         .orderBy(col("query_id"), col("rank"))
         .collect().map(_.toSeq).toSeq
@@ -205,7 +205,7 @@ class IvfIngestSpec extends SparkSpec {
         emb.filter(!col("vec_id").isin(dels.toSeq: _*)),
         "embedding", "vec_id", s"${ref.resolve("idx")}", nlist = 8,
         codebook = Some(codebook))
-      val want = Ann.ivfLiveTopK(spark,
+      val want = Ann.ivfIndexTopK(spark,
           emb.filter(col("vec_id") < 5), "embedding", "vec_id",
           s"${ref.resolve("idx")}", k = 3, nprobe = 3)
         .orderBy(col("query_id"), col("rank"))
@@ -226,5 +226,42 @@ class IvfIngestSpec extends SparkSpec {
     runStream(stage, idx, tmp.resolve("ckpt"))
     assert(fileState(base) === before,
       "base posting files changed under ingest")
+  }
+
+  test("every stored-index probe sees a streamed batch before any " +
+      "vacuum: ivfIndexTopK, the escalation loop and vectorSearch") {
+    val queries = emb.filter(col("vec_id") < 5)
+    // the batch holds each query's true nearest neighbour, so a probe
+    // that reads the base postings alone answers differently
+    val nn = Ann.bruteTopK(queries, emb, "embedding", "vec_id", k = 1)
+      .collect().map(_.getLong(1)).toSet
+    val inBatch = col("vec_id").isin(nn.toSeq: _*) || col("vec_id") >= 450
+    val tmp = Files.createTempDirectory("graft_ivf_vis")
+    val idx = tmp.resolve("idx").toString
+    Ann.buildIvfIndex(emb.filter(!inBatch), "embedding", "vec_id", idx,
+      nlist = 8)
+    Ann.appendIvfBatch(spark, emb.filter(inBatch), "embedding", "vec_id",
+      idx, batchId = 0L)
+    // the model: a fresh index over base ∪ batch, same codebook
+    val codebook = Ann.seedCodebook(emb.filter(!inBatch), "embedding",
+      "vec_id", 8)
+    val fresh = tmp.resolve("fresh").toString
+    Ann.buildIvfIndex(emb, "embedding", "vec_id", fresh, nlist = 8,
+      codebook = Some(codebook))
+
+    def rows(df: DataFrame): Seq[Seq[Any]] =
+      df.orderBy(col("query_id"), col("rank")).collect().map(_.toSeq).toSeq
+    val want = rows(Ann.ivfIndexTopK(spark, queries, "embedding",
+      "vec_id", fresh, k = 3, nprobe = 3))
+    assert(want.exists(r => nn.contains(r(1).asInstanceOf[Long])),
+      "the model's answer must include a streamed vector")
+    assert(rows(Ann.ivfIndexTopK(spark, queries, "embedding", "vec_id",
+      idx, k = 3, nprobe = 3)) === want, "ivfIndexTopK")
+    assert(rows(Ann.ivfIndexTopKEscalating(spark, queries, "embedding",
+      "vec_id", idx, k = 3, nprobe = 3)) === want, "ivfIndexTopKEscalating")
+    val svc = new graft.service.QueryService(spark, sf0001)
+    def served(path: String): Set[Map[String, Any]] =
+      svc.vectorSearch(queries, path, k = 3, nprobe = 3).records.toSet
+    assert(served(idx) === served(fresh), "vectorSearch")
   }
 }

@@ -112,6 +112,10 @@ class ServiceHttpSpec extends SparkSpec with BeforeAndAfterAll {
     val row0 = j.get("data").get(0)
     assert(row0.has("ts") && row0.has("user_id") && row0.has("value") &&
       !row0.has("event_type"))
+    val (c2, two) = get("/api/v1/query/influxdb?measurement=events" +
+      "&start=2024-01-01&stop=2024-01-08&limit=2")
+    assert(c2 == 200 && two.get("count").asLong() == 2 &&
+      two.get("data").size() == 2, two)
   }
 
   test("sql + explain extensions over HTTP") {
@@ -196,6 +200,7 @@ class ServiceHttpSpec extends SparkSpec with BeforeAndAfterAll {
     for ((c, j) <- Seq(
         get("/api/v1/query/postgres?table=customer&limit=-1"),
         get("/api/v1/query/mongodb?collection=orders&limit=abc"),
+        get("/api/v1/query/influxdb?measurement=events&limit=-1"),
         post("/api/v1/sql", """{"sql": "SELECT 1 AS one", "limit": "abc"}"""),
         post("/api/v1/sql", """{"sql": "SELECT 1 AS one", "limit": -5}""")))
       assert(c == 422 && j.get("detail").asText().contains("limit"), j)

@@ -257,7 +257,7 @@ class StreamingChaosSpec extends SparkSpec {
         ckpt).start()
     }
     def probe(idx: String): Seq[Seq[Any]] =
-      Ann.ivfLiveTopK(spark, emb.filter(col("vec_id") < 5), "embedding",
+      Ann.ivfIndexTopK(spark, emb.filter(col("vec_id") < 5), "embedding",
           "vec_id", idx, k = 3, nprobe = 3)
         .orderBy(col("query_id"), col("rank"))
         .collect().map(_.toSeq).toSeq
