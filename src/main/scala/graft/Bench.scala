@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
@@ -42,6 +43,10 @@ import org.apache.spark.sql.SparkSession
   * IO REGRESSION GATE: pass-1 shuffle accounting (`io_pass1`) is the
   * input to [[IoGate]], which compares each query against the
   * committed `IO_BUDGET.json` — see its scaladoc.
+  *
+  * GENERATED CODE: `codegen_compiles` maps each query to the classes
+  * Spark compiled while it ran in the last (warm) pass; a warm compile
+  * means its code was evicted from the codegen cache.
   *
   * CALIBRATION SENTINEL: a fixed, plan-trivial probe is timed at the
   * start of every pass (main / slope / sf1) and recorded in
@@ -288,6 +293,7 @@ object Bench {
     val io = scala.collection.mutable.Map
       .empty[String, org.apache.spark.graftx.StageMetrics.Totals]
     val raw = scala.collection.mutable.Map.empty[String, List[Double]]
+    val compiled = scala.collection.mutable.Map.empty[String, Long]
     // queries that threw on any pass: recorded in BOTH JSON outputs and
     // turned into a non-zero exit, so a partially-failed run can never
     // read as clean from its timing totals alone
@@ -345,6 +351,9 @@ object Bench {
           f""""n_queries":${medians.length},"queries":${fmt(medians)},""" +
           f""""raw_passes":${rawFmt(names.map { case (n, _) => n -> raw(n) })},""" +
           f""""io_pass1":$ioJson,""" +
+          f""""codegen_compiles":${names.map { case (n, _) =>
+            "\"" + n + "\":" + compiled.getOrElse(n, 0L) }
+            .mkString("{", ",", "}")},""" +
           f""""shuffle_write_total_mb":$shuffleTotalMb%.1f,""" +
           f""""calibration":${calJson(calMain.toSeq)},""" +
           f""""calibration_io":${calJson(calMainIo.toSeq)},""" +
@@ -392,6 +401,7 @@ object Bench {
           if (pass == 1) Some(org.apache.spark.graftx.StageMetrics
             .totals(spark.sparkContext, ioAcc))
           else None
+        val c0 = compiles()
         val t0 = System.nanoTime()
         try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         catch { case e: Throwable =>
@@ -400,6 +410,7 @@ object Bench {
             s"[bench] $name pass $pass failed: ${e.getMessage}")
         }
         raw(name) = raw.getOrElse(name, Nil) :+ (System.nanoTime() - t0) / 1e9
+        compiled(name) = compiles() - c0
         before.foreach { b =>
           io(name) = org.apache.spark.graftx.StageMetrics
             .totals(spark.sparkContext, ioAcc) - b
@@ -591,12 +602,16 @@ object Bench {
     }
   }
 
+  /** Generated classes Spark has compiled in this JVM so far. */
+  private def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** Names mode: for each query, its formatted physical plan once, then
     * every Spark job of the warm (last) of `reps` passes into the noop
     * sink — start offset, duration, gap since the previous job, stage
     * task totals and job description — so serialized driver actions
-    * and their relative weight are visible without the UI. Every pass
-    * starts from an empty cache. */
+    * and their relative weight are visible without the UI; the header
+    * counts the pass's compiled classes. Every pass starts from an
+    * empty cache. */
   private def profile(spark: SparkSession, sfDir: String, reps: Int,
       names: Seq[String]): Unit = {
     case class Job(id: Int, start: Long, var end: Long = -1L,
@@ -626,12 +641,15 @@ object Bench {
       (1 to reps).foreach { rep =>
         jobs.clear(); stageToJob.clear()
         org.apache.spark.graftx.Blocks.dropAll(spark)
+        val c0 = compiles()
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         val wall = (System.nanoTime() - t0) / 1e9
+        val compiled = compiles() - c0
         Thread.sleep(300) // let the listener bus drain
         if (rep == reps) { // print the warm pass only
-          println(f"\n===== $name pass$rep wall=$wall%.3f s jobs=${jobs.size} =====")
+          println(f"\n===== $name pass$rep wall=$wall%.3f s jobs=${jobs.size} " +
+            s"compiles=$compiled =====")
           val t0ms = jobs.values.map(_.start).minOption.getOrElse(0L)
           var lastEnd = 0L
           jobs.values.toSeq.sortBy(_.start).foreach { j =>

@@ -14,7 +14,8 @@ import org.apache.spark.sql.SparkSession
   *    `QueryService` does) share the executors; jobs without a pool go
   *    to the default pool, which Spark 4.1 also runs FAIR;
   *  - [[org.apache.spark.sql.graftx.GraftExtensions]], UTC, UI off and
-  *    log level WARN.
+  *    log level WARN. The extension also sizes the codegen cache, for
+  *    sessions built without this factory too.
   *
   * No key is set to the value Spark already defaults to (adaptive
   * execution, for one, is on by default). Callers pass only the keys

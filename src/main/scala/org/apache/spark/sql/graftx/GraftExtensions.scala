@@ -2,6 +2,7 @@
 // constructors and FunctionRegistry builder types are private[sql].
 package org.apache.spark.sql.graftx
 
+import org.apache.spark.{SparkConf, SparkContext}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
@@ -28,6 +29,13 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *    rollup);
   *  - `injectPlannerStrategy` for [[TopKPerGroupStrategy]] (per-group
   *    top-k planned as partial → exchange → final).
+  *
+  * It also sets `spark.sql.codegen.cache.maxEntries`
+  * ([[GraftExtensions.codegenCache]]): Spark's 100 classes are fewer
+  * than one ETL cycle builds, so the LRU recompiled them every cycle.
+  * That static conf is read once per JVM and must be on the context's
+  * conf before `SharedState` is built; this extension runs at exactly
+  * that point in every engine session, `graft.Session`'s or not.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -36,6 +44,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       "", "", "", "", "", "", "built-in")
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    SparkContext.getActive.foreach(sc => sc.conf.setIfMissing(
+      GraftExtensions.CodegenCacheKey, GraftExtensions.codegenCache(sc.conf)))
     ext.injectFunction((
       FunctionIdentifier("cosine_similarity"),
       info("cosine_similarity",
@@ -100,4 +110,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => MvRewrite)
     ext.injectPlannerStrategy(_ => TopKPerGroupStrategy)
   }
+}
+
+object GraftExtensions {
+  val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
+
+  /** The codegen cache size a session on `conf` gets: the caller's own
+    * value, else 1000 classes (an ETL cycle's working set, and room). */
+  def codegenCache(conf: SparkConf): String = conf.get(CodegenCacheKey, "1000")
 }
