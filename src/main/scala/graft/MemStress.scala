@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.collection.immutable.ListMap
+
 /** Constrained-memory evidence: run the heaviest queries under a
   * DELIBERATELY small heap and record per-query spill, proving the
   * engine degrades to disk instead of dying. Every scale claim the
@@ -20,58 +24,36 @@ package graft
   *
   * Output: one JSON line per run — per-query secs + memory/disk spill
   * bytes, `n_failed` (an OOM lands there or kills the JVM, either way
-  * loud) — also written to MEMSTRESS.json. Uses default
-  * `spark.memory.fraction` and [[Session]]'s shuffle partitions (one
-  * per core) so the partition sizing claim ("fits in executor memory
-  * at the target SF") is tested, not tuned around. */
+  * loud; a failed query gets no `queries` entry) — also written to
+  * MEMSTRESS.json. Each query runs once through [[Bench.Runner]].
+  * Uses default `spark.memory.fraction` and [[Session]]'s shuffle
+  * partitions (one per core) so the partition sizing claim ("fits in
+  * executor memory at the target SF") is tested, not tuned around. */
 object MemStress {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/sf1")
     // no spark.local.dir override: the evidence is disk-spill behavior
     val spark = Session("graft-memstress")
     val heapMb = Runtime.getRuntime.maxMemory() / 1048576
-    // JVM/codegen warmup (Bench's protocol) so secs aren't JIT-noise;
-    // the spill numbers are unaffected either way
-    try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => }
-
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val names = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    val acc = org.apache.spark.graftx.StageMetrics
-      .install(spark.sparkContext)
-    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
-    val out = scala.collection.mutable.ListBuffer
-      .empty[(String, Double, Long, Long)]
-    for ((name, fn) <- names) {
-      val before = org.apache.spark.graftx.StageMetrics
-        .totals(spark.sparkContext, acc)
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        failed += name
-        System.err.println(s"[memstress] $name failed: ${e.getMessage}")
-      }
-      val secs = (System.nanoTime() - t0) / 1e9
-      val d = org.apache.spark.graftx.StageMetrics
-        .totals(spark.sparkContext, acc) - before
-      out += ((name, secs, d.spillMem, d.spillDisk))
-      org.apache.spark.graftx.Blocks.dropAll(spark)
+    // Bench's warm-up so secs aren't JIT noise; the spill numbers are
+    // unaffected either way
+    Bench.warmUp(spark)
+    val runner = new Bench.Runner(spark, "memstress")
+    val names = Bench.selected()
+    val queries = names.flatMap { case (name, fn) =>
+      val r = runner(name, s"at $sfDir", metered = true)(fn(spark, sfDir))
+      val d = r.io.get
+      r.secs.map(secs => name -> ListMap("secs" -> Bench.round(secs),
+        "spill_mem_mb" -> Bench.round(d.spillMem / 1048576.0, 1),
+        "spill_disk_mb" -> Bench.round(d.spillDisk / 1048576.0, 1)))
     }
-    val qJson = out.map { case (n, s, sm, sd) =>
-      "\"" + n + f"""\":{"secs":$s%.3f,"spill_mem_mb":${sm / 1048576.0}%.1f,""" +
-        f""""spill_disk_mb":${sd / 1048576.0}%.1f}"""
-    }.mkString("{", ",", "}")
-    val line =
-      f"""{"metric":"memstress","heap_mb":$heapMb,"sf":"$sfDir",""" +
-        f""""n_queries":${out.length},"n_failed":${failed.size},""" +
-        f""""failures":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-        f""""queries":$qJson}"""
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("MEMSTRESS.json"), line + "\n")
+    val line = Bench.json(ListMap("metric" -> "memstress",
+      "heap_mb" -> heapMb, "sf" -> sfDir, "n_queries" -> names.length,
+      "n_failed" -> runner.failed.size, "failures" -> runner.failed.toSeq,
+      "queries" -> ListMap.from(queries)))
+    Files.writeString(Paths.get("MEMSTRESS.json"), line + "\n")
     println(line)
     spark.stop()
-    if (failed.nonEmpty) sys.exit(2)
+    if (runner.failed.nonEmpty) sys.exit(2)
   }
 }

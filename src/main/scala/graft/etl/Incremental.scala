@@ -2,8 +2,6 @@ package graft.etl
 
 import java.nio.file.{Files, Paths}
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -104,9 +102,9 @@ object Incremental {
       // carry earlier batches' markers forward, then add this one
       val staged = Paths.get(tmp)
       if (Files.exists(live))
-        scala.util.Using.resource(Files.list(live))(_.iterator().asScala
+        Utils.listDir(live)
           .filter(_.getFileName.toString.startsWith("_applied_batch_"))
-          .foreach(m => Files.createFile(staged.resolve(m.getFileName))))
+          .foreach(m => Files.createFile(staged.resolve(m.getFileName)))
       Files.createFile(staged.resolve(markerName))
       true
     }
@@ -133,11 +131,6 @@ object Incremental {
       .agg(count(lit(1)).as("n"), sum(col("value")).as("total"))
     graft.sinks.Sinks.writeSwap(kept.unionByName(recomputed), rollupPath)
   }
-
-  /** One incremental cycle for a daily event rollup: bookmark-filter
-    * the source (strictly-past pull, S9), aggregate the batch, fold it
-    * in. Returns the next bookmark (None on an empty pull — keep the
-    * previous one). */
 
   /** Append-only incremental maintenance of a two-table JOIN
     * materialized view — the delta-join algebra behind every
@@ -172,6 +165,10 @@ object Incremental {
       .unionByName(aDelta.join(bDelta, joinCols))
   }
 
+  /** One incremental cycle for a daily event rollup: bookmark-filter
+    * the source (strictly-past pull, S9), aggregate the batch, fold it
+    * in. Returns the next bookmark (None on an empty pull — keep the
+    * previous one). */
   def dailyEventRollup(spark: SparkSession, events: DataFrame,
       rollupPath: String, bookmark: Option[java.sql.Timestamp])
       : Option[java.sql.Timestamp] = {

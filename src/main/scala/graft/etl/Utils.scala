@@ -99,24 +99,12 @@ object Utils {
       all.reverse.foreach(Files.deleteIfExists)
     }
 
-  /** One process-wide scratch root, removed recursively by a SINGLE
-    * shutdown hook (registered on first use).
-    *
-    * PLACEMENT (optimization guide §6, I/O and file layout): everything
-    * under this root is per-invocation scratch — staged micro-batch
-    * files, streaming checkpoints + state stores, per-query sink
-    * outputs, index build dirs — i.e. fsync-heavy SMALL-file I/O whose
-    * durability ends when the query returns. That traffic belongs on
-    * the fastest local volume, not on the lake's disk: Structured
-    * Streaming's HDFSBackedStateStore commits one delta file per state
-    * partition per micro-batch, and this host's /tmp sits on a shared
-    * ext4 disk whose sync latency is the documented interference source
-    * (see Bench.calibrateIo). Resolution order: `SPARK_GRAFT_SCRATCH`
-    * (production: point it at node-local NVMe) → RAM-backed `/dev/shm`
-    * when writable (Linux default here) → `java.io.tmpdir`. Results are
-    * unchanged — scratch holds only intermediates recomputed from the
-    * parquet inputs on every invocation; nothing is reused across runs
-    * (every tempDir/scratchDir call returns a fresh or wiped dir). */
+  /** The entries of directory `p`, read with the listing stream closed:
+    * an unclosed `Files.list` holds its descriptor for the life of the
+    * JVM, even once fully consumed. */
+  def listDir(p: java.nio.file.Path): List[java.nio.file.Path] =
+    scala.util.Using.resource(Files.list(p))(_.iterator().asScala.toList)
+
   /** The volume scratch lives on: `SPARK_GRAFT_SCRATCH` →
     * `/dev/shm` when writable → `java.io.tmpdir`. Exposed so session
     * builders (Bench/Verify) can point `spark.local.dir` — shuffle
@@ -137,6 +125,24 @@ object Utils {
     base
   }
 
+  /** One process-wide scratch root, removed recursively by a SINGLE
+    * shutdown hook (registered on first use).
+    *
+    * PLACEMENT (optimization guide §6, I/O and file layout): everything
+    * under this root is per-invocation scratch — staged micro-batch
+    * files, streaming checkpoints + state stores, per-query sink
+    * outputs, index build dirs — i.e. fsync-heavy SMALL-file I/O whose
+    * durability ends when the query returns. That traffic belongs on
+    * the fastest local volume, not on the lake's disk: Structured
+    * Streaming's HDFSBackedStateStore commits one delta file per state
+    * partition per micro-batch, and this host's /tmp sits on a shared
+    * ext4 disk whose sync latency is the documented interference source
+    * (see Bench.calibrateIo). Resolution order: `SPARK_GRAFT_SCRATCH`
+    * (production: point it at node-local NVMe) → RAM-backed `/dev/shm`
+    * when writable (Linux default here) → `java.io.tmpdir`. Results are
+    * unchanged — scratch holds only intermediates recomputed from the
+    * parquet inputs on every invocation; nothing is reused across runs
+    * (every tempDir/scratchDir call returns a fresh or wiped dir). */
   private lazy val scratchRoot: java.nio.file.Path = {
     val root = Files.createTempDirectory(scratchBase, "graft-scratch-")
     Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(root)))

@@ -115,13 +115,13 @@ object IndexLifecycle {
             !p.getFileName.toString.startsWith("part-")) {
             try {
               if (Files.isDirectory(p)) {
-                if (!Files.list(p).iterator().hasNext) Files.delete(p)
+                if (graft.etl.Utils.listDir(p).isEmpty) Files.delete(p)
               } else Files.delete(p) // stale markers (_SUCCESS, .crc)
             } catch { case _: java.io.IOException => () }
           }
         }
       try {
-        if (Files.isDirectory(r) && !Files.list(r).iterator().hasNext)
+        if (Files.isDirectory(r) && graft.etl.Utils.listDir(r).isEmpty)
           Files.delete(r)
       } catch { case _: java.io.IOException => () }
     }

@@ -105,26 +105,6 @@ object Scale {
       .select(keys(groupCol) +: ps.map { case (name, _) => agged(name) }: _*)
   }
 
-  /** EXACT global (ungrouped) quantiles without a global sort — the
-    * scale path where `exactPercentiles` degenerates (one group = one
-    * task sorting the whole column). Four scan-shaped jobs, no
-    * full-data shuffle:
-    *
-    *   0. one count (sizes the probe slack);
-    *   1. one aggregate: a t-digest-style sketch (`approx_percentile`,
-    *      rank error ≤ n/accuracy) probed at p ± max(2/accuracy, 3/n)
-    *      → a value bracket guaranteed to contain the target rank;
-    *   2. one aggregate: exact `count(v < lo_p)` for every bracket;
-    *   3. rank only the rows INSIDE the brackets (≈ 4n/accuracy rows
-    *      per quantile, ~0.04% at the default) and pick the two
-    *      neighbors each quantile interpolates between.
-    *
-    * At 100 TB that is four columnar scans and a sort of a few
-    * hundred-thousandths of the data, vs. shuffling and sorting all of
-    * it. Interpolation matches `percentile` / DuckDB `quantile_cont`
-    * (continuous index `i = p·(n-1)`). Driver traffic is scalars only
-    * (count, bracket bounds, neighbor values).
-    */
   /** WEIGHTED per-group quantiles — each row counts `weightCol` times
     * (the weighted median of unit price by quantity answers "what does
     * the typical UNIT sell at", where the unweighted median answers
@@ -155,6 +135,26 @@ object Scale {
     c.groupBy(col(groupCol)).agg(aggs.head, aggs.tail: _*)
   }
 
+  /** EXACT global (ungrouped) quantiles without a global sort — the
+    * scale path where `exactPercentiles` degenerates (one group = one
+    * task sorting the whole column). Four scan-shaped jobs, no
+    * full-data shuffle:
+    *
+    *   0. one count (sizes the probe slack);
+    *   1. one aggregate: a t-digest-style sketch (`approx_percentile`,
+    *      rank error ≤ n/accuracy) probed at p ± max(2/accuracy, 3/n)
+    *      → a value bracket guaranteed to contain the target rank;
+    *   2. one aggregate: exact `count(v < lo_p)` for every bracket;
+    *   3. rank only the rows INSIDE the brackets (≈ 4n/accuracy rows
+    *      per quantile, ~0.04% at the default) and pick the two
+    *      neighbors each quantile interpolates between.
+    *
+    * At 100 TB that is four columnar scans and a sort of a few
+    * hundred-thousandths of the data, vs. shuffling and sorting all of
+    * it. Interpolation matches `percentile` / DuckDB `quantile_cont`
+    * (continuous index `i = p·(n-1)`). Driver traffic is scalars only
+    * (count, bracket bounds, neighbor values).
+    */
   def exactGlobalQuantiles(df: DataFrame, valueCol: String,
       ps: Seq[(String, Double)], accuracy: Int = 10000): DataFrame = {
     val spark = df.sparkSession

@@ -46,7 +46,6 @@ object StreamingQueries extends QuerySection {
       mtime: Long): Unit = {
     import java.nio.file.Files
     import java.nio.file.attribute.FileTime
-    import scala.jdk.CollectionConverters._
     val gen = graft.etl.Utils.tempDir("graft_stage_gen")
     // repartition(1), NOT coalesce(1): coalesce collapses the upstream
     // scan+filter into the single write task (serializing the whole
@@ -59,7 +58,7 @@ object StreamingQueries extends QuerySection {
     // tie-breaks all key on explicit columns, never on file position —
     // and the oracle gate re-proves it (329/329 after this change).
     df.repartition(1).write.mode("overwrite").parquet(gen.toString)
-    val part = Files.list(gen).iterator().asScala
+    val part = graft.etl.Utils.listDir(gen)
       .find(_.toString.endsWith(".parquet")).get
     Files.copy(part, dst)
     Files.setLastModifiedTime(dst, FileTime.fromMillis(mtime))
@@ -78,12 +77,11 @@ object StreamingQueries extends QuerySection {
       stage: java.nio.file.Path, name: String, mtime: Long): Unit = {
     import java.nio.file.Files
     import java.nio.file.attribute.FileTime
-    import scala.jdk.CollectionConverters._
     val gen = graft.etl.Utils.tempDir("graft_stage_txt")
     half.write.mode("overwrite").text(gen.toString) // tempDir pre-creates gen
-    Files.list(gen).iterator().asScala
+    graft.etl.Utils.listDir(gen)
       .filter(_.getFileName.toString.startsWith("part-"))
-      .toSeq.sortBy(_.toString).zipWithIndex
+      .sortBy(_.toString).zipWithIndex
       .foreach { case (p, i) =>
         val dst = stage.resolve(f"$name-$i%03d.txt")
         Files.copy(p, dst)
@@ -565,7 +563,6 @@ object StreamingQueries extends QuerySection {
   private def streamUpsert(s: SparkSession, dir: String): DataFrame = {
     import java.nio.file.Files
     import java.nio.file.attribute.FileTime
-    import scala.jdk.CollectionConverters._
     val tmp = graft.etl.Utils.tempDir("graft_cdc")
     val stage = Files.createDirectory(tmp.resolve("changes"))
     val ev = graft.Tables.load(s, dir, "events")
@@ -575,7 +572,7 @@ object StreamingQueries extends QuerySection {
         mtime: Long): Unit = {
       val gen = graft.etl.Utils.tempDir("graft_cdc_gen")
       ev.filter(cond).repartition(1).write.mode("overwrite").parquet(gen.toString) // see stageOne: repartition keeps the scan parallel
-      val part = Files.list(gen).iterator().asScala
+      val part = graft.etl.Utils.listDir(gen)
         .find(_.toString.endsWith(".parquet")).get
       val dst = stage.resolve(name)
       Files.copy(part, dst)
@@ -837,7 +834,6 @@ object StreamingQueries extends QuerySection {
   private def streamJdbcUpsert(s: SparkSession, dir: String): DataFrame = {
     import java.nio.file.Files
     import java.nio.file.attribute.FileTime
-    import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.types._
     System.setProperty("derby.stream.error.file", "/tmp/derby.log")
     val url = "jdbc:derby:memory:graft_stream;create=true"
@@ -851,7 +847,7 @@ object StreamingQueries extends QuerySection {
         mtime: Long): Unit = {
       val gen = graft.etl.Utils.tempDir("graft_jdbc_cdc_gen")
       ev.filter(cond).repartition(1).write.mode("overwrite").parquet(gen.toString) // see stageOne: repartition keeps the scan parallel
-      val part = Files.list(gen).iterator().asScala
+      val part = graft.etl.Utils.listDir(gen)
         .find(_.toString.endsWith(".parquet")).get
       val dst = stage.resolve(name)
       Files.copy(part, dst)

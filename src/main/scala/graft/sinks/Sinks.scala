@@ -276,10 +276,9 @@ object Sinks {
     * driver-side directory metadata — no data scan. */
   object Versioned {
     private def committed(path: String): Seq[Long] = {
-      import scala.jdk.CollectionConverters._
       val root = Paths.get(path)
       if (!Files.exists(root)) Seq.empty
-      else Files.list(root).iterator().asScala
+      else graft.etl.Utils.listDir(root)
         .filter(p => p.getFileName.toString.startsWith("v=") &&
           Files.exists(p.resolve("_SUCCESS")))
         .map(_.getFileName.toString.stripPrefix("v=").toLong)
@@ -291,10 +290,9 @@ object Sinks {
       * the next writer would target the same `v=N` and fail forever
       * on ErrorIfExists. */
     private def allVersions(path: String): Seq[Long] = {
-      import scala.jdk.CollectionConverters._
       val root = Paths.get(path)
       if (!Files.exists(root)) Seq.empty
-      else Files.list(root).iterator().asScala
+      else graft.etl.Utils.listDir(root)
         .map(_.getFileName.toString)
         .filter(_.startsWith("v="))
         .flatMap(n => scala.util.Try(n.stripPrefix("v=").toLong).toOption)
