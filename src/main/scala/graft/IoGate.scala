@@ -26,8 +26,19 @@ object IoGate {
   private val Headroom = 2.0
   private val FloorBytes = 4L * 1024 * 1024
 
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** The budget file's text: one entry per query, names sorted. */
+  def budgetJson(budget: Map[String, Long]): String =
+    mapper.writerWithDefaultPrettyPrinter().writeValueAsString(
+      new java.util.TreeMap[String, Long](budget.asJava)) + "\n"
+
+  /** [[budgetJson]]'s inverse. */
+  def readBudget(json: String): Map[String, Long] =
+    mapper.readTree(json).properties().asScala
+      .map(e => e.getKey -> e.getValue.asLong()).toMap
+
   private def shuffleWriteBytes(): Map[String, Long] = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = mapper.readTree(
       java.nio.file.Files.readString(java.nio.file.Paths.get(BenchFile)))
     val io = root.get("io_pass1")
@@ -40,19 +51,15 @@ object IoGate {
   def main(args: Array[String]): Unit = {
     val current = shuffleWriteBytes()
     if (args.headOption.contains("update")) {
-      val body = current.toSeq.sortBy(_._1).map { case (n, b) =>
-        s"""  "$n": $b""" }.mkString("{\n", ",\n", "\n}\n")
       java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(BudgetFile), body)
+        java.nio.file.Paths.get(BudgetFile), budgetJson(current))
       println(s"[iogate] wrote $BudgetFile (${current.size} queries)")
       return
     }
     val budgetPath = java.nio.file.Paths.get(BudgetFile)
     require(java.nio.file.Files.exists(budgetPath),
       s"$BudgetFile missing — run `graft.IoGate update` on a good build")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val budget = mapper.readTree(java.nio.file.Files.readString(budgetPath))
-      .properties().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap
+    val budget = readBudget(java.nio.file.Files.readString(budgetPath))
     var bad = 0
     current.toSeq.sortBy(_._1).foreach { case (name, bytes) =>
       budget.get(name) match {

@@ -40,6 +40,26 @@ object PlanGate {
   final case class Fp(exchange: Int, broadcast: Int, cartesian: Int,
       window: Int)
 
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** The budget file's text: one fingerprint per query, names sorted. */
+  def budgetJson(budget: Map[String, Fp]): String =
+    mapper.writerWithDefaultPrettyPrinter().writeValueAsString(
+      new java.util.TreeMap[String, java.util.Map[String, Int]](
+        budget.map { case (n, f) => n -> Map("exchange" -> f.exchange,
+          "broadcast" -> f.broadcast, "cartesian" -> f.cartesian,
+          "window" -> f.window).to(scala.collection.immutable.VectorMap)
+          .asJava }.asJava)) + "\n"
+
+  /** [[budgetJson]]'s inverse. */
+  def readBudget(json: String): Map[String, Fp] =
+    mapper.readTree(json).properties().asScala.map { e =>
+      e.getKey -> Fp(e.getValue.get("exchange").asInt(),
+        e.getValue.get("broadcast").asInt(),
+        e.getValue.get("cartesian").asInt(),
+        e.getValue.get("window").asInt())
+    }.toMap
+
   private def count(p: String, re: String): Int =
     re.r.findAllIn(p).size
 
@@ -134,12 +154,9 @@ object PlanGate {
           s"$BudgetFile left unchanged")
         sys.exit(1)
       }
-      val body = current.toSeq.sortBy(_._1).collect { case (n, Right(p)) =>
-        val f = fingerprint(p)
-        s"""  "$n": {"exchange": ${f.exchange}, "broadcast": ${f.broadcast}, "cartesian": ${f.cartesian}, "window": ${f.window}}"""
-      }.mkString("{\n", ",\n", "\n}\n")
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(BudgetFile), body)
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(BudgetFile),
+        budgetJson(current.collect { case (n, Right(p)) =>
+          n -> fingerprint(p) }))
       println(s"[plangate] wrote $BudgetFile (${current.size} queries)")
       return
     }
@@ -147,14 +164,7 @@ object PlanGate {
     val budgetPath = java.nio.file.Paths.get(BudgetFile)
     require(java.nio.file.Files.exists(budgetPath),
       s"$BudgetFile missing — run `graft.PlanGate update` on a good build")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val budget = mapper.readTree(java.nio.file.Files.readString(budgetPath))
-      .properties().asScala.map { e =>
-        e.getKey -> Fp(e.getValue.get("exchange").asInt(),
-          e.getValue.get("broadcast").asInt(),
-          e.getValue.get("cartesian").asInt(),
-          e.getValue.get("window").asInt())
-      }.toMap
+    val budget = readBudget(java.nio.file.Files.readString(budgetPath))
     val findings = judge(budget, current)
     findings.foreach(println)
     val bad = findings.count(_.fails)

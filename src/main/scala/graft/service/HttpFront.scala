@@ -4,6 +4,8 @@ import java.net.InetSocketAddress
 import java.net.URLDecoder
 import java.nio.charset.StandardCharsets.UTF_8
 
+import scala.collection.immutable.VectorMap
+
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
@@ -90,7 +92,7 @@ final class HttpFront(spark: SparkSession, sfDir: String,
     case n: Float => java.lang.Double.valueOf(n.toDouble)
     case n: Double => java.lang.Double.valueOf(n)
     case r: org.apache.spark.sql.Row =>
-      jsonable(r.schema.fieldNames.zip(r.toSeq).toMap)
+      jsonable(r.schema.fieldNames.zip(r.toSeq).to(VectorMap))
     case other => String.valueOf(other)
   }
 

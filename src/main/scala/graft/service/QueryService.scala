@@ -1,5 +1,7 @@
 package graft.service
 
+import scala.collection.immutable.VectorMap
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.Tables
@@ -35,8 +37,9 @@ final class QueryService(spark: SparkSession, sfDir: String) {
       pool: String = QueryService.InteractivePool) {
     lazy val records: Seq[Map[String, Any]] = inPool(pool) {
       val cols = data.columns
-      data.collect().toSeq
-        .map(r => cols.zipWithIndex.map { case (c, i) => c -> r.get(i) }.toMap)
+      // insertion-ordered: JSON keys keep the SELECT's column order
+      data.collect().toSeq.map(r => cols.zipWithIndex
+        .map { case (c, i) => c -> r.get(i) }.to(VectorMap))
     }
     def count: Long = records.size.toLong
   }

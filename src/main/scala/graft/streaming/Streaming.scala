@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
 import org.apache.spark.sql.Row
@@ -552,25 +552,119 @@ object Streaming {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
 
-  /** Run a streaming DataFrame to completion against currently-available
-    * input (the hourly-DAG equivalent) into an in-memory table.
+  /** A live stream directory over the raw events file: `copies`
+    * symlinks to `<dir>/events.parquet` (the file source wants a
+    * directory; linking beats rewriting every event row). Two copies
+    * plant an exact 2× duplication of every event. */
+  def liveEvents(dir: String, copies: Int = 1): String = {
+    import java.nio.file.{Files, Paths}
+    val tmp = graft.etl.Utils.tempDir("graft_live")
+    val src = Paths.get(dir, "events.parquet").toAbsolutePath
+    (0 until copies).foreach(i =>
+      Files.createSymbolicLink(tmp.resolve(s"events_$i.parquet"), src))
+    tmp.toString
+  }
+
+  /** Stage each batch frame as ONE parquet file with a pinned mtime and
+    * return a stream that reads them one file per trigger: the file
+    * source orders files by mtime, so batch i is micro-batch i — a
+    * deterministic schedule. Frames are written through Spark
+    * (canonical µs-UTC timestamp layout), never byte-copied from the
+    * raw lake, so every staged stream has ONE schema whichever
+    * generator wrote the source — see [[graft.Tables]] on layout drift.
+    * Batches are thunks staged concurrently from driver threads (mtimes
+    * are pinned, so staging order is free; guide §2.6): a batch that
+    * needs a driver probe first (bounds, sentinels) overlaps the
+    * others' writes. All frames share the first frame's schema. */
+  def stage(spark: SparkSession, batches: (() => DataFrame)*): DataFrame = {
+    import java.nio.file.Files
+    import java.nio.file.attribute.FileTime
+    val dir = graft.etl.Utils.tempDir("graft_stage")
+    val schemas = graft.etl.Utils.inParallel(batches.zipWithIndex.map {
+      case (batch, i) => () =>
+        val df = batch()
+        val gen = graft.etl.Utils.tempDir("graft_stage_gen")
+        // repartition(1), NOT coalesce(1): coalesce collapses the
+        // upstream scan+filter into the single write task (serializing
+        // the whole staging job), while repartition keeps them parallel
+        // and only the final write runs on one task (guide §2.4). Row
+        // order inside the staged file changes (round-robin exchange),
+        // which is safe: every consumer of a staged batch keys on
+        // explicit columns, never on file position.
+        df.repartition(1).write.mode("overwrite").parquet(gen.toString)
+        val part = graft.etl.Utils.listDir(gen)
+          .find(_.toString.endsWith(".parquet")).get
+        val dst = dir.resolve(f"b$i%03d.parquet")
+        Files.copy(part, dst)
+        Files.setLastModifiedTime(dst, FileTime.fromMillis((i + 1) * 1000000L))
+        df.schema
+    }: _*)
+    spark.readStream.schema(schemas.head)
+      .option("maxFilesPerTrigger", 1).parquet(dir.toString)
+  }
+
+  /** Flush rows for a bounded replay, in `events`' column order: one
+    * event per `kinds` entry at `ts`, with negative event and user ids
+    * that match no real row. A replay stages them after the real
+    * events so the watermark passes every real row's eviction bound
+    * (outer-join nulls, session timeouts); readers drop them by
+    * `user_id < 0`. */
+  def flushSentinels(events: DataFrame, ts: java.sql.Timestamp,
+      kinds: String*): DataFrame = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    kinds.zipWithIndex.map { case (k, i) => (-1L - i, ts, -1L - i, k) }
+      .toDF("event_id", "ts", "user_id", "event_type")
+      .withColumn("value", lit(0.0)).withColumn("props", lit("{}"))
+      .select(events.columns.map(col): _*)
+  }
+
+  /** Run `writer` to completion against the currently-available input
+    * (the hourly-DAG equivalent). `statePartitions` sets
+    * `spark.sql.shuffle.partitions` only around `start()`: the stream
+    * clones the session conf at start, and that value becomes its
+    * state-store partition count for the query's LIFETIME. A
+    * micro-batch pays per-partition state commit I/O on every trigger,
+    * so for these single-node runs a handful of state stores beats one
+    * per core (a cluster sizes it to state volume instead). `None`
+    * keeps the session's own. */
+  def drain(writer: DataStreamWriter[_],
+      statePartitions: Option[Int] = None): Unit = {
+    val key = "spark.sql.shuffle.partitions"
+    val spark = SparkSession.active
+    val saved = spark.conf.get(key)
+    statePartitions.foreach(n => spark.conf.set(key, n.toString))
+    val q = try writer.start() finally spark.conf.set(key, saved)
+    q.awaitTermination()
+  }
+
+  /** Bounded replay: run `df` to completion and read its output back.
+    * Each micro-batch is OVERWRITTEN into `<fresh dir>/batch=<id>` (the
+    * per-batch form of an idempotent write: a replayed batch rewrites
+    * exactly itself), which also takes update-mode output — the
+    * built-in file sink is append-only. The result is a parquet scan
+    * with `df`'s schema; nothing is collected to the driver.
     *
     * The checkpoint is placed EXPLICITLY on the fast scratch volume
     * ([[graft.etl.Utils.tempDir]]): without the option, Spark allocates
-    * its implicit temp checkpoint under `java.io.tmpdir` — the slow
-    * shared disk — and every micro-batch then pays per-state-partition
-    * delta-file commits plus offset/commit-log fsyncs there
-    * (optimization guide §6). A FRESH dir per call keeps runs
-    * independent: no offsets or state ever survive into the next
-    * invocation, so every run still computes from its staged inputs. */
-  def runAvailableNow(df: DataFrame, queryName: String,
-      outputMode: String = "append"): StreamingQuery = {
-    val q = df.writeStream.outputMode(outputMode)
-      .format("memory").queryName(queryName)
+    * its implicit temp checkpoint under `java.io.tmpdir` and every
+    * micro-batch pays its state and log commits there (optimization
+    * guide §6). Fresh dirs per call keep runs independent: no offsets
+    * or state survive into the next invocation. */
+  def replay(df: DataFrame, outputMode: String = "append",
+      statePartitions: Option[Int] = None): DataFrame = {
+    val out = graft.etl.Utils.tempDir("graft_replay").toString
+    drain(df.writeStream.outputMode(outputMode)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        batch.write.mode("overwrite").parquet(s"$out/batch=$batchId")
+      }
+      .trigger(Trigger.AvailableNow())
       .option("checkpointLocation",
-        graft.etl.Utils.tempDir("graft_ckpt").toString)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    q
+        graft.etl.Utils.tempDir("graft_ckpt").toString),
+      statePartitions)
+    // recursive lookup reads every batch dir without partition
+    // discovery, so no `batch` column joins the given schema
+    df.sparkSession.read.schema(df.schema)
+      .option("recursiveFileLookup", "true").parquet(out)
   }
 }

@@ -58,19 +58,16 @@ class EventTimeLayoutSpec extends SparkSpec {
       s"$dir/events"
     }
 
-    def collectAll(dir: String, tag: String): Array[(Long, Long)] = {
+    def collectAll(dir: String): Array[(Long, Long)] = {
       val df = Streaming.readEventsAuto(spark, dir)
       assert(df.schema("ts").dataType == TimestampType,
         "stream must normalize ts to µs-LTZ whatever the file layout")
-      Streaming.runAvailableNow(
-        df.select($"event_id", unix_micros($"ts").as("us")),
-        s"layout_sink_$tag", outputMode = "append")
-      spark.table(s"layout_sink_$tag").as[(Long, Long)]
-        .collect().sortBy(_._1)
+      Streaming.replay(df.select($"event_id", unix_micros($"ts").as("us")))
+        .as[(Long, Long)].collect().sortBy(_._1)
     }
 
-    val fromLtz = collectAll(stage(writeNtz = false), "ltz")
-    val fromNtz = collectAll(stage(writeNtz = true), "ntz")
+    val fromLtz = collectAll(stage(writeNtz = false))
+    val fromNtz = collectAll(stage(writeNtz = true))
 
     assert(fromLtz.length == 200 && fromNtz.length == 200)
     assert(fromLtz.sameElements(fromNtz),

@@ -84,4 +84,13 @@ class PlanGateSpec extends SparkSpec {
     assert(PlanGate.judge(Map.empty, Map("q" -> Right(clean)))
       .map(_.kind) === Seq("NEW"))
   }
+
+  test("budget files round-trip names with quotes and backslashes") {
+    val odd = "q\"uote\\slash"
+    val io = Map(odd -> 42L, "a_plain" -> 0L)
+    assert(IoGate.readBudget(IoGate.budgetJson(io)) === io)
+    val plan = Map(odd -> PlanGate.Fp(1, 2, 0, 3),
+      "a_plain" -> PlanGate.Fp(0, 0, 0, 0))
+    assert(PlanGate.readBudget(PlanGate.budgetJson(plan)) === plan)
+  }
 }

@@ -131,6 +131,20 @@ class ServiceHttpSpec extends SparkSpec with BeforeAndAfterAll {
     assert(plan.contains("PushedFilters") && plan.contains("c_custkey"))
   }
 
+  test("sql records keep the SELECT's column order") {
+    import scala.jdk.CollectionConverters._
+    // six columns: past the size where a Scala Map turns hash-ordered
+    val (code, j) = post("/api/v1/sql",
+      """{"sql": "SELECT c_mktsegment AS zeta, c_name AS alpha,
+        | c_custkey AS mu, c_acctbal AS beta, c_custkey + 1 AS omega,
+        | c_nationkey AS gamma FROM customer WHERE c_custkey = 42"}"""
+        .stripMargin
+        .replace("\n", ""))
+    assert(code == 200, j)
+    assert(j.get("data").get(0).fieldNames().asScala.toSeq ==
+      Seq("zeta", "alpha", "mu", "beta", "omega", "gamma"))
+  }
+
   test("data/upload loads records and reads back") {
     val out = Files.createTempDirectory("graft_http_up").toString
     val (code, j) = post("/api/v1/data/upload",

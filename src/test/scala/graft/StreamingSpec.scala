@@ -20,8 +20,7 @@ class StreamingSpec extends SparkSpec {
     val src = stageEvents()
     val agg = Streaming.windowedCounts(Streaming.readEvents(spark, src),
       window_ = "6 hours", watermark = "1 minute")
-    Streaming.runAvailableNow(agg, "win_counts", outputMode = "append")
-    val streamed = spark.table("win_counts")
+    val streamed = Streaming.replay(agg)
       .agg(sum($"n")).head().getLong(0)
     // watermark drops nothing on a finite replay except the last window,
     // which stays open in append mode — compare against batch minus the
@@ -44,9 +43,8 @@ class StreamingSpec extends SparkSpec {
     val deduped = Streaming.dedupStream(
       Streaming.readEvents(spark, s"$dupDir/events"),
       Seq("event_id"), watermark = "1 minute")
-    Streaming.runAvailableNow(deduped.select($"event_id"), "dedup_ids",
-      outputMode = "append")
-    val ids = spark.table("dedup_ids").as[Long].collect()
+    val ids = Streaming.replay(deduped.select($"event_id"))
+      .as[Long].collect()
     assert(ids.length === ids.distinct.length, "duplicates survived")
     assert(ids.length === once.count(), "dedup dropped unique events")
   }
@@ -55,8 +53,7 @@ class StreamingSpec extends SparkSpec {
     val src = stageEvents()
     val sess = Streaming.sessionize(Streaming.readEvents(spark, src),
       gap = "10 minutes", watermark = "1 minute")
-    Streaming.runAvailableNow(sess, "sessions", outputMode = "append")
-    val out = spark.table("sessions")
+    val out = Streaming.replay(sess)
     assert(out.count() > 0)
     assert(out.columns.contains("session_window"))
     // every session belongs to one user and has ≥1 event
@@ -157,9 +154,7 @@ class StreamingSpec extends SparkSpec {
     val sessions = Streaming.statefulSessions(
       Streaming.readEvents(spark, s"$dir/in", maxFilesPerTrigger = Some(1)),
       gapMinutes = 30, watermark = "1 minute")
-    Streaming.runAvailableNow(sessions.toDF(), "fmgws_sessions",
-      outputMode = "append")
-    val got = spark.table("fmgws_sessions").filter($"user_id" >= 0)
+    val got = Streaming.replay(sessions.toDF()).filter($"user_id" >= 0)
     // batch truth: gap-split on the same 30-minute rule
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"user_id").orderBy($"ts")
@@ -189,8 +184,7 @@ class StreamingSpec extends SparkSpec {
       .select($"c_custkey", $"c_mktsegment")
     val enriched = events.join(broadcast(dim),
       events("user_id") === dim("c_custkey"), "inner")
-    Streaming.runAvailableNow(enriched, "ss_enriched", outputMode = "append")
-    val got = spark.table("ss_enriched")
+    val got = Streaming.replay(enriched)
       .groupBy($"c_mktsegment").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val expected = Tables.load(spark, sf0001, "events")
@@ -208,8 +202,7 @@ class StreamingSpec extends SparkSpec {
       events.filter($"event_type" === "view"),
       events.filter($"event_type" === "purchase"),
       watermark = "1 minute", horizon = "1 hour")
-    Streaming.runAvailableNow(joined, "ssj_pairs", outputMode = "append")
-    val streamed = spark.table("ssj_pairs")
+    val streamed = Streaming.replay(joined)
       .select($"l_id", $"r_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val batch = Tables.load(spark, sf0001, "events")
@@ -260,8 +253,7 @@ class StreamingSpec extends SparkSpec {
       events.filter($"event_type" === "purchase"),
       watermark = "1 minute", horizon = "1 hour",
       joinType = "left_outer")
-    Streaming.runAvailableNow(joined, "ssjo_unit", outputMode = "append")
-    val out = spark.table("ssjo_unit").filter($"user_id" >= 0)
+    val out = Streaming.replay(joined).filter($"user_id" >= 0)
       .select($"l_id", $"r_id").collect()
       .map(r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getLong(1))))
       .toSet
@@ -329,8 +321,7 @@ class StreamingSpec extends SparkSpec {
     val sess = Streaming.sessionizeDynamic(
       Streaming.readEvents(spark, dir.resolve("events").toString),
       gap, watermark = "1 minute")
-    Streaming.runAvailableNow(sess, "swd_unit", outputMode = "append")
-    val out = spark.table("swd_unit").filter($"user_id" < 3L)
+    val out = Streaming.replay(sess).filter($"user_id" < 3L)
       .select($"user_id", $"n_events").collect()
       .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(out === Seq((1L, 1L), (1L, 1L), (2L, 2L)))
@@ -355,11 +346,69 @@ class StreamingSpec extends SparkSpec {
       events.filter($"event_type" === "purchase"),
       watermark = "1 minute", horizon = "1 hour",
       joinType = "left_semi")
-    Streaming.runAvailableNow(joined, "ssjs_unit", outputMode = "append")
-    val out = spark.table("ssjs_unit").select($"l_id").as[Long].collect()
+    val semi = Streaming.replay(joined)
+    val out = semi.select($"l_id").as[Long].collect()
     assert(out.toSeq === Seq(1L), "exactly one row, for the matched view")
     // semi output carries LEFT columns only
-    assert(spark.table("ssjs_unit").columns.toSet ===
+    assert(semi.columns.toSet ===
       Set("l_id", "user_id", "l_ts"))
+  }
+
+  private def events(rows: (Long, String, Long, String)*) =
+    rows.map { case (id, ts, uid, typ) =>
+      (id, java.sql.Timestamp.valueOf(ts), uid, typ, 1.0, "{}")
+    }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+
+  test("replay: update mode yields every emission of each key") {
+    // u1 lands in both micro-batches, u2 only in the first
+    val staged = Streaming.stage(spark,
+      () => events((1L, "2024-03-01 10:00:00", 1L, "view"),
+        (2L, "2024-03-01 10:05:00", 2L, "view")),
+      () => events((3L, "2024-03-01 11:00:00", 1L, "view")))
+    val out = Streaming.replay(
+      Streaming.statefulUserTotals(staged).toDF(), "update")
+      .select($"user_id", $"n_events").as[(Long, Long)].collect().sorted
+    assert(out.toSeq === Seq((1L, 1L), (1L, 2L), (2L, 1L)))
+  }
+
+  test("replay: no temp view, and the result is a file scan") {
+    val before = spark.catalog.listTables().collect().map(_.name).toSet
+    val out = Streaming.replay(Streaming.readEvents(spark, stageEvents())
+      .select($"event_id"))
+    assert(spark.catalog.listTables().collect().map(_.name).toSet === before)
+    assert(out.columns.toSeq === Seq("event_id"), "no batch column")
+    val plan = out.queryExecution.executedPlan.toString
+    assert(!plan.contains("LocalTableScan"), plan)
+    assert(out.count() === Tables.load(spark, sf0001, "events").count())
+  }
+
+  test("replay: a failing stream throws and restores shuffle partitions") {
+    val key = "spark.sql.shuffle.partitions"
+    val prior = spark.conf.get(key)
+    val boom = udf { (id: Long) =>
+      if (id == 2L) throw new IllegalStateException("boom on row 2"); id }
+    val staged = Streaming.stage(spark,
+      () => events((1L, "2024-03-01 10:00:00", 1L, "view"),
+        (2L, "2024-03-01 10:05:00", 2L, "view")))
+    val err = intercept[Exception] {
+      Streaming.replay(staged.select(boom($"event_id").as("id")),
+        statePartitions = Some(prior.toInt + 1))
+    }
+    val chain = Iterator.iterate[Throwable](err)(_.getCause)
+      .takeWhile(_ != null).map(String.valueOf(_)).mkString("\n")
+    assert(chain.contains("boom on row 2"), chain)
+    assert(spark.conf.get(key) === prior)
+  }
+
+  test("replay: a stream that emits nothing returns an empty typed frame") {
+    // every event sits in one 6-hour window the watermark never closes
+    val agg = Streaming.windowedCounts(Streaming.stage(spark,
+      () => events((1L, "2024-03-01 10:00:00", 1L, "view"),
+        (2L, "2024-03-01 10:05:00", 2L, "view"))),
+      window_ = "6 hours", watermark = "1 minute")
+    val out = Streaming.replay(agg)
+    assert(out.count() === 0)
+    assert(out.schema.map(f => f.name -> f.dataType) ===
+      agg.schema.map(f => f.name -> f.dataType))
   }
 }
