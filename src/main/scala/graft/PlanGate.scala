@@ -6,9 +6,9 @@ import org.apache.spark.sql.SparkSession
 /** PLAN-structure regression gate — the structural twin of [[IoGate]].
   *
   * IoGate budgets measured shuffle BYTES (needs a bench run at sf0.1);
-  * this gate budgets the plan SHAPE itself, which is SF-independent
-  * and costs only plan compilation at sf0.01: per query, a fingerprint
-  * of the operator counts that matter at 100 TB —
+  * this gate budgets the plan SHAPE itself, which is SF-independent:
+  * per query, a fingerprint of the operator counts that matter at
+  * 100 TB —
   *
   *   - `exchange`  : `Exchange hashpartitioning` / `rangepartitioning`
   *                   occurrences (each is a full shuffle of its input)
@@ -30,6 +30,13 @@ import org.apache.spark.sql.SparkSession
   * It also fails on two absolute plan-hygiene [[flags]], whatever the
   * budget says, and on a budgeted query that no longer builds (missing
   * from the catalog, or throwing while it plans).
+  *
+  * Cost: the gate builds each plan by calling the query's function at
+  * `SPARK_GRAFT_SF_DIR` (default sf0.01), so it pays for everything a
+  * query does before it returns its frame, not just plan compilation:
+  * every `stream_*` query runs its staging and its whole stream, and
+  * the index-build and operator-writer queries write their outputs.
+  * The full gate takes minutes (about 2.5 min wall on 4 vCPUs).
   *
   * Run: `sbt "runMain graft.PlanGate"`        — gate
   *      `sbt "runMain graft.PlanGate update"` — rewrite PLAN_BUDGET.json

@@ -13,10 +13,12 @@ import graft.transform._
   * pulls every record through an async iterator into a driver-side list;
   * here the whole job is one lazy Spark plan — extraction, transforms and
   * sink writes pipeline through executors, and the only driver-side
-  * values are the counters. The routes load concurrently
-  * ([[Sinks.routeAndLoad]]), so each must target its own path; the
-  * processed count is the `archive` route's count observed during its
-  * write (the largest route count without one), never a separate scan.
+  * values are the counters. The routes load through
+  * [[Sinks.routeAndLoad]], so each must target its own path: data-target
+  * routes (such as [[Sinks.standardRoutes]]) land in one write job, each
+  * closure route runs its own. The processed count is the `archive`
+  * route's count observed during that write (the largest route count
+  * without one), never a separate scan.
   */
 final case class EtlResult(
     recordsProcessed: Long,

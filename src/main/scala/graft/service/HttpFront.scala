@@ -65,10 +65,11 @@ final class HttpFront(spark: SparkSession, sfDir: String,
   private val requestSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
   // ---- JSON encode: Scala/JDBC values → Jackson-friendly tree ------
-  // (jackson-databind rides Spark's classpath but its Scala module
-  // does not, so Scala collections convert to java ones explicitly;
-  // temporal values serialize as their SQL string forms, binaries as
-  // base64 — the same choices a JSON API gateway makes)
+  // (Jackson's Scala module is on Spark's classpath, but it would
+  // serialize leaf values by their bean shape; this converter rewrites
+  // every leaf at any depth instead: temporal values as their SQL
+  // string forms, binaries as base64 — the same choices a JSON API
+  // gateway makes — and Scala collections as java ones on the way)
   private def jsonable(v: Any): AnyRef = v match {
     case null => null
     case m: scala.collection.Map[_, _] =>

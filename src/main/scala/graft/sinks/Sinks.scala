@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 import graft.etl.Utils
@@ -22,7 +23,10 @@ import graft.etl.Utils.rmTree
   *
   * All writers are partition-parallel `df.write` paths; per-batch
   * chunking from the reference (`base_loaders.py:74-98`) is subsumed by
-  * partition-level batched writes.
+  * partition-level batched writes. A routed load ([[routeAndLoad]])
+  * writes all its data-target routes in ONE such write, partitioned by
+  * route into a hidden staging directory, then publishes each route's
+  * files into that route's own path with `java.nio` moves.
   */
 object Sinks {
 
@@ -518,48 +522,196 @@ object Sinks {
     routeAndLoad(df, targets.map { case (n, f) => Route(n, lit(true), f) },
       stats)
 
+  /** A route's data target: a local parquet directory that each load
+    * appends to or, with `replace`, replaces. */
+  final case class Target(path: String, replace: Boolean = false)
+
   /** K8 — content-based routing (`base_loaders.py:395-436`; routing
     * rules `multi_source_ingestion_dag.py:267-305`): route by source
     * name — transaction/order→warehouse, event/log→documents,
-    * user/profile→both, everything→archive. */
-  final case class Route(name: String, predicate: Column,
-    sink: DataFrame => Long)
-
-  /** Load each route's filtered rows through its sink; results keyed by
-    * route name, so names must be distinct.
+    * user/profile→both, everything→archive.
     *
-    * The writes run concurrently, one thread per route started inside
-    * this call: each route must target its own path. The threads
-    * inherit the caller's Spark local properties (scheduler pool, job
-    * group), and each write's jobs are labelled `route:<name>`. The
-    * frame is persisted and whichever write reaches a partition first
-    * fills the cache, so the source is scanned once, not once per
-    * route; a single route writes directly on the caller's thread. A
-    * failing route is isolated as an `error` result; `stats` records
-    * the results in route order. */
+    * A route takes the rows its `predicate` holds for, in one of two
+    * forms: a closure `sink` (`Route(name, predicate, sink)`) or a data
+    * [[Target]] (`Route.data`), whose `sink` is the plain [[load]] a
+    * lone route runs. [[routeAndLoad]] writes all data routes of a call
+    * in one job. */
+  final class Route private (val name: String, val predicate: Column,
+      val sink: DataFrame => Long, val target: Option[Target])
+
+  object Route {
+    def apply(name: String, predicate: Column,
+        sink: DataFrame => Long): Route =
+      new Route(name, predicate, sink, None)
+
+    def data(name: String, predicate: Column, target: Target): Route =
+      new Route(name, predicate, d => load(d, target.path,
+        ifExists = if (target.replace) "replace" else "append"), Some(target))
+  }
+
+  /** Load each route's rows; results keyed by route name, so names must
+    * be distinct, and each route must target its own path.
+    *
+    * Two or more data routes land in ONE Spark job ([[loadFused]]);
+    * every closure route runs its own. A call with a single job runs it
+    * on the caller's thread, straight from `df`: a lone route of either
+    * form is a plain filtered write. With more jobs, `df` is persisted
+    * (whichever job reaches a partition first fills the cache, so the
+    * source is computed once) and the jobs run side by side, one thread
+    * each, inheriting the caller's Spark local properties (scheduler
+    * pool, job group). Every job is labelled `route:<name>,<name>,…`
+    * with the routes it writes. A failing route is isolated as an
+    * `error` result; `stats` records the results in route order. */
   def routeAndLoad(df: DataFrame, routes: Seq[Route],
       stats: Option[LoadStats] = None): Map[String, LoadResult] = {
     val names = routes.map(_.name)
     require(names.distinct.sizeIs == names.size,
       s"duplicate route names in: ${names.mkString(", ")}")
-    val sc = df.sparkSession.sparkContext
-    def write(src: DataFrame, r: Route): LoadResult = scala.util.Try(
-        Utils.withLocalProperty(sc, Utils.JobDescription, s"route:${r.name}")(
-          r.sink(src.where(r.predicate)))) match {
-      case scala.util.Success(n) => LoadResult(r.name, "success", n)
-      case scala.util.Failure(e) =>
-        LoadResult(r.name, "error", 0L, Some(e.getMessage))
-    }
-    val results =
-      if (routes.sizeIs <= 1) routes.map(write(df, _))
+    val (data, closures) = routes.partition(_.target.isDefined)
+    def single(r: Route): DataFrame => Seq[LoadResult] = src =>
+      Seq(attempt(r.name)(labelled(src, Seq(r))(r.sink(src.where(r.predicate)))))
+    val jobs =
+      (if (data.sizeIs >= 2) Seq((src: DataFrame) => loadFused(src, data))
+       else data.map(single)) ++ closures.map(single)
+    val landed =
+      if (jobs.sizeIs <= 1) jobs.flatMap(_(df))
       else {
         val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-        try Utils.inParallel(
-          routes.map(r => () => write(cached, r)): _*)
+        try Utils.inParallel(jobs.map(j => () => j(cached)): _*).flatten
         finally cached.unpersist()
       }
-    results.foreach(r => stats.foreach(_.record(r)))
-    results.map(r => r.target -> r).toMap
+    val byName = landed.map(r => r.target -> r).toMap
+    stats.foreach(s => names.foreach(n => s.record(byName(n))))
+    byName
+  }
+
+  private def labelled[A](df: DataFrame, routes: Seq[Route])(f: => A): A =
+    Utils.withLocalProperty(df.sparkSession.sparkContext,
+      Utils.JobDescription, routes.map(_.name).mkString("route:", ",", ""))(f)
+
+  private def attempt(name: String)(n: => Long): LoadResult =
+    scala.util.Try(n) match {
+      case scala.util.Success(v) => LoadResult(name, "success", v)
+      case scala.util.Failure(e) =>
+        LoadResult(name, "error", 0L, Some(e.getMessage))
+    }
+
+  /** The data routes of one [[routeAndLoad]] call in one write job.
+    * Each row is tagged with the ordinals of the routes it matches (one
+    * row per match), the tagged frame is written once, partitioned by
+    * the tag, into `_routes_<uuid>` under the targets' common ancestor
+    * (hidden from readers, and on the targets' file store), and one
+    * `observe` on that write counts every route. Each route's staged
+    * files are then published into its own path with `java.nio`, in
+    * route order:
+    *  - append: the files move into the target, under the names a
+    *    plain Spark write gives them;
+    *  - replace: the target is removed and the staged directory moved
+    *    onto it (one atomic rename).
+    * A route that received no row still reads as an empty frame with
+    * `df`'s schema: it gets one schema-only file (see [[writeSchemaOnly]])
+    * when it is replaced, or when it is appended to and holds no data
+    * file yet. Neither form leaves a `_SUCCESS` marker.
+    *
+    * A failing write makes every route an `error`; a failing publish
+    * (the target is a regular file, or on another file store) makes
+    * its own route one. The staging directory is removed in any case.
+    * Appends are at-least-once: a crash after some publishes leaves
+    * those routes' rows in place, and a replay appends them again. */
+  private def loadFused(df: DataFrame, routes: Seq[Route]): Seq[LoadResult] = {
+    val targets = routes.map(r =>
+      Paths.get(r.target.get.path).toAbsolutePath.normalize)
+    val staging = targets.map(_.getParent)
+      .reduce((a, b) => Iterator.iterate(a)(_.getParent).find(b.startsWith).get)
+      .resolve(s"_routes_${java.util.UUID.randomUUID()}")
+    val tag = Iterator.iterate("_route")("_" + _)
+      .find(t => !df.columns.exists(_.equalsIgnoreCase(t))).get
+    val matches = routes.indices.map(i => when(routes(i).predicate, lit(i)))
+    val counts = routes.indices.map(i => count(when(col(tag) === i, 1)).as(s"n$i"))
+    val obs = new org.apache.spark.sql.Observation()
+    val tagged = df.select(col("*"), explode(array(matches: _*)).as(tag))
+      .where(col(tag).isNotNull)
+      .observe(obs, counts.head, counts.tail: _*)
+    try {
+      val written = scala.util.Try {
+        labelled(df, routes)(
+          tagged.write.partitionBy(tag).parquet(staging.toString))
+        obs.get
+      }
+      routes.zip(targets).zipWithIndex.map { case ((r, target), i) =>
+        written match {
+          case scala.util.Failure(e) =>
+            LoadResult(r.name, "error", 0L, Some(e.getMessage))
+          case scala.util.Success(m) =>
+            val res = attempt(r.name) {
+              publish(df.schema, staging.resolve(s"$tag=$i"), target,
+                r.target.get.replace)
+              m(s"n$i").asInstanceOf[Long]
+            }
+            graft.Failpoints.point("sinks.route.published")
+            res
+        }
+      }
+    } finally rmTree(staging)
+  }
+
+  private def publish(schema: StructType, staged: java.nio.file.Path,
+      target: java.nio.file.Path, replace: Boolean): Unit = {
+    def visible(p: java.nio.file.Path) = {
+      val n = p.getFileName.toString
+      !n.startsWith("_") && !n.startsWith(".")
+    }
+    // a partitioned write names its files `part-…<uuid>.c000…`, a plain
+    // write `part-…<uuid>-c000…`: routes keep the plain names (a
+    // `.part-….crc` checksum file is renamed with its data file)
+    def plainName(f: java.nio.file.Path) =
+      f.getFileName.toString.replaceFirst("""\.(c\d{3}\.)""", "-$1")
+    if (replace) {
+      if (Files.exists(staged))
+        Utils.listDir(staged).foreach(f =>
+          Files.move(f, f.resolveSibling(plainName(f))))
+      else {
+        Files.createDirectories(staged)
+        writeSchemaOnly(schema, staged)
+      }
+      rmTree(target)
+      Files.createDirectories(target.getParent)
+      Files.move(staged, target, StandardCopyOption.ATOMIC_MOVE)
+    } else {
+      Files.createDirectories(target)
+      if (Files.exists(staged))
+        Utils.listDir(staged).foreach(f => Files.move(f,
+          target.resolve(plainName(f)), StandardCopyOption.ATOMIC_MOVE))
+      else if (!Utils.listDir(target).exists(visible))
+        writeSchemaOnly(schema, target)
+    }
+  }
+
+  /** One parquet file in `dir` with `schema` and no row group,
+    * written on the driver: no Spark job, no Hadoop file system. The
+    * footer carries the Spark schema under the key Spark's own writer
+    * uses, so `spark.read.parquet` restores names and types exactly;
+    * the name follows Spark's `part-…-c000.<codec>.parquet`. */
+  private def writeSchemaOnly(schema: StructType,
+      dir: java.nio.file.Path): Unit = {
+    import org.apache.parquet.hadoop.ParquetFileWriter
+    import org.apache.parquet.hadoop.metadata.CompressionCodecName
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetReadSupport, SparkToParquetSchemaConverter}
+    import org.apache.spark.sql.internal.SQLConf
+    val conf = SQLConf.get
+    val ext = CompressionCodecName.fromConf(conf.parquetCompressionCodec)
+      .getExtension
+    val file = dir.resolve(
+      s"part-00000-${java.util.UUID.randomUUID()}-c000$ext.parquet")
+    val writer = new ParquetFileWriter(
+      new org.apache.parquet.io.LocalOutputFile(file),
+      new SparkToParquetSchemaConverter(conf).convert(schema),
+      ParquetFileWriter.Mode.CREATE, 0L, 0, null,
+      org.apache.parquet.column.ParquetProperties.builder().build())
+    writer.start()
+    writer.end(java.util.Map.of(
+      ParquetReadSupport.SPARK_METADATA_KEY, schema.json))
   }
 
   /** The DAG's routing patterns over the `_source` metadata column
@@ -572,25 +724,19 @@ object Sinks {
     "user_data_wh" -> "user|profile",
     "user_data_doc" -> "user|profile")
 
-  def standardRoutes(base: String): Seq[Route] =
-    routePatterns.map { case (name, pat) =>
-      Route(name, col("_source").rlike(pat), d => load(d, s"$base/$name"))
-    } :+ Route("archive", lit(true), d => load(d, s"$base/archive"))
-
-  /** [[standardRoutes]] in its EXACTLY-ONCE per-batch form for
-    * at-least-once callers ([[graft.streaming.Streaming.routeStream]]):
-    * each route lands the batch as `<base>/<route>/batch=<id>` with
-    * OVERWRITE, so a replayed batch (crash between the route fan-out
-    * and the checkpoint commit) rewrites exactly its own partition
-    * directories instead of appending a duplicate copy of every row to
-    * every matching route — the same per-batch-overwrite shape as the
-    * near-dup results and the audited-append gate. Readers of
-    * `<base>/<route>` see `batch` as a partition column and ignore it
-    * by projecting their own columns. */
-  def standardRoutesOnce(base: String, batchId: Long): Seq[Route] =
-    routePatterns.map { case (name, pat) =>
-      Route(name, col("_source").rlike(pat),
-        d => load(d, s"$base/$name/batch=$batchId", ifExists = "replace"))
-    } :+ Route("archive", lit(true),
-      d => load(d, s"$base/archive/batch=$batchId", ifExists = "replace"))
+  /** The DAG's five routes ([[routePatterns]] plus `archive`) as data
+    * targets under `base`. Without a batch id each appends to
+    * `<base>/<route>`. With one, each REPLACES `<base>/<route>/batch=<id>`:
+    * the exactly-once per-batch form for at-least-once callers
+    * ([[graft.streaming.Streaming.routeStream]]), where a replayed batch
+    * (crash between the fan-out and the checkpoint commit) rewrites its
+    * own directories instead of appending a second copy of every row.
+    * Readers of `<base>/<route>` then see `batch` as a partition column
+    * and ignore it by projecting their own columns. */
+  def standardRoutes(base: String, batchId: Option[Long] = None): Seq[Route] =
+    (routePatterns.map { case (name, pat) => name -> col("_source").rlike(pat) }
+      :+ ("archive" -> lit(true))).map { case (name, pred) =>
+      Route.data(name, pred, batchId.fold(Target(s"$base/$name"))(id =>
+        Target(s"$base/$name/batch=$id", replace = true)))
+    }
 }

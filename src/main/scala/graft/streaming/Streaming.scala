@@ -160,10 +160,11 @@ object Streaming {
   }
 
   /** Stream → routed lake load: every micro-batch goes through the same
-    * content-based routing fan-out as the batch path (K8). Routes land
-    * as per-batch OVERWRITE partitions ([[graft.sinks.Sinks
-    * .standardRoutesOnce]]) so a replayed batch rewrites exactly
-    * itself — a plain append would duplicate every row in every
+    * content-based routing fan-out as the batch path (K8), in one write
+    * job. Routes land as per-batch REPLACE targets
+    * ([[graft.sinks.Sinks.standardRoutes]] with the batch id), so a
+    * replayed batch rewrites exactly itself — a plain append would
+    * duplicate every row in every
     * matching route when a crash lands between the fan-out and the
     * checkpoint commit (the chaos suite's window). */
   def routeStream(events: DataFrame, base: String): DataStreamWriter[Row] = {
@@ -172,7 +173,7 @@ object Streaming {
     tagged.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         graft.sinks.Sinks.routeAndLoad(batch,
-          graft.sinks.Sinks.standardRoutesOnce(base, batchId))
+          graft.sinks.Sinks.standardRoutes(base, Some(batchId)))
         graft.Failpoints.point("stream.route.landed")
         ()
       }

@@ -146,7 +146,7 @@ class SinksSpec extends SparkSpec {
     assert(results.values.forall(_.status == "success"))
     assert(results("archive").count == 5 && results("financial_data").count == 2)
     assert(scanned.value == 5, s"source computed ${scanned.value} rows for 5")
-    assert(probe.descriptions.toSet == routes.map(r => s"route:${r.name}").toSet,
+    assert(probe.descriptions == Seq(routes.map(_.name).mkString("route:", ",", "")),
       probe.descriptions)
     assert(spark.sparkContext.getLocalProperty("spark.job.description") == null)
   }
@@ -178,7 +178,7 @@ class SinksSpec extends SparkSpec {
       finally sc.setLocalProperty("spark.scheduler.pool", prev)
     val routeJobs = probe.jobs.filter(p =>
       Option(p.getProperty("spark.job.description")).exists(_.startsWith("route:")))
-    assert(routeJobs.size >= Sinks.standardRoutes("x").size)
+    assert(routeJobs.size == 1)
     assert(routeJobs.forall(_.getProperty("spark.scheduler.pool") == "etl_routes"))
   }
 
@@ -193,6 +193,141 @@ class SinksSpec extends SparkSpec {
       twice.map(r => r.name -> r.sink)))
     assert(!Files.exists(java.nio.file.Paths.get(s"$dir/a1")))
     assert(!Files.exists(java.nio.file.Paths.get(s"$dir/a2")))
+  }
+
+  private def routeFiles(path: String): Seq[String] =
+    graft.etl.Utils.listDir(java.nio.file.Paths.get(path))
+      .map(_.getFileName.toString).filter(_.endsWith(".parquet"))
+
+  private def stagingLeft(dir: String): Seq[String] =
+    graft.etl.Utils.listDir(java.nio.file.Paths.get(dir))
+      .map(_.getFileName.toString).filter(_.startsWith("_routes_"))
+
+  test("K8 routing: a call of five data routes is one job, in the caller's pool") {
+    import org.apache.spark.graftx.JobProbe
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.scheduler.pool")
+    sc.setLocalProperty("spark.scheduler.pool", "etl_routes")
+    val dir = tmp()
+    val input = routedInput()
+    val (results, probe) =
+      try JobProbe(sc)(Sinks.routeAndLoad(input, Sinks.standardRoutes(dir)))
+      finally sc.setLocalProperty("spark.scheduler.pool", prev)
+    assert(results.values.forall(_.status == "success"))
+    assert(probe.jobs.size == 1, probe.descriptions)
+    val job = probe.jobs.head
+    assert(job.getProperty("spark.job.description") ==
+      "route:financial_data,processed_events,user_data_wh,user_data_doc,archive")
+    assert(job.getProperty("spark.scheduler.pool") == "etl_routes")
+    assert(probe.inputRows == 5) // one scan of the source
+    assert(stagingLeft(dir).isEmpty)
+  }
+
+  test("K8 routing: a route that matches no row reads as the input's empty frame") {
+    val dir = tmp()
+    val input = Seq(("transactions", 1L), ("events", 3L)).toDF("_source", "id")
+    Seq(1, 2).foreach { _ =>
+      val results = Sinks.routeAndLoad(input, Sinks.standardRoutes(dir))
+      assert(results("user_data_wh") ==
+        Sinks.LoadResult("user_data_wh", "success", 0L))
+    }
+    Seq("user_data_wh", "user_data_doc").foreach { r =>
+      val out = spark.read.parquet(s"$dir/$r")
+      assert(out.count() == 0)
+      assert(out.schema.map(f => f.name -> f.dataType) ==
+        input.schema.map(f => f.name -> f.dataType))
+      assert(routeFiles(s"$dir/$r").size == 1, routeFiles(s"$dir/$r"))
+    }
+    val archived = spark.read.parquet(s"$dir/archive")
+    assert(archived.count() == 4 && archived.columns.toSeq == input.columns.toSeq)
+    val named = "part-\\d{5}-[0-9a-f-]+-c000(\\.\\w+)?\\.parquet"
+    assert(routeFiles(s"$dir/archive").nonEmpty &&
+      routeFiles(s"$dir/archive").forall(_.matches(named)),
+      routeFiles(s"$dir/archive"))
+    assert(routeFiles(s"$dir/user_data_wh").forall(_.matches(named)))
+  }
+
+  test("K8 routing: a route whose path is a regular file errors alone") {
+    val dir = tmp()
+    Files.createFile(java.nio.file.Paths.get(s"$dir/financial_data"))
+    val stats = new Sinks.LoadStats
+    val routes = Sinks.standardRoutes(dir)
+    val results = Sinks.routeAndLoad(routedInput(), routes, Some(stats))
+    assert(results("financial_data").status == "error")
+    assert(results.removed("financial_data").values.forall(_.status == "success"))
+    assert(stats.history.map(_.target) == routes.map(_.name))
+    assert(spark.read.parquet(s"$dir/archive").count() == 5)
+    assert(spark.read.parquet(s"$dir/user_data_doc").count() == 1)
+    assert(Files.isRegularFile(java.nio.file.Paths.get(s"$dir/financial_data")))
+    assert(stagingLeft(dir).isEmpty)
+  }
+
+  test("K8 routing: data routes beside a closure route compute the source once") {
+    val dir = tmp()
+    val scanned = spark.sparkContext.longAccumulator("routed_rows_mixed")
+    val tick = udf { (id: Long) => scanned.add(1); id }.asNondeterministic()
+    val input = routedInput().withColumn("id", tick($"id"))
+    val routes = Sinks.standardRoutes(dir) :+
+      Sinks.Route("late", $"id" > 3, d => Sinks.load(d, s"$dir/late"))
+    val results = Sinks.routeAndLoad(input, routes)
+    assert(scanned.value == 5, s"source computed ${scanned.value} rows for 5")
+    val want = Map("financial_data" -> 2L, "processed_events" -> 2L,
+      "user_data_wh" -> 1L, "user_data_doc" -> 1L, "archive" -> 5L, "late" -> 2L)
+    assert(results.view.mapValues(_.count).toMap == want)
+    want.foreach { case (r, n) =>
+      assert(spark.read.parquet(s"$dir/$r").count() == n, r)
+    }
+  }
+
+  test("K8 routing: a replaced batch holds that batch's rows once") {
+    val dir = tmp()
+    val input = routedInput()
+    Seq(1, 2).foreach(_ =>
+      Sinks.routeAndLoad(input, Sinks.standardRoutes(dir, Some(7L))))
+    Map("financial_data" -> 2L, "processed_events" -> 2L,
+        "user_data_wh" -> 1L, "user_data_doc" -> 1L, "archive" -> 5L)
+      .foreach { case (r, n) =>
+        val out = spark.read.parquet(s"$dir/$r/batch=7")
+        assert(out.count() == n, r)
+        assert(out.columns.toSeq == input.columns.toSeq, r)
+        assert(routeFiles(s"$dir/$r/batch=7").forall(_.matches(
+          "part-\\d{5}-[0-9a-f-]+-c000(\\.\\w+)?\\.parquet")), r)
+      }
+    // an empty batch replaces each route's directory with one schema-only file
+    Sinks.routeAndLoad(input.where($"id" < 0), Sinks.standardRoutes(dir, Some(7L)))
+    assert(routeFiles(s"$dir/archive/batch=7").size == 1)
+    assert(spark.read.parquet(s"$dir/archive/batch=7").count() == 0)
+    assert(stagingLeft(dir).isEmpty)
+  }
+
+  test("K8 routing: a kill after the first publish replays like a kill between route writes") {
+    import graft.etl.EtlJob
+    val dir = tmp()
+    val input = routedInput()
+    val job = EtlJob(_ => input, routes = Sinks.standardRoutes(dir))
+    var seen: Option[(Long, Seq[String])] = None
+    val killed = intercept[RuntimeException] {
+      Failpoints.withHook { tag =>
+        if (tag == "sinks.route.published") {
+          // the crash instant: staged rows are on disk, route reads skip them
+          seen = Some((spark.read.parquet(s"$dir/financial_data").count(),
+            stagingLeft(dir)))
+          throw new RuntimeException("kill at " + tag)
+        }
+      }(job.run(spark))
+    }
+    assert(killed.getMessage == "kill at sinks.route.published")
+    assert(seen.map(_._1).contains(2L))
+    assert(seen.exists(_._2.size == 1))
+    assert(!Files.exists(java.nio.file.Paths.get(s"$dir/archive")))
+    val replay = job.run(spark)
+    assert(replay.recordsProcessed == 5)
+    Map("financial_data" -> 4L, "processed_events" -> 2L,
+        "user_data_wh" -> 1L, "user_data_doc" -> 1L, "archive" -> 5L)
+      .foreach { case (r, n) =>
+        assert(spark.read.parquet(s"$dir/$r").count() == n, r)
+      }
+    assert(stagingLeft(dir).isEmpty)
   }
 
   test("K10 load statistics registry (base_loaders.py:438-451)") {

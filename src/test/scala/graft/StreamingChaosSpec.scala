@@ -506,6 +506,8 @@ class StreamingChaosSpec extends SparkSpec {
     val stageDir = setup(tmp)
     val base = tmp.resolve("lake").toString
     runKillSchedule(() => mk(stageDir, base), Seq(
+      ("sinks.route.published", 1), // batch 0's first route published,
+      // the other four not: replay rewrites batch=0 in every route
       ("stream.route.landed", 1), // batch 0 fanned out, checkpoint not:
       // replay overwrites batch=0 in every route, never appends a copy
       ("stream.route.landed", 2)))
