@@ -522,9 +522,18 @@ object Sinks {
     routeAndLoad(df, targets.map { case (n, f) => Route(n, lit(true), f) },
       stats)
 
-  /** A route's data target: a local parquet directory that each load
-    * appends to or, with `replace`, replaces. */
-  final case class Target(path: String, replace: Boolean = false)
+  /** A route's data target: a local parquet directory (a plain path or
+    * a `file:` URI) that each load appends to or, with `replace`,
+    * replaces. Its files are published with `java.nio`, so a target on
+    * another file system (`hdfs:`, `s3a:`) is rejected here; load those
+    * through a closure route. */
+  final case class Target(path: String, replace: Boolean = false) {
+    private val uri = new org.apache.hadoop.fs.Path(path).toUri
+    require(uri.getScheme == null || uri.getScheme == "file",
+      s"a data target must be a local directory: $path")
+    def local: java.nio.file.Path =
+      Paths.get(uri.getPath).toAbsolutePath.normalize
+  }
 
   /** K8 — content-based routing (`base_loaders.py:395-436`; routing
     * rules `multi_source_ingestion_dag.py:267-305`): route by source
@@ -532,47 +541,51 @@ object Sinks {
     * user/profile→both, everything→archive.
     *
     * A route takes the rows its `predicate` holds for, in one of two
-    * forms: a closure `sink` (`Route(name, predicate, sink)`) or a data
-    * [[Target]] (`Route.data`), whose `sink` is the plain [[load]] a
-    * lone route runs. [[routeAndLoad]] writes all data routes of a call
+    * forms: a [[Route.Closure]] hands them to its own `sink`
+    * (`Route(name, predicate, sink)`), a [[Route.Data]] lands them in
+    * its [[Target]]. [[routeAndLoad]] writes all data routes of a call
     * in one job. */
-  final class Route private (val name: String, val predicate: Column,
-      val sink: DataFrame => Long, val target: Option[Target])
+  sealed trait Route {
+    def name: String
+    def predicate: Column
+  }
 
   object Route {
-    def apply(name: String, predicate: Column,
-        sink: DataFrame => Long): Route =
-      new Route(name, predicate, sink, None)
+    final case class Closure(name: String, predicate: Column,
+        sink: DataFrame => Long) extends Route
+    final case class Data(name: String, predicate: Column, target: Target)
+      extends Route
 
-    def data(name: String, predicate: Column, target: Target): Route =
-      new Route(name, predicate, d => load(d, target.path,
-        ifExists = if (target.replace) "replace" else "append"), Some(target))
+    def apply(name: String, predicate: Column,
+        sink: DataFrame => Long): Closure = Closure(name, predicate, sink)
   }
 
   /** Load each route's rows; results keyed by route name, so names must
     * be distinct, and each route must target its own path.
     *
-    * Two or more data routes land in ONE Spark job ([[loadFused]]);
-    * every closure route runs its own. A call with a single job runs it
-    * on the caller's thread, straight from `df`: a lone route of either
-    * form is a plain filtered write. With more jobs, `df` is persisted
-    * (whichever job reaches a partition first fills the cache, so the
-    * source is computed once) and the jobs run side by side, one thread
-    * each, inheriting the caller's Spark local properties (scheduler
-    * pool, job group). Every job is labelled `route:<name>,<name>,…`
-    * with the routes it writes. A failing route is isolated as an
-    * `error` result; `stats` records the results in route order. */
+    * The data routes land in ONE Spark job ([[loadFused]]); every
+    * closure route runs its own. A call with a single job runs it on
+    * the caller's thread, straight from `df`. With more jobs, `df` is
+    * persisted (whichever job reaches a partition first fills the
+    * cache, so the source is computed once) and the jobs run side by
+    * side, one thread each, inheriting the caller's Spark local
+    * properties (scheduler pool, job group). Every job is labelled
+    * `route:<name>,<name>,…` with the routes it writes. A failing route
+    * is isolated as an `error` result; `stats` records the results in
+    * route order. */
   def routeAndLoad(df: DataFrame, routes: Seq[Route],
       stats: Option[LoadStats] = None): Map[String, LoadResult] = {
     val names = routes.map(_.name)
     require(names.distinct.sizeIs == names.size,
       s"duplicate route names in: ${names.mkString(", ")}")
-    val (data, closures) = routes.partition(_.target.isDefined)
-    def single(r: Route): DataFrame => Seq[LoadResult] = src =>
-      Seq(attempt(r.name)(labelled(src, Seq(r))(r.sink(src.where(r.predicate)))))
-    val jobs =
-      (if (data.sizeIs >= 2) Seq((src: DataFrame) => loadFused(src, data))
-       else data.map(single)) ++ closures.map(single)
+    val (data, closures) = routes.partitionMap {
+      case d: Route.Data => Left(d)
+      case c: Route.Closure => Right(c)
+    }
+    val jobs: Seq[DataFrame => Seq[LoadResult]] =
+      Option.when(data.nonEmpty)((src: DataFrame) => loadFused(src, data))
+        .toSeq ++ closures.map(r => (src: DataFrame) => Seq(attempt(r.name)(
+          labelled(src, Seq(r))(r.sink(src.where(r.predicate))))))
     val landed =
       if (jobs.sizeIs <= 1) jobs.flatMap(_(df))
       else {
@@ -599,11 +612,16 @@ object Sinks {
   /** The data routes of one [[routeAndLoad]] call in one write job.
     * Each row is tagged with the ordinals of the routes it matches (one
     * row per match), the tagged frame is written once, partitioned by
-    * the tag, into `_routes_<uuid>` under the targets' common ancestor
-    * (hidden from readers, and on the targets' file store), and one
-    * `observe` on that write counts every route. Each route's staged
-    * files are then published into its own path with `java.nio`, in
-    * route order:
+    * the tag, into a staging directory under the targets' common
+    * ancestor (hidden from readers, and on the targets' file store),
+    * and one `observe` on that write counts every route. The write
+    * plans a sort on the tag in each task, over the tagged rows (a route
+    * that takes every row, such as `archive`, doubles them): the price
+    * of one job instead of one per route. The job runs one task per
+    * partition of `df`, so a large frame held in fewer partitions than
+    * there are cores writes on fewer cores than one job per route
+    * would. Each route's staged files are then published into its own
+    * path with `java.nio`, in route order:
     *  - append: the files move into the target, under the names a
     *    plain Spark write gives them;
     *  - replace: the target is removed and the staged directory moved
@@ -615,15 +633,20 @@ object Sinks {
     *
     * A failing write makes every route an `error`; a failing publish
     * (the target is a regular file, or on another file store) makes
-    * its own route one. The staging directory is removed in any case.
+    * its own route one. The staging directory is named after the
+    * call's targets (`_routes_<uuid of the sorted target paths>`), so a
+    * call removes it before writing as well as after: a replay
+    * reclaims what a process that died mid-call left there, as Spark's
+    * committer reclaims a dead job's `_temporary`. As with that
+    * committer, two concurrent calls must not share their targets.
     * Appends are at-least-once: a crash after some publishes leaves
     * those routes' rows in place, and a replay appends them again. */
-  private def loadFused(df: DataFrame, routes: Seq[Route]): Seq[LoadResult] = {
-    val targets = routes.map(r =>
-      Paths.get(r.target.get.path).toAbsolutePath.normalize)
+  private def loadFused(df: DataFrame, routes: Seq[Route.Data]): Seq[LoadResult] = {
+    val targets = routes.map(_.target.local)
     val staging = targets.map(_.getParent)
       .reduce((a, b) => Iterator.iterate(a)(_.getParent).find(b.startsWith).get)
-      .resolve(s"_routes_${java.util.UUID.randomUUID()}")
+      .resolve("_routes_" + java.util.UUID.nameUUIDFromBytes(
+        targets.map(_.toString).sorted.mkString("\n").getBytes("UTF-8")))
     val tag = Iterator.iterate("_route")("_" + _)
       .find(t => !df.columns.exists(_.equalsIgnoreCase(t))).get
     val matches = routes.indices.map(i => when(routes(i).predicate, lit(i)))
@@ -634,8 +657,9 @@ object Sinks {
       .observe(obs, counts.head, counts.tail: _*)
     try {
       val written = scala.util.Try {
+        rmTree(staging)
         labelled(df, routes)(
-          tagged.write.partitionBy(tag).parquet(staging.toString))
+          tagged.write.partitionBy(tag).parquet(staging.toUri.toString))
         obs.get
       }
       routes.zip(targets).zipWithIndex.map { case ((r, target), i) =>
@@ -645,7 +669,7 @@ object Sinks {
           case scala.util.Success(m) =>
             val res = attempt(r.name) {
               publish(df.schema, staging.resolve(s"$tag=$i"), target,
-                r.target.get.replace)
+                r.target.replace)
               m(s"n$i").asInstanceOf[Long]
             }
             graft.Failpoints.point("sinks.route.published")
@@ -736,7 +760,7 @@ object Sinks {
   def standardRoutes(base: String, batchId: Option[Long] = None): Seq[Route] =
     (routePatterns.map { case (name, pat) => name -> col("_source").rlike(pat) }
       :+ ("archive" -> lit(true))).map { case (name, pred) =>
-      Route.data(name, pred, batchId.fold(Target(s"$base/$name"))(id =>
+      Route.Data(name, pred, batchId.fold(Target(s"$base/$name"))(id =>
         Target(s"$base/$name/batch=$id", replace = true)))
     }
 }

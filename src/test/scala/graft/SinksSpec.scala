@@ -330,6 +330,54 @@ class SinksSpec extends SparkSpec {
     assert(stagingLeft(dir).isEmpty)
   }
 
+  test("K8 routing: the next call reclaims the staging dir a dead process left") {
+    import graft.etl.Utils.listDir
+    val dir = tmp()
+    val root = java.nio.file.Paths.get(dir)
+    val saved = java.nio.file.Paths.get(tmp())
+    // a process that dies at the first publish never runs its cleanup:
+    // keep a copy of the staging dir as it stood then, and put it back
+    def copyTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit =
+      scala.util.Using.resource(Files.walk(from))(_.iterator().forEachRemaining(
+        p => Files.copy(p, to.resolve(from.relativize(p).toString))))
+    intercept[RuntimeException] {
+      Failpoints.withHook { tag =>
+        if (tag == "sinks.route.published") {
+          stagingLeft(dir).foreach(s => copyTree(root.resolve(s), saved.resolve(s)))
+          throw new RuntimeException("kill at " + tag)
+        }
+      }(Sinks.routeAndLoad(routedInput(), Sinks.standardRoutes(dir)))
+    }
+    val stale = listDir(saved).map(_.getFileName.toString)
+    assert(stale.size == 1 && stale.head.startsWith("_routes_"), stale)
+    Files.move(saved.resolve(stale.head), root.resolve(stale.head))
+    val results = Sinks.routeAndLoad(routedInput(), Sinks.standardRoutes(dir))
+    assert(results.values.forall(_.status == "success"))
+    assert(stagingLeft(dir).isEmpty)
+    Map("financial_data" -> 4L, "processed_events" -> 2L,
+        "user_data_wh" -> 1L, "user_data_doc" -> 1L, "archive" -> 5L)
+      .foreach { case (r, n) =>
+        assert(spark.read.parquet(s"$dir/$r").count() == n, r)
+      }
+  }
+
+  test("K8 routing: data targets are local paths or file: URIs") {
+    val dir = tmp()
+    val results = Sinks.routeAndLoad(routedInput(),
+      Sinks.standardRoutes(s"file:$dir") :+
+        Sinks.Route.Data("only_users", $"_source" === "user_profiles",
+          Sinks.Target(s"file://$dir/only_users", replace = true)))
+    assert(results.view.mapValues(_.count).toMap == Map("financial_data" -> 2L,
+      "processed_events" -> 2L, "user_data_wh" -> 1L, "user_data_doc" -> 1L,
+      "archive" -> 5L, "only_users" -> 1L))
+    assert(spark.read.parquet(s"$dir/archive").count() == 5)
+    assert(spark.read.parquet(s"$dir/only_users").count() == 1)
+    assert(stagingLeft(dir).isEmpty)
+    assert(!Files.exists(java.nio.file.Paths.get("file:")))
+    Seq("hdfs://nn/lake/archive", "s3a://bucket/lake/archive").foreach(p =>
+      intercept[IllegalArgumentException](Sinks.Target(p)))
+  }
+
   test("K10 load statistics registry (base_loaders.py:438-451)") {
     val stats = new Sinks.LoadStats
     stats.record(Sinks.LoadResult("a", "success", 10))
